@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-time store builds shared by [[Bench]] (untimed prebuild, so the
-  * *_stored queries measure the amortized READ path) and [[Verify]]
-  * (serial prebuild BEFORE the parallel query dumps — the ensure*
-  * builders are check-then-write and two concurrent queries racing the
-  * same build would double-write the store directory). Moved verbatim
-  * out of Bench's main in r16; call order and the noop materializations
-  * are unchanged. */
+/** One-time store builds for [[Bench]]: an untimed prebuild, so the
+  * *_stored queries measure the amortized READ path rather than the
+  * first build. Concurrent first builds inside one JVM are already safe
+  * (the store's build-once lock, see [[operators.SignatureStore]]); a
+  * prebuild is still what keeps several drivers sharing one
+  * `spark.graft.sigstore.root` from racing the same build. */
 object StorePrebuild {
 
   def all(spark: SparkSession, sfDir: String): Unit = {

@@ -4078,9 +4078,9 @@ object RelationalQueries {
     "o23_pivot_sql" -> QueryDef.sql(
       """PIVOT orders ON o_orderstatus USING count(*)
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-      orders(s, d).createOrReplaceTempView("graft_piv_orders")
+      orders(s, d).createOrReplaceTempView("graft_piv23_orders")
       s.sql(
-        """PIVOT graft_piv_orders ON o_orderstatus USING count(*)
+        """PIVOT graft_piv23_orders ON o_orderstatus USING count(*)
           |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
     },
 
@@ -4100,9 +4100,9 @@ object RelationalQueries {
         |         GROUP BY o_orderpriority)
         |ON "F", "O", "P" INTO NAME status VALUE n
         |ORDER BY o_orderpriority, status""".stripMargin) { (s, d) =>
-      orders(s, d).createOrReplaceTempView("graft_piv_orders")
+      orders(s, d).createOrReplaceTempView("graft_piv24_orders")
       s.sql(
-        """UNPIVOT (PIVOT graft_piv_orders ON o_orderstatus USING count(*)
+        """UNPIVOT (PIVOT graft_piv24_orders ON o_orderstatus USING count(*)
           |         GROUP BY o_orderpriority)
           |ON "F", "O", "P" INTO NAME status VALUE n
           |ORDER BY o_orderpriority, status""".stripMargin)

@@ -1,16 +1,18 @@
 package graft.operators
 
 import graft.util.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Persisted text-sketch signatures — the 100 TB amortization for the
-  * dedup family.
+/** Persisted derived-artifact stores — the 100 TB amortization for the
+  * dedup, search, sketch, vector and multimodal families.
   *
-  * Live sketch queries re-hash the full corpus on every run (a full text
-  * scan + one md5 per shingle/token). At scale that cost dominates, and
-  * it is pure recomputation: signatures only change when documents
-  * change. This store computes them ONCE and persists:
+  * Live queries re-derive their artifacts from the full corpus on every
+  * run (a full text scan + one md5 per shingle/token, a tokenizer pass,
+  * a centroid dot per vector …). At scale that cost dominates, and it
+  * is pure recomputation: artifacts only change when their inputs
+  * change. This store computes them ONCE and persists them, e.g.:
   *
   *   - `minhash_bands/`: (doc_id, band, key) parquet, partitioned by
   *     `band` — the LSH self-join then reads band-pruned row groups and
@@ -18,24 +20,51 @@ import org.apache.spark.sql.functions._
   *   - `simhash/`: (doc_id, sig) parquet — 60-bit signatures; any banding
   *     scheme can be re-derived from `sig` without touching text.
   *
-  * Builders live in [[TextQueries]] (minhashBandsOf / simhashSigsOf) so
-  * the stored and live paths are the same code — the
-  * `dedup_minhash_lsh_stored` oracle asserts they stay bit-identical.
+  * Builders live with their query families (e.g. [[TextQueries]]
+  * minhashBandsOf / simhashSigsOf) so the stored and live paths are the
+  * same code — the `dedup_minhash_lsh_stored` oracle asserts they stay
+  * bit-identical.
+  *
+  * ==The store-face protocol==
+  * Every family persists one or more FACES under a per-corpus base
+  * ([[defaultBase]]), and every face follows one layout, implemented
+  * once by four helpers:
+  *
+  *   - `<base>/<face>/` is the sealed batch build, sealed by Spark's
+  *     `_SUCCESS` marker. [[sealOnce]] builds it at most once per
+  *     directory per JVM: a memoized marker probe on the fast path, and
+  *     a per-directory lock plus a re-check around the build, so
+  *     concurrent first calls never write one directory twice. The lock
+  *     covers ONE JVM: drivers sharing a `spark.graft.sigstore.root`
+  *     still need one prebuild ([[graft.StorePrebuild]]) before they
+  *     race.
+  *   - `<base>/<face>_stream/` ([[streamDir]]) holds micro-batch
+  *     appends, partitioned by `batch_id` and written by [[appendEpoch]]
+  *     with dynamic partition overwrite, so a replayed epoch rewrites
+  *     exactly its own partitions. It is a SIBLING subtree because the
+  *     batch layout may be partitioned differently (`band` alone for
+  *     the band stores), and mixing partition depths in one directory
+  *     breaks parquet partition discovery.
+  *   - Readers go through [[layers]]: the cached batch relation plus the
+  *     stream side when it holds data. Each reader applies its own merge
+  *     law (distinct, latest-wins, sum, max, bit_or, first-wins, KMV,
+  *     MG); a batch-only face reads as the bare cached parquet scan.
+  *   - Compaction ([[seal]]) writes every resolved table to a
+  *     `_compact_tmp` sibling first, then swaps each into place with
+  *     [[swapDir]] (the old directory parked at `_bak` until the new one
+  *     is in), then drops the consumed stream subtrees. A reader that
+  *     finds a batch directory without data restores a parked `_bak`
+  *     ([[recoverFromBak]]).
   */
 object SignatureStore {
 
   def minhashDir(base: String) = s"$base/minhash_bands"
 
-  /** Streaming appends land in a SIBLING subtree partitioned by
-    * `(batch_id, band)` — they cannot share `minhash_bands/` because its
-    * batch layout is partitioned by `band` alone, and mixing the two
-    * partition depths in one directory breaks parquet partition discovery
-    * ("Conflicting directory structures"). [[readMinhashBands]] unions
-    * both subtrees, so batch LSH dedup transparently sees stream-ingested
-    * signatures. */
-  def streamMinhashDir(base: String) = s"$base/minhash_bands_stream"
-
   def simhashDir(base: String) = s"$base/simhash"
+
+  /** The stream-append subtree beside face `dir` — `<face>_stream` for
+    * every family (see the protocol above). */
+  def streamDir(dir: String): String = s"${dir}_stream"
 
   /** One-permutation-hashing bands — the 20th store family, same
     * (doc_id, band, key) shape and union-distinct resolve as the k8
@@ -43,7 +72,6 @@ object SignatureStore {
     * replayed or re-batched doc re-derives identical rows, so full-row
     * distinct IS the supersession rule). */
   def ophDir(base: String) = s"$base/oph_bands"
-  def streamOphDir(base: String) = s"$base/oph_bands_stream"
 
   /** One full-corpus signature pass → parquet store at `base`. */
   def write(spark: SparkSession, sfDir: String, base: String): Unit = {
@@ -58,11 +86,6 @@ object SignatureStore {
     * streaming-append subtree (whichever exist — a store may be purely
     * batch-built, purely stream-built, or both).
     *
-    * Subtrees are admitted only when they hold at least one DATA file: a
-    * micro-batch where every document was gated/deduplicated away writes
-    * a directory containing only `_SUCCESS`, and reading it would throw
-    * "Unable to infer schema", bricking the whole store.
-    *
     * When stream rows participate, the union is deduplicated on the full
     * row: a doc re-sent in a later micro-batch (or batch-rebuilt after
     * streaming already signed it) would otherwise store its band rows
@@ -70,8 +93,8 @@ object SignatureStore {
     * bucket over the degenerate-bucket cap — silently dropping its
     * candidate pairs. The batch-only path stays a pure parquet read. */
   def readMinhashBands(spark: SparkSession, base: String): DataFrame =
-    tryReadMinhashBands(spark, base, excludeBatch = None)
-      .getOrElse(throw new IllegalArgumentException(s"no minhash band store under $base"))
+    bandLayers(spark, minhashDir(base), col("band").cast("int"), None)
+      .getOrElse(throw missingStore(minhashDir(base)))
 
   /** Bands visible to stream epoch `batchId`: everything EXCEPT that
     * epoch's own stream append. A replayed micro-batch probing the store
@@ -79,9 +102,18 @@ object SignatureStore {
     * append, or every one of its documents would look like a duplicate
     * of itself and the replay would emit nothing. */
   def readMinhashBandsExcluding(spark: SparkSession, base: String, batchId: Long): DataFrame =
-    tryReadMinhashBands(spark, base, excludeBatch = Some(batchId))
+    bandLayers(spark, minhashDir(base), col("band").cast("int"), Some(batchId))
       .getOrElse(spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0).as("band"), lit(0L).as("key")).limit(0))
+
+  /** The union-distinct band resolve shared by the k8 and OPH faces. */
+  private def bandLayers(spark: SparkSession, dir: String, band: Column,
+      excludeBatch: Option[Long]): Option[DataFrame] = {
+    val l = layers(spark, dir, col("doc_id"), band.as("band"), col("key"))
+    l.copy(stream = l.stream.map(s =>
+        excludeBatch.fold(s)(id => s.filter(col("batch_id") =!= id)).drop("batch_id")))
+      .resolve(_.distinct())((b, s) => b.unionByName(s).distinct())
+  }
 
   /** Positive-result memo for SEALED store probes. Every query
     * construction probes the store directories it reads (a marker
@@ -112,11 +144,133 @@ object SignatureStore {
     * immutable between seals, so the resolved relation — file listing,
     * footer schema, LogicalRelation — is pinned per session instead of
     * re-derived by every query construction (the r10 verdict's 41 s
-    * driver floor). Every path that REWRITES a batch dir (compaction
-    * seals, [[swapDir]] maintenance) evicts it; stream subtrees are
-    * never cached — they change with every micro-batch. */
+    * driver floor). Every path that REWRITES a batch dir ([[swapDir]])
+    * evicts it; stream subtrees are never cached — they change with
+    * every micro-batch. */
   private def readSealed(spark: SparkSession, dir: String): DataFrame =
     graft.util.Tables.parquetCached(spark, dir)
+
+  /** One lock object per face directory — see [[sealOnce]]. */
+  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Build face `dir` unless its `_SUCCESS` marker is sealed. The fast
+    * path is the memoized marker probe alone; on a miss the build runs
+    * under a per-directory JVM lock and re-checks the marker first, so
+    * N concurrent first calls build once and the other N-1 read the
+    * sealed result (two unserialized `overwrite` writes into one
+    * directory corrupt it). A `_bak` parked by a crashed swap is
+    * restored before the re-check. `build` must write `dir` last, so
+    * the marker seals the whole face. */
+  private def sealOnce(spark: SparkSession, dir: String)(build: => Unit): Unit = {
+    val marker = s"$dir/_SUCCESS"
+    if (!sealedMarkerExists(spark, marker))
+      buildLocks.computeIfAbsent(dir, _ => new AnyRef).synchronized {
+        recoverFromBak(spark, dir)
+        if (!sealedMarkerExists(spark, marker)) build
+      }
+  }
+
+  /** A face's two sides as [[layers]] finds them: the batch relation and
+    * the stream side, each present only when it holds data. */
+  private final case class Layers(dir: String, batch: Option[DataFrame],
+      stream: Option[DataFrame]) {
+    /** A reader's merge law: batch-only serves the batch relation as is,
+      * stream-only serves `solo(stream)`, both serve `both(batch,
+      * stream)`; None when neither side holds data. */
+    def resolve(solo: DataFrame => DataFrame)(
+        both: (DataFrame, DataFrame) => DataFrame): Option[DataFrame] =
+      (batch, stream) match {
+        case (b, None) => b
+        case (None, Some(s)) => Some(solo(s))
+        case (Some(b), Some(s)) => Some(both(b, s))
+      }
+
+    /** [[resolve]], failing with the missing-store error on no data. */
+    def get(solo: DataFrame => DataFrame)(
+        both: (DataFrame, DataFrame) => DataFrame): DataFrame =
+      resolve(solo)(both).getOrElse(throw missingStore(dir))
+
+    /** Batch ∪ stream (the stream's `batch_id` dropped) — the input the
+      * sketch laws (sum, max, bit_or, KMV, MG) fold. */
+    def union: DataFrame =
+      get(_.drop("batch_id"))((b, s) => b.unionByName(s.drop("batch_id")))
+  }
+
+  /** The single "no store" error: neither side of face `dir` holds data. */
+  private def missingStore(dir: String) = new IllegalArgumentException(
+    s"no ${dir.substring(dir.lastIndexOf('/') + 1)} store under " +
+      dir.substring(0, dir.lastIndexOf('/')))
+
+  /** Both sides of face `dir`, projected to `cols` (no projection when
+    * `cols` is empty): the cached batch relation when it holds data,
+    * and the stream subtree when it holds data, with its `batch_id`
+    * cast to long for the latest-wins readers. A batch dir without data
+    * first restores a parked `_bak` ([[recoverFromBak]]) — only then,
+    * so the memoized batch-only path makes no filesystem call.
+    *
+    * Sides are admitted only when they hold at least one DATA file: a
+    * micro-batch where every row was gated away writes a directory
+    * holding only `_SUCCESS`, and reading it would throw "Unable to
+    * infer schema", bricking the whole store. */
+  private def layers(spark: SparkSession, dir: String, cols: Column*): Layers = {
+    def project(df: DataFrame, extra: Column*) =
+      if (cols.isEmpty) df else df.select(cols ++ extra: _*)
+    val batch = Option.when(hasData(spark, dir) ||
+        (recoverFromBak(spark, dir) && hasData(spark, dir)))(
+      project(readSealed(spark, dir)))
+    val stream = Option.when(hasData(spark, streamDir(dir)))(project(
+      spark.read.parquet(streamDir(dir)).withColumn("batch_id", col("batch_id").cast("long")),
+      col("batch_id")))
+    Layers(dir, batch, stream)
+  }
+
+  /** Append one stream epoch: `df` lands under `dir` keyed by
+    * `batch_id` (then `partitionCols`), with dynamic partition overwrite
+    * — foreachBatch is at-least-once, and a replayed epoch must rewrite
+    * exactly its own partitions instead of duplicating rows. Every
+    * stream subtree and every epoch-keyed sink is written here. */
+  private[graft] def appendEpoch(df: DataFrame, dir: String, batchId: Long,
+      partitionCols: String*): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id" +: partitionCols: _*)
+      .parquet(dir)
+
+  /** Compaction seal: every `(dir, resolved)` table is written to its
+    * `_compact_tmp` sibling FIRST (the resolves read the directories
+    * being replaced, and a multi-table seal must not swap one table
+    * while another's resolve still needs the old state), then each is
+    * swapped in with [[swapDir]] in the given order, and only then are
+    * the `drop` directories (consumed stream subtrees, stale snapshots)
+    * deleted and their probe memo and cached relations dropped.
+    *
+    * A crash before the drops leaves the sealed tables beside the
+    * stream rows they already fold in: a re-resolve is idempotent for
+    * the distinct / latest-wins / max / bit_or / first-wins / KMV
+    * faces, but re-adds the stream for the additive faces (count-min,
+    * quantile bins, MG counters) until the stream subtree is dropped. */
+  private def seal(spark: SparkSession, resolved: Seq[(String, DataFrame)],
+      drop: Seq[String] = Nil): Unit = {
+    val tmps = resolved.map { case (dir, df) =>
+      val tmp = s"${dir}_compact_tmp"
+      df.write.mode("overwrite").parquet(tmp)
+      dir -> tmp
+    }
+    tmps.foreach { case (dir, tmp) => swapDir(spark, dir, tmp) }
+    drop.foreach { dir =>
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.delete(p, true)
+      invalidateProbe(dir)
+    }
+  }
+
+  /** Single-face compaction: fold `dir`'s stream subtree into its batch
+    * build with the reader's own resolve (no-op without stream data). */
+  private def compactInto(spark: SparkSession, dir: String)(resolved: => DataFrame): Unit =
+    if (hasData(spark, streamDir(dir)))
+      seal(spark, Seq(dir -> resolved), drop = Seq(streamDir(dir)))
 
   /** Rename-aside directory swap: `tmp` becomes `dest` with the old
     * `dest` PARKED at `dest_bak` until the new state is in place, then
@@ -125,12 +279,14 @@ object SignatureStore {
     * or the new one — never neither. The plain delete-then-rename it
     * replaces had a window (post-delete, pre-rename) that silently
     * lost the store: readers saw an EMPTY directory, not an error, and
-    * a subsequent seal would have frozen the loss. */
+    * a subsequent seal would have frozen the loss. The probe pin on
+    * `dest` is dropped first, so a swap that fails midway in this JVM
+    * is still recovered by the next reader. */
   private def swapDir(spark: SparkSession, dest: String, tmp: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val d = new Path(dest)
     val bak = new Path(dest + "_bak")
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    probeMemo.remove(dest)
     if (fs.exists(bak)) fs.delete(bak, true)
     if (fs.exists(d))
       require(fs.rename(d, bak), s"swap park $dest -> $bak failed")
@@ -141,15 +297,17 @@ object SignatureStore {
 
   /** Crash recovery for [[swapDir]]: a parked `_bak` beside a MISSING
     * live directory means the crash hit between the park and the
-    * rename-in — restore the park. Readers of swap-maintained stores
-    * call this before their first listing. */
-  private def recoverFromBak(spark: SparkSession, dest: String): Unit = {
-    import org.apache.hadoop.fs.Path
+    * rename-in — restore the park. True when it restored one. */
+  private def recoverFromBak(spark: SparkSession, dest: String): Boolean = {
     val d = new Path(dest)
     val bak = new Path(dest + "_bak")
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d) && fs.exists(bak))
+    val parked = !fs.exists(d) && fs.exists(bak)
+    if (parked) {
       require(fs.rename(bak, d), s"swap recovery $bak -> $dest failed")
+      graft.util.Tables.evict(dest)
+    }
+    parked
   }
 
   /** Does `dir` hold at least one DATA file? (A micro-batch where every
@@ -165,7 +323,6 @@ object SignatureStore {
     * true absent crashes and a pinned `true` would turn a recoverable
     * loss into a hard read failure. */
   private def hasData(spark: SparkSession, dir: String, cacheable: Boolean): Boolean = {
-    import org.apache.hadoop.fs.Path
     if (cacheable && probeMemo.contains(dir)) return true
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -186,31 +343,12 @@ object SignatureStore {
     * checks its `_SUCCESS` marker on every call, but a sealed batch
     * build never un-exists. */
   private def sealedMarkerExists(spark: SparkSession, markerPath: String): Boolean = {
-    import org.apache.hadoop.fs.Path
     if (probeMemo.contains(markerPath)) return true
     val p = new Path(markerPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val e = fs.exists(p)
     if (e) probeMemo.put(markerPath, true)
     e
-  }
-
-  private def tryReadMinhashBands(spark: SparkSession, base: String,
-      excludeBatch: Option[Long]): Option[DataFrame] = {
-    def cols(df: DataFrame) =
-      df.select(col("doc_id"), col("band").cast("int").as("band"), col("key"))
-    val batch = Option.when(hasData(spark, minhashDir(base)))(
-      cols(readSealed(spark, minhashDir(base))))
-    val stream = Option.when(hasData(spark, streamMinhashDir(base))) {
-      val raw = spark.read.parquet(streamMinhashDir(base))
-      cols(excludeBatch.fold(raw)(id => raw.filter(col("batch_id") =!= id)))
-    }
-    (batch, stream) match {
-      case (None, None) => None
-      case (b, None) => b
-      case (None, s) => s.map(_.distinct())
-      case (Some(b), Some(s)) => Some(b.unionByName(s).distinct())
-    }
   }
 
   def readSimhash(spark: SparkSession, base: String): DataFrame =
@@ -233,7 +371,6 @@ object SignatureStore {
     * paths (a `java.io.File` listing silently degenerates to a path-only
     * key on any non-local scheme). */
   def defaultBase(spark: SparkSession, sfDir: String): String = {
-    import org.apache.hadoop.fs.Path
     val docs = new Path(s"$sfDir/documents.parquet")
     val fs = docs.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listing =
@@ -251,53 +388,35 @@ object SignatureStore {
   }
 
   /** Minhash band table for `sfDir`, building the store on first use
-    * (idempotent; subsequent calls are pure parquet reads). */
+    * (idempotent; subsequent calls are pure parquet reads). The build
+    * writes this face alone — the simhash face seals its own directory
+    * under its own lock, so the two first builds never overlap. */
   def ensureMinhashBands(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${minhashDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) write(spark, sfDir, base)
+    sealOnce(spark, minhashDir(base))(TextQueries.minhashBandsOf(documents(spark, sfDir))
+      .write.mode("overwrite").partitionBy("band").parquet(minhashDir(base)))
     readMinhashBands(spark, base)
   }
 
   /** All stored OPH bands: batch subtree ∪ stream appends, full-row
     * distinct when both exist — the [[readMinhashBands]] resolve on the
     * OPH layout. */
-  def readOphBands(spark: SparkSession, base: String): DataFrame = {
-    def cols(df: DataFrame) =
-      df.select(col("doc_id"), col("band").cast("long").as("band"), col("key"))
-    val batch = Option.when(hasData(spark, ophDir(base)))(
-      cols(readSealed(spark, ophDir(base))))
-    val stream = Option.when(hasData(spark, streamOphDir(base)))(
-      cols(spark.read.parquet(streamOphDir(base))))
-    (batch, stream) match {
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no OPH band store under $base")
-      case (Some(b), None) => b
-      case (None, Some(s)) => s.distinct()
-      case (Some(b), Some(s)) => b.unionByName(s).distinct()
-    }
-  }
+  def readOphBands(spark: SparkSession, base: String): DataFrame =
+    bandLayers(spark, ophDir(base), col("band").cast("long"), None)
+      .getOrElse(throw missingStore(ophDir(base)))
 
   /** OPH band table for `sfDir`, building the store on first use. */
   def ensureOphBands(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${ophDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      TextQueries.ophBandsOf(documents(spark, sfDir))
-        .write.mode("overwrite").partitionBy("band").parquet(ophDir(base))
+    sealOnce(spark, ophDir(base))(TextQueries.ophBandsOf(documents(spark, sfDir))
+      .write.mode("overwrite").partitionBy("band").parquet(ophDir(base)))
     readOphBands(spark, base)
   }
 
   /** Compact the OPH band store (union-distinct resolve, the
     * [[compactMinhashBands]] seal on the OPH layout). */
   def compactOphBands(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamOphDir(base)))
-      compactInto(spark, ophDir(base), streamOphDir(base),
-        readOphBands(spark, base))
+    compactInto(spark, ophDir(base))(readOphBands(spark, base))
 
   // ------------------------------------------------------------------
   // Trained-tokenizer artifact stores. Unlike the signature families
@@ -318,22 +437,18 @@ object SignatureStore {
     * sealing it on first use; later calls (and later SESSIONS) are pure
     * parquet reads — encode never re-pays training. */
   def ensureBpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = defaultBase(spark, sfDir)
-    val dir = bpeMergesDir(base)
-    if (!sealedMarkerExists(spark, s"$dir/_SUCCESS"))
-      BpeQueries.trainedMergesDf(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
+    val dir = bpeMergesDir(defaultBase(spark, sfDir))
+    sealOnce(spark, dir)(BpeQueries.trainedMergesDf(spark, sfDir)
+      .coalesce(1).write.mode("overwrite").parquet(dir))
     readSealed(spark, dir)
   }
 
   /** The trained unigram-LM model table for `sfDir` (piece, count,
     * score) — [[ensureBpeMerges]]'s twin for the other subword scheme. */
   def ensureUnigramModel(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = defaultBase(spark, sfDir)
-    val dir = unigramModelDir(base)
-    if (!sealedMarkerExists(spark, s"$dir/_SUCCESS"))
-      UnigramQueries.trainedModelDf(spark, sfDir)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
+    val dir = unigramModelDir(defaultBase(spark, sfDir))
+    sealOnce(spark, dir)(UnigramQueries.trainedModelDf(spark, sfDir)
+      .coalesce(1).write.mode("overwrite").parquet(dir))
     readSealed(spark, dir)
   }
 
@@ -357,35 +472,20 @@ object SignatureStore {
   // ------------------------------------------------------------------
 
   def pairsDir(base: String, family: String) = s"$base/pairs_$family"
-  def streamPairsDir(base: String, family: String) = s"$base/pairs_${family}_stream"
 
   /** All stored candidate pairs of `family`: batch subtree ∪ stream
     * deltas, full-row distinct when both exist (a pair re-derived by a
     * later delta is the same row — distinct IS the supersession rule). */
-  def readPairs(spark: SparkSession, base: String, family: String): DataFrame = {
-    def cols(df: DataFrame) = df.select(col("doc_a"), col("doc_b"))
-    val batch = Option.when(hasData(spark, pairsDir(base, family)))(
-      cols(readSealed(spark, pairsDir(base, family))))
-    val stream = Option.when(hasData(spark, streamPairsDir(base, family)))(
-      cols(spark.read.parquet(streamPairsDir(base, family))))
-    (batch, stream) match {
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no $family pair store under $base")
-      case (Some(b), None) => b
-      case (None, Some(s)) => s.distinct()
-      case (Some(b), Some(s)) => b.unionByName(s).distinct()
-    }
-  }
+  def readPairs(spark: SparkSession, base: String, family: String): DataFrame =
+    layers(spark, pairsDir(base, family), col("doc_a"), col("doc_b"))
+      .get(_.drop("batch_id").distinct())(
+        (b, s) => b.unionByName(s.drop("batch_id")).distinct())
 
   private def ensurePairs(spark: SparkSession, sfDir: String, family: String,
       bands: => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${pairsDir(base, family)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      TextQueries.bandedPairs(bands)
-        .write.mode("overwrite").parquet(pairsDir(base, family))
+    sealOnce(spark, pairsDir(base, family))(TextQueries.bandedPairs(bands)
+      .write.mode("overwrite").parquet(pairsDir(base, family)))
     readPairs(spark, base, family)
   }
 
@@ -416,12 +516,7 @@ object SignatureStore {
     * persisted, once merged into labels — enumerate once, write once). */
   def appendPairRows(spark: SparkSession, base: String, family: String,
       pairRows: DataFrame, batchId: Long): Unit =
-    pairRows.select("doc_a", "doc_b")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(streamPairsDir(base, family))
+    appendEpoch(pairRows.select("doc_a", "doc_b"), streamDir(pairsDir(base, family)), batchId)
 
   /** Compaction seal for a pair family: recompute the FULL banded
     * self-join from the current band store (not a union-distinct of
@@ -430,43 +525,54 @@ object SignatureStore {
     * subtree is consumed. Post-condition: [[readPairs]] equals a fresh
     * [[TextQueries.bandedPairs]] over the band store, bit for bit. */
   def compactPairs(spark: SparkSession, base: String, family: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val bands = family match {
       case "k8" => readMinhashBands(spark, base)
       case "oph" => readOphBands(spark, base)
       case other => throw new IllegalArgumentException(s"unknown pair family $other")
     }
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hasData(spark, streamPairsDir(base, family)) ||
-        !fs.exists(new Path(s"${pairsDir(base, family)}/_SUCCESS"))) {
-      val tmp = s"${pairsDir(base, family)}_compact_tmp"
-      TextQueries.bandedPairs(bands).write.mode("overwrite").parquet(tmp)
-      fs.delete(new Path(pairsDir(base, family)), true)
-      fs.delete(new Path(streamPairsDir(base, family)), true)
-      require(fs.rename(new Path(tmp), new Path(pairsDir(base, family))),
-        s"compaction rename $tmp -> ${pairsDir(base, family)} failed")
-      graft.util.Tables.evict(pairsDir(base, family))
-    }
+    val dir = pairsDir(base, family)
+    if (hasData(spark, streamDir(dir)) || !sealedMarkerExists(spark, s"$dir/_SUCCESS"))
+      seal(spark, Seq(dir -> TextQueries.bandedPairs(bands)), drop = Seq(streamDir(dir)))
   }
 
   /** Simhash signature table for `sfDir`, building the store on first
-    * use (one [[write]] persists both sketch families). */
+    * use (the simhash half of [[write]]). */
   def ensureSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${simhashDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) write(spark, sfDir, base)
+    sealOnce(spark, simhashDir(base))(TextQueries.simhashSigsOf(documents(spark, sfDir))
+      .write.mode("overwrite").parquet(simhashDir(base)))
     readSimhash(spark, base)
   }
 
-  def ivfDir(base: String) = s"$base/ivf_assign"
+  /** Latest-wins per vec_id for the vector faces: the newest stream
+    * version of each vector supersedes older stream rows and its batch
+    * row (a batch build writes each vector exactly once, so the
+    * batch-only path stays a bare parquet read). `newest` picks each
+    * vector's newest value columns from the stream side. */
+  private def vecLatestWins(l: Layers, newest: DataFrame => DataFrame): Option[DataFrame] =
+    l.resolve(newest)((b, s) => {
+      val sv = newest(s)
+      b.join(sv.select("vec_id"), Seq("vec_id"), "left_anti").unionByName(sv)
+    })
 
-  /** Streaming IVF-assignment appends land in a batch_id-partitioned
-    * SIBLING subtree (same contract as [[streamMinhashDir]] /
-    * [[streamBm25Dir]]); [[readIvfAssignments]] unions both, so probes
-    * transparently see stream-ingested vectors. */
-  def streamIvfDir(base: String) = s"$base/ivf_assign_stream"
+  /** Latest-wins per doc_id for the doc-keyed faces (phrase bigrams,
+    * image fingerprints, frame diffs): the stream rows of each doc's
+    * newest epoch (the whole per-doc row SET), then stream docs
+    * supersede their batch rows via anti-join. */
+  private def docLatestWins(l: Layers): Option[DataFrame] =
+    l.resolve(newestEpochPerDoc)((b, s) => {
+      val sv = newestEpochPerDoc(s)
+      b.join(sv.select("doc_id").distinct(), Seq("doc_id"), "left_anti").unionByName(sv)
+    })
+
+  /** The rows of each doc's newest `batch_id`, distinct, `batch_id`
+    * dropped. */
+  private def newestEpochPerDoc(s: DataFrame): DataFrame = {
+    val latest = s.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
+    s.join(latest, Seq("doc_id", "batch_id")).drop("batch_id").distinct()
+  }
+
+  def ivfDir(base: String) = s"$base/ivf_assign"
 
   /** Stored IVF assignments at `base`: batch and/or stream subtrees with
     * LATEST-WINS versioning per vec_id — a vector re-sent in a later
@@ -478,25 +584,12 @@ object SignatureStore {
     * subtree plus an anti-join pruning re-assigned vectors from the
     * batch side; the pure-batch path stays a bare parquet read (a batch
     * build assigns each vector exactly once). */
-  def readIvfAssignments(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, ivfDir(base)))(
-      readSealed(spark, ivfDir(base)).select("vec_id", "cent_id"))
-    val stream = Option.when(hasData(spark, streamIvfDir(base))) {
-      spark.read.parquet(streamIvfDir(base))
-        .select(col("vec_id"), col("cent_id"), col("batch_id").cast("long").as("batch_id"))
-        .groupBy("vec_id")
+  def readIvfAssignments(spark: SparkSession, base: String): DataFrame =
+    vecLatestWins(layers(spark, ivfDir(base), col("vec_id"), col("cent_id")),
+      _.groupBy("vec_id")
         .agg(max(struct(col("batch_id"), col("cent_id"))).as("m"))
-        .select(col("vec_id"), col("m.cent_id").as("cent_id"))
-    }
-    (batch, stream) match {
-      case (Some(b), Some(s)) =>
-        b.join(s.select("vec_id"), Seq("vec_id"), "left_anti").unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no IVF assignment store under $base")
-    }
-  }
+        .select(col("vec_id"), col("m.cent_id").as("cent_id")))
+      .getOrElse(throw missingStore(ivfDir(base)))
 
   /** Persisted IVF assignment table (vec_id, cent_id) for `sfDir` — the
     * vector-side amortization: nearest-centroid assignment is the IVF
@@ -506,43 +599,20 @@ object SignatureStore {
     * times live. */
   def ensureIvfAssignments(spark: SparkSession, sfDir: String,
       build: () => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${ivfDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      build().write.mode("overwrite").parquet(ivfDir(base))
+    sealOnce(spark, ivfDir(base))(build().write.mode("overwrite").parquet(ivfDir(base)))
     readIvfAssignments(spark, base)
   }
 
   def q8Dir(base: String) = s"$base/q8_vectors"
 
-  /** Streaming quantized-vector appends land in a batch_id-partitioned
-    * SIBLING subtree (same contract as [[streamIvfDir]]);
-    * [[readQuantizedVectors]] unions both. */
-  def streamQ8Dir(base: String) = s"$base/q8_vectors_stream"
-
   /** Stored int8 codes at `base`: batch and/or stream subtrees with
     * LATEST-WINS versioning per vec_id (same contract as
     * [[readIvfAssignments]] — a re-sent vector keeps one code row). */
-  def readQuantizedVectors(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, q8Dir(base)))(
-      readSealed(spark, q8Dir(base)).select("vec_id", "q"))
-    val stream = Option.when(hasData(spark, streamQ8Dir(base))) {
-      spark.read.parquet(streamQ8Dir(base))
-        .select(col("vec_id"), col("q"), col("batch_id").cast("long").as("batch_id"))
-        .groupBy("vec_id")
-        .agg(max_by(col("q"), col("batch_id")).as("q"))
-    }
-    (batch, stream) match {
-      case (Some(b), Some(s)) =>
-        b.join(s.select("vec_id"), Seq("vec_id"), "left_anti").unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no quantized-vector store under $base")
-    }
-  }
+  def readQuantizedVectors(spark: SparkSession, base: String): DataFrame =
+    vecLatestWins(layers(spark, q8Dir(base), col("vec_id"), col("q")),
+      _.groupBy("vec_id").agg(max_by(col("q"), col("batch_id")).as("q")))
+      .getOrElse(throw missingStore(q8Dir(base)))
 
   /** Persisted int8-quantized vector table (vec_id, q array<tinyint>)
     * for `sfDir` — the rescore-read amortization: at 100 TB the cost of
@@ -553,12 +623,8 @@ object SignatureStore {
     * touches full floats only for its per-query shortlist. */
   def ensureQuantizedVectors(spark: SparkSession, sfDir: String,
       build: () => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${q8Dir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      build().write.mode("overwrite").parquet(q8Dir(base))
+    sealOnce(spark, q8Dir(base))(build().write.mode("overwrite").parquet(q8Dir(base)))
     readQuantizedVectors(spark, base)
   }
 
@@ -573,22 +639,14 @@ object SignatureStore {
     * the live query uses, so the two paths cannot diverge. */
   def ensureLshBuckets(spark: SparkSession, sfDir: String,
       build: () => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${lshBucketsDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      build().write.mode("overwrite").partitionBy("band").parquet(lshBucketsDir(base))
-    readSealed(spark, lshBucketsDir(base))
+    val dir = lshBucketsDir(defaultBase(spark, sfDir))
+    sealOnce(spark, dir)(build().write.mode("overwrite").partitionBy("band").parquet(dir))
+    readSealed(spark, dir)
       .select(col("vec_id"), col("band").cast("int").as("band"), col("key"))
   }
 
   def pqCodebookDir(base: String) = s"$base/pq_codebook"
   def pqCodesDir(base: String) = s"$base/pq_codes"
-
-  /** Streaming PQ-code appends land in a batch_id-partitioned sibling
-    * subtree (same contract as [[streamQ8Dir]]). */
-  def streamPqDir(base: String) = s"$base/pq_codes_stream"
 
   /** The trained PQ codebook (m, code, sp, ci) — fixed M·K·SubDim rows,
     * broadcast by every consumer. */
@@ -597,39 +655,22 @@ object SignatureStore {
 
   /** Shared packed-code resolve (latest-wins per vec_id within the
     * stream, stream supersedes batch) — used by both the flat PQ and
-    * residual PQ stores. */
-  private def packedCodesResolve(spark: SparkSession, codesDir: String,
-      streamDir: String): Option[DataFrame] = {
-    val batch = Option.when(hasData(spark, codesDir))(
-      readSealed(spark, codesDir).select("vec_id", "codes"))
-    val stream = Option.when(hasData(spark, streamDir)) {
-      spark.read.parquet(streamDir)
-        .select(col("vec_id"), col("codes"), col("batch_id").cast("long").as("batch_id"))
-        .groupBy("vec_id")
-        .agg(max_by(col("codes"), col("batch_id")).as("codes"))
-    }
-    (batch, stream) match {
-      case (Some(b), Some(s)) =>
-        Some(b.join(s.select("vec_id"), Seq("vec_id"), "left_anti").unionByName(s))
-      case (b, s) => b.orElse(s)
-    }
-  }
+    * residual PQ stores, and by their seals (which keep the PACKED
+    * form the batch subtree stores). */
+  private def packedCodes(spark: SparkSession, codesDir: String): DataFrame =
+    vecLatestWins(layers(spark, codesDir, col("vec_id"), col("codes")),
+      _.groupBy("vec_id").agg(max_by(col("codes"), col("batch_id")).as("codes")))
+      .getOrElse(throw missingStore(codesDir))
 
   /** Stored PQ codes at `base`, UNPACKED to (vec_id, m, code) long form
     * for the ADC join. Batch and/or stream subtrees with latest-wins
     * versioning per vec_id (same contract as [[readQuantizedVectors]] —
     * a re-sent vector keeps one packed code row). */
   def readPqCodes(spark: SparkSession, base: String): DataFrame =
-    PqQueries.unpackCodes(
-      packedCodesResolve(spark, pqCodesDir(base), streamPqDir(base))
-        .getOrElse(throw new IllegalArgumentException(s"no PQ code store under $base")))
+    PqQueries.unpackCodes(packedCodes(spark, pqCodesDir(base)))
 
   def rpqCodebookDir(base: String) = s"$base/rpq_codebook"
   def rpqCodesDir(base: String) = s"$base/rpq_codes"
-
-  /** Streaming residual-code appends, batch_id-partitioned (layout
-    * rationale of [[streamMinhashDir]]). */
-  def streamRpqDir(base: String) = s"$base/rpq_codes_stream"
 
   def readResidualPqCodebook(spark: SparkSession, base: String): DataFrame =
     readSealed(spark, rpqCodebookDir(base)).select("m", "code", "sp", "ci")
@@ -639,9 +680,7 @@ object SignatureStore {
     * meaningful joined with the assignment store's cell ids and the
     * centroid table they were re-centered against. */
   def readResidualPqCodes(spark: SparkSession, base: String): DataFrame =
-    PqQueries.unpackCodes(
-      packedCodesResolve(spark, rpqCodesDir(base), streamRpqDir(base))
-        .getOrElse(throw new IllegalArgumentException(s"no residual PQ store under $base")))
+    PqQueries.unpackCodes(packedCodes(spark, rpqCodesDir(base)))
 
   /** Persisted residual-PQ artifacts — [[ensurePqStore]]'s twin for the
     * true-IVFADC tier: the residual-trained codebook plus packed
@@ -651,11 +690,8 @@ object SignatureStore {
   def ensureResidualPqStore(spark: SparkSession, sfDir: String,
       buildCodebook: () => DataFrame,
       encode: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${rpqCodesDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) {
+    sealOnce(spark, rpqCodesDir(base)) {
       buildCodebook().write.mode("overwrite").parquet(rpqCodebookDir(base))
       encode(readResidualPqCodebook(spark, base))
         .write.mode("overwrite").parquet(rpqCodesDir(base))
@@ -665,9 +701,7 @@ object SignatureStore {
 
   /** Compact the residual-PQ code store (latest-wins packed resolve). */
   def compactResidualPqCodes(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamRpqDir(base)))
-      compactInto(spark, rpqCodesDir(base), streamRpqDir(base),
-        packedCodesResolve(spark, rpqCodesDir(base), streamRpqDir(base)).get)
+    compactInto(spark, rpqCodesDir(base))(packedCodes(spark, rpqCodesDir(base)))
 
   /** Persisted PQ artifacts for `sfDir`: the trained codebook plus the
     * packed 8-byte-per-vector code table. Training (the Lloyd driver
@@ -678,11 +712,8 @@ object SignatureStore {
   def ensurePqStore(spark: SparkSession, sfDir: String,
       buildCodebook: () => DataFrame,
       encode: DataFrame => DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${pqCodesDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) {
+    sealOnce(spark, pqCodesDir(base)) {
       buildCodebook().write.mode("overwrite").parquet(pqCodebookDir(base))
       encode(readPqCodebook(spark, base))
         .write.mode("overwrite").parquet(pqCodesDir(base))
@@ -692,10 +723,6 @@ object SignatureStore {
 
   def spansDir(base: String) = s"$base/substring_spans"
   def spanGramsDir(base: String) = s"$base/span_grams"
-
-  /** Streaming gram appends land in a batch_id-partitioned sibling
-    * subtree (same layout rationale as [[streamMinhashDir]]). */
-  def streamSpanGramsDir(base: String) = s"$base/span_grams_stream"
 
   /** Spans from the store at `base`. Batch-only stores read the
     * precomputed span artifact directly (tiny — spans only). When
@@ -709,22 +736,17 @@ object SignatureStore {
     * keyed on fingerprints/doc_id throughout. Re-sent docs resolve
     * LATEST-WINS (newest batch's grams replace older versions — same
     * contract as the bm25/q8 stores). */
-  def readSpans(spark: SparkSession, base: String): DataFrame = {
-    val hasStream = hasData(spark, streamSpanGramsDir(base))
-    if (!hasStream) readSealed(spark, spansDir(base))
-    else {
-      val batch = Option.when(hasData(spark, spanGramsDir(base)))(
-        readSealed(spark, spanGramsDir(base))
-          .select(col("doc_id"), col("pos"), col("gram"),
-            lit(-1L).as("batch_id")))
-      val stream = spark.read.parquet(streamSpanGramsDir(base))
-        .select(col("doc_id"), col("pos"), col("gram"),
-          col("batch_id").cast("long").as("batch_id"))
-      val all = batch.fold(stream)(_.unionByName(stream))
-      val latest = all.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
-      TextQueries.spansFromGrams(
-        all.join(latest, Seq("doc_id", "batch_id")).select("doc_id", "pos", "gram"))
-    }
+  def readSpans(spark: SparkSession, base: String): DataFrame =
+    if (!hasData(spark, streamDir(spanGramsDir(base)))) readSealed(spark, spansDir(base))
+    else TextQueries.spansFromGrams(latestGrams(spark, base))
+
+  /** The latest-wins positioned-gram table (doc_id, pos, gram) over the
+    * gram face's batch (as epoch -1) and stream sides. */
+  private def latestGrams(spark: SparkSession, base: String): DataFrame = {
+    val all = layers(spark, spanGramsDir(base), col("doc_id"), col("pos"), col("gram"))
+      .get(identity)((b, s) => b.withColumn("batch_id", lit(-1L)).unionByName(s))
+    val latest = all.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
+    all.join(latest, Seq("doc_id", "batch_id")).select("doc_id", "pos", "gram")
   }
 
   /** Persisted duplicated-substring spans (doc_id, span_start, span_end,
@@ -739,11 +761,8 @@ object SignatureStore {
     * `_stored` excision query is held to the same oracle as the live
     * one. */
   def ensureSpans(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${spansDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) {
+    sealOnce(spark, spansDir(base)) {
       val g = TextQueries.positionedGrams8(documents(spark, sfDir)).localCheckpoint()
       g.write.mode("overwrite").parquet(spanGramsDir(base))
       TextQueries.spansFromGrams(g)
@@ -754,42 +773,21 @@ object SignatureStore {
 
   /** Compact the span-gram store — the second two-table seal (see
     * [[compactBm25]]): the latest-wins positioned-gram table AND the
-    * spans re-derived from it must both materialize into tmp dirs
-    * BEFORE any directory is swapped. Swap order grams→spans→stream:
+    * spans re-derived from it both materialize into tmp dirs BEFORE any
+    * directory is swapped (the resolved grams are persisted so the span
+    * pass does not resolve them twice). Swap order grams→spans→stream:
     * while the stream subtree exists, [[readSpans]] re-derives from
     * (grams ∪ stream) with latest-wins, and re-resolving already-sealed
     * stream rows is value-idempotent — so every crash window serves the
     * same spans; after the stream delete, reads hit the sealed spans
     * directly. */
   def compactSpans(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamSpanGramsDir(base))) {
-      import org.apache.hadoop.fs.Path
-      val batch = Option.when(hasData(spark, spanGramsDir(base)))(
-        readSealed(spark, spanGramsDir(base))
-          .select(col("doc_id"), col("pos"), col("gram"), lit(-1L).as("batch_id")))
-      val stream = spark.read.parquet(streamSpanGramsDir(base))
-        .select(col("doc_id"), col("pos"), col("gram"),
-          col("batch_id").cast("long").as("batch_id"))
-      val all = batch.fold(stream)(_.unionByName(stream))
-      val latest = all.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
-      val resolved = all.join(latest, Seq("doc_id", "batch_id"))
-        .select("doc_id", "pos", "gram")
-      val tmpG = s"${spanGramsDir(base)}_compact_tmp"
-      val tmpS = s"${spansDir(base)}_compact_tmp"
-      resolved.write.mode("overwrite").parquet(tmpG)
-      TextQueries.spansFromGrams(spark.read.parquet(tmpG))
-        .write.mode("overwrite").parquet(tmpS)
-      val fs = new Path(spanGramsDir(base))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(spanGramsDir(base)), true)
-      require(fs.rename(new Path(tmpG), new Path(spanGramsDir(base))),
-        s"compaction rename $tmpG failed")
-      fs.delete(new Path(spansDir(base)), true)
-      require(fs.rename(new Path(tmpS), new Path(spansDir(base))),
-        s"compaction rename $tmpS failed")
-      fs.delete(new Path(streamSpanGramsDir(base)), true)
-      graft.util.Tables.evict(spanGramsDir(base))
-      graft.util.Tables.evict(spansDir(base))
+    if (hasData(spark, streamDir(spanGramsDir(base)))) {
+      val grams = latestGrams(spark, base).persist()
+      try seal(spark, Seq(spanGramsDir(base) -> grams,
+          spansDir(base) -> TextQueries.spansFromGrams(grams)),
+        drop = Seq(streamDir(spanGramsDir(base))))
+      finally grams.unpersist()
     }
 
   def eventTransitionsDir(base: String) = s"$base/event_transitions"
@@ -806,31 +804,23 @@ object SignatureStore {
     * taxonomy-sized analytics from the artifact, never re-shuffle the
     * corpus. */
   def ensureEventTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${eventTransitionsDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      RelationalQueries.eventTriples(spark, sfDir)
-        .groupBy("e1", "e2", "e3").agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(eventTransitionsDir(base))
+    sealOnce(spark, eventTransitionsDir(base))(RelationalQueries.eventTriples(spark, sfDir)
+      .groupBy("e1", "e2", "e3").agg(count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(eventTransitionsDir(base)))
     readEventTransitions(spark, base)
   }
 
-  /** Streaming transition emissions land batch_id-partitioned in a
-    * sibling subtree (same layout rationale as [[streamMinhashDir]]),
-    * written by [[graft.streaming.EventStream]] `maintainTransitions`. */
-  def streamEventTransitionsDir(base: String) = s"$base/event_transitions_stream"
-
   /** Counted triples (e1, e2, e3, n) unioned across the batch build and
     * the streaming store, so o6/o7 stored reads transparently see
-    * stream-ingested users. The stream side resolves LATEST-wins per
-    * user first (`readTransitionCounts` — a corrected history replaces
-    * every older emission), then the two sides SUM: a user's stream
-    * lives in exactly one subtree (the same source-disjointness contract
-    * as doc_id in the bm25/minhash stores), so addition is exact. Both
-    * inputs are taxonomy-bounded (event-type³), so the union aggregate
-    * shuffles nothing corpus-sized.
+    * stream-ingested users. The stream side (written by
+    * [[graft.streaming.EventStream]] `maintainTransitions`) resolves
+    * LATEST-wins per user first (`transitionCounts` — a corrected
+    * history replaces every older emission), then the two sides SUM: a
+    * user's stream lives in exactly one subtree (the same
+    * source-disjointness contract as doc_id in the bm25/minhash stores),
+    * so addition is exact. Both inputs are taxonomy-bounded
+    * (event-type³), so the union aggregate shuffles nothing corpus-sized.
     *
     * DELIBERATELY NOT COMPACTED (the one store family without a
     * `compact*`): the batch shape (e1, e2, e3, n) has dropped the USER
@@ -841,27 +831,15 @@ object SignatureStore {
     * user-keyed for supersession to work; its listing cost is
     * taxonomy-bounded anyway. */
   def readEventTransitions(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, eventTransitionsDir(base)))(
-      readSealed(spark, eventTransitionsDir(base)).select("e1", "e2", "e3", "n"))
-    val stream = Option.when(hasData(spark, streamEventTransitionsDir(base)))(
-      graft.streaming.EventStream
-        .readTransitionCounts(spark, streamEventTransitionsDir(base))
-        .select("e1", "e2", "e3", "n"))
-    (batch, stream) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-        .groupBy("e1", "e2", "e3").agg(sum("n").as("n"))
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no event-transition store under $base")
-    }
+    val l = layers(spark, eventTransitionsDir(base))
+    def triples(df: DataFrame) = df.select("e1", "e2", "e3", "n")
+    l.copy(batch = l.batch.map(triples),
+        stream = l.stream.map(s => triples(graft.streaming.EventStream.transitionCounts(s))))
+      .get(identity)((b, s) =>
+        b.unionByName(s).groupBy("e1", "e2", "e3").agg(sum("n").as("n")))
   }
 
   def phraseBigramsDir(base: String) = s"$base/phrase_bigrams"
-
-  /** Streaming bigram appends land batch_id-partitioned in a sibling
-    * subtree (same layout rationale as [[streamMinhashDir]]). */
-  def streamPhraseBigramsDir(base: String) = s"$base/phrase_bigrams_stream"
 
   /** Per-document DISTINCT adjacent-bigram registry (doc_id, bigram) —
     * the fused-key positional index behind `phrase_search_stored`:
@@ -874,26 +852,9 @@ object SignatureStore {
     * anti-join. The artifact is positional-index-sized (≈ one row per
     * distinct adjacent pair per doc — the honest cost of phrase search
     * everywhere), but it is written once and probed by broadcast joins. */
-  def readPhraseBigrams(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, phraseBigramsDir(base)))(
-      readSealed(spark, phraseBigramsDir(base)).select("doc_id", "bigram"))
-    val stream = Option.when(hasData(spark, streamPhraseBigramsDir(base))) {
-      val raw = spark.read.parquet(streamPhraseBigramsDir(base))
-        .select(col("doc_id"), col("bigram"), col("batch_id").cast("long").as("batch_id"))
-      val latest = raw.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
-      raw.join(latest, Seq("doc_id", "batch_id"))
-        .select("doc_id", "bigram").distinct()
-    }
-    (batch, stream) match {
-      case (Some(b), Some(s)) =>
-        val streamDocs = s.select("doc_id").distinct()
-        b.join(streamDocs, Seq("doc_id"), "left_anti").unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no phrase-bigram store under $base")
-    }
-  }
+  def readPhraseBigrams(spark: SparkSession, base: String): DataFrame =
+    docLatestWins(layers(spark, phraseBigramsDir(base), col("doc_id"), col("bigram")))
+      .getOrElse(throw missingStore(phraseBigramsDir(base)))
 
   /** Bigram registry for `sfDir`, building on first use over ALL
     * documents (consumers filter to their corpus slice). The positional
@@ -901,76 +862,50 @@ object SignatureStore {
     * the live pass, `phrase_search_stored` probes this artifact, held to
     * the same oracle. */
   def ensurePhraseBigrams(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${phraseBigramsDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      SearchQueries.bigramsOf(documents(spark, sfDir))
-        .write.mode("overwrite").parquet(phraseBigramsDir(base))
+    sealOnce(spark, phraseBigramsDir(base))(SearchQueries.bigramsOf(documents(spark, sfDir))
+      .write.mode("overwrite").parquet(phraseBigramsDir(base)))
     readPhraseBigrams(spark, base)
   }
 
-  /** Store compaction: fold the stream-append subtree into the batch
-    * subtree. Long-running ingestion accumulates one batch_id partition
-    * per micro-batch; every read then pays the partition listing and the
-    * latest-wins resolve. Compaction runs the SAME resolve the reader
-    * uses, seals the result as the new batch build, and drops the stream
-    * subtree — post-compaction reads are a single partition-free parquet
-    * scan, and the resolve cost is paid once instead of per query.
-    *
-    * Safe for DOC-KEYED stores (phrase bigrams, bm25, minhash, lines):
-    * their readers supersede batch rows whenever a NEWER stream version
-    * of the same key appears, so sealing today's resolved state does not
-    * change tomorrow's supersession semantics. NOT offered for the
-    * event-transition store — its stream side resolves latest-wins on a
-    * USER dimension the aggregated batch shape no longer carries, so
-    * compacting would silently freeze per-user history.
-    *
-    * Compaction is a BARRIER operation: run it between ingestion
-    * sessions, after the streaming query's checkpoint has committed its
-    * offsets. The sealed batch no longer carries batch_id, so the
-    * replay-exclusion contract ([[readMinhashBandsExcluding]]) cannot
-    * subtract a PRE-compaction epoch from a post-compaction store —
-    * exactly the "sealed segments don't replay" rule every
-    * log-compacted store (Kafka, LSM trees) lives by.
-    *
-    * Write protocol: resolved state lands in a `_compact_tmp` sibling
-    * first (the resolve READS the dirs being replaced — overwriting in
-    * place would consume its own output), then batch+stream are swapped
-    * out and the tmp renamed in. */
-  private def compactInto(spark: SparkSession, batchDir: String,
-      streamDir: String, resolved: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = s"${batchDir}_compact_tmp"
-    resolved.write.mode("overwrite").parquet(tmp)
-    val fs = new Path(batchDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(batchDir), true)
-    fs.delete(new Path(streamDir), true)
-    require(fs.rename(new Path(tmp), new Path(batchDir)),
-      s"compaction rename $tmp -> $batchDir failed")
-    graft.util.Tables.evict(batchDir) // a cached relation lists the OLD files
-  }
+  // ------------------------------------------------------------------
+  // Store compaction: fold the stream-append subtree into the batch
+  // subtree. Long-running ingestion accumulates one batch_id partition
+  // per micro-batch; every read then pays the partition listing and the
+  // resolve. Compaction runs the SAME resolve the reader uses, seals
+  // the result as the new batch build ([[seal]]), and drops the stream
+  // subtree — post-compaction reads are a single partition-free parquet
+  // scan, and the resolve cost is paid once instead of per query.
+  //
+  // Safe for every family whose reader supersedes batch rows with NEWER
+  // stream versions of the same key (or whose law is order-free), so
+  // sealing today's resolved state does not change tomorrow's
+  // semantics. NOT offered for the event-transition store — its stream
+  // side resolves latest-wins on a USER dimension the aggregated batch
+  // shape no longer carries.
+  //
+  // Compaction is a BARRIER operation: run it between ingestion
+  // sessions, after the streaming query's checkpoint has committed its
+  // offsets. The sealed batch no longer carries batch_id, so the
+  // replay-exclusion contract ([[readMinhashBandsExcluding]]) cannot
+  // subtract a PRE-compaction epoch from a post-compaction store —
+  // exactly the "sealed segments don't replay" rule every
+  // log-compacted store (Kafka, LSM trees) lives by.
+  // ------------------------------------------------------------------
 
   /** Compact the phrase-bigram store at `base` (no-op without stream
     * appends). Post-condition: [[readPhraseBigrams]] serves the same
     * rows from the batch subtree alone. */
   def compactPhraseBigrams(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamPhraseBigramsDir(base)))
-      compactInto(spark, phraseBigramsDir(base), streamPhraseBigramsDir(base),
-        readPhraseBigrams(spark, base))
+    compactInto(spark, phraseBigramsDir(base))(readPhraseBigrams(spark, base))
 
   /** Compact the minhash band store (union-distinct resolve). */
   def compactMinhashBands(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamMinhashDir(base)))
-      compactInto(spark, minhashDir(base), streamMinhashDir(base),
-        readMinhashBands(spark, base))
+    compactInto(spark, minhashDir(base))(readMinhashBands(spark, base))
 
   /** Compact the line registry (first-wins resolve). */
   def compactLineRegistry(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamLinesDir(base)))
-      compactInto(spark, linesDir(base), streamLinesDir(base),
-        readLineRegistry(spark, base))
+    compactInto(spark, linesDir(base))(readLineRegistry(spark, base))
 
   /** Compact the BM25 store — the TWO-TABLE variant of the seal: the
     * postings and doclens artifacts share one stream subtree, so both
@@ -980,42 +915,22 @@ object SignatureStore {
     * window can leave both tmp dirs or doclens-only swapped, never a
     * postings marker over a stale doclens; a crash before the stream
     * delete is idempotent (stream docs supersede their own compacted
-    * rows with identical values). */
+    * rows with identical values).
+    *
+    * The ranked-results face ([[ensureBm25TopK]]) is a SNAPSHOT of
+    * pre-append corpus stats — after this seal it is stale, and the
+    * positive probe memo would serve it forever. The seal DROPS it (and
+    * its memo pins) so the next ensureBm25TopK rebuilds from the sealed
+    * postings; callers wanting the rebuild eagerly follow the seal with
+    * [[refreshBm25TopK]]. */
   def compactBm25(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamBm25Dir(base))) {
-      import org.apache.hadoop.fs.Path
+    if (hasData(spark, streamDir(bm25PostingsDir(base)))) {
       val (p, l) = readBm25(spark, base)
-      val tmpP = s"${bm25PostingsDir(base)}_compact_tmp"
-      val tmpL = s"${bm25DoclensDir(base)}_compact_tmp"
-      p.write.mode("overwrite").parquet(tmpP)
-      l.write.mode("overwrite").parquet(tmpL)
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(bm25DoclensDir(base)), true)
-      require(fs.rename(new Path(tmpL), new Path(bm25DoclensDir(base))),
-        s"compaction rename $tmpL failed")
-      fs.delete(new Path(bm25PostingsDir(base)), true)
-      require(fs.rename(new Path(tmpP), new Path(bm25PostingsDir(base))),
-        s"compaction rename $tmpP failed")
-      fs.delete(new Path(streamBm25Dir(base)), true)
-      graft.util.Tables.evict(bm25DoclensDir(base))
-      graft.util.Tables.evict(bm25PostingsDir(base))
-      // The ranked-results face ([[ensureBm25TopK]]) is a SNAPSHOT of
-      // pre-append corpus stats — after this seal it is stale, and the
-      // positive probe memo would serve it forever. DROP it (and its
-      // memo pins) so the next ensureBm25TopK rebuilds from the sealed
-      // postings; callers wanting the rebuild eagerly follow the seal
-      // with [[refreshBm25TopK]].
-      if (fs.exists(new Path(bm25TopkDir(base)))) {
-        fs.delete(new Path(bm25TopkDir(base)), true)
-        invalidateProbe(bm25TopkDir(base))
-      }
+      seal(spark, Seq(bm25DoclensDir(base) -> l, bm25PostingsDir(base) -> p),
+        drop = Seq(streamDir(bm25PostingsDir(base)), bm25TopkDir(base)))
     }
 
   def dailyKmvDir(base: String) = s"$base/daily_kmv"
-
-  /** Streaming sketch appends, batch_id-partitioned (layout rationale of
-    * [[streamMinhashDir]]). */
-  def streamDailyKmvDir(base: String) = s"$base/daily_kmv_stream"
 
   /** Per-day KMV user sketch (day, h) — the events-table store family.
     * Unlike the document stores there is NO supersession resolve:
@@ -1024,20 +939,9 @@ object SignatureStore {
     * time is exact by KMV's union-closure (the k smallest of a union of
     * per-part k-smallest sets IS the union's k smallest). */
   def readDailyKmv(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, dailyKmvDir(base)))(
-      readSealed(spark, dailyKmvDir(base)).select("day", "h"))
-    val stream = Option.when(hasData(spark, streamDailyKmvDir(base)))(
-      spark.read.parquet(streamDailyKmvDir(base)).select("day", "h"))
-    val all = (batch, stream) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no daily kmv store under $base")
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("day")).orderBy(col("h"))
-    all.distinct()
+    layers(spark, dailyKmvDir(base), col("day"), col("h")).union.distinct()
       .withColumn("rk", org.apache.spark.sql.functions.row_number().over(w))
       .filter(col("rk") <= SketchQueries.KmvK)
       .select("day", "h")
@@ -1045,27 +949,18 @@ object SignatureStore {
 
   /** Build-on-first-use for the per-day sketch store. */
   def ensureDailyKmv(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${dailyKmvDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, dailyKmvDir(base))(
       SketchQueries.dailyUserSketch(graft.util.Tables.events(spark, sfDir))
-        .write.mode("overwrite").parquet(dailyKmvDir(base))
+        .write.mode("overwrite").parquet(dailyKmvDir(base)))
     readDailyKmv(spark, base)
   }
 
   /** Compact the daily-sketch store (union + k-min re-rank resolve). */
   def compactDailyKmv(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamDailyKmvDir(base)))
-      compactInto(spark, dailyKmvDir(base), streamDailyKmvDir(base),
-        readDailyKmv(spark, base))
+    compactInto(spark, dailyKmvDir(base))(readDailyKmv(spark, base))
 
   def countMinDir(base: String) = s"$base/count_min"
-
-  /** Streaming cell appends, batch_id-partitioned (same layout
-    * rationale as [[streamMinhashDir]]). */
-  def streamCountMinDir(base: String) = s"$base/count_min_stream"
 
   /** Merged count-min cells (j, slot, n) — the sketch member whose
     * merge law is ADDITION, not latest-wins or union: every cell is a
@@ -1076,44 +971,24 @@ object SignatureStore {
     * daily-KMV store, this treats appended documents as immutable
     * facts: re-ingesting a doc adds its occurrences again (an
     * append-only counter sketch has no per-doc identity to resolve). */
-  def readCountMin(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, countMinDir(base)))(
-      readSealed(spark, countMinDir(base)).select("j", "slot", "n"))
-    val stream = Option.when(hasData(spark, streamCountMinDir(base)))(
-      spark.read.parquet(streamCountMinDir(base)).select("j", "slot", "n"))
-    val all = (batch, stream) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no count-min store under $base")
-    }
-    all.groupBy("j", "slot").agg(org.apache.spark.sql.functions.sum("n").as("n"))
-  }
+  def readCountMin(spark: SparkSession, base: String): DataFrame =
+    layers(spark, countMinDir(base), col("j"), col("slot"), col("n")).union
+      .groupBy("j", "slot").agg(org.apache.spark.sql.functions.sum("n").as("n"))
 
   /** Build-on-first-use for the count-min cell store. */
   def ensureCountMin(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${countMinDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, countMinDir(base))(
       SketchQueries.countMinCells(SketchQueries.tokenVocab(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(countMinDir(base))
+        .write.mode("overwrite").parquet(countMinDir(base)))
     readCountMin(spark, base)
   }
 
   /** Compact the count-min store (cell-sum resolve). */
   def compactCountMin(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamCountMinDir(base)))
-      compactInto(spark, countMinDir(base), streamCountMinDir(base),
-        readCountMin(spark, base))
+    compactInto(spark, countMinDir(base))(readCountMin(spark, base))
 
   def hllDir(base: String) = s"$base/hll"
-
-  /** Streaming register appends, batch_id-partitioned (same layout
-    * rationale as [[streamMinhashDir]]). */
-  def streamHllDir(base: String) = s"$base/hll_stream"
 
   /** Merged per-stratum HLL registers (stratum, idx, m) — the sketch
     * member whose merge law is MAX: batch registers plus each stream
@@ -1123,46 +998,26 @@ object SignatureStore {
     * changes nothing, so replay needs no per-row identity at all. Read
     * cost is ≤256 rows per stratum per part regardless of how many
     * users ever streamed through. */
-  def readHll(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, hllDir(base)))(
-      readSealed(spark, hllDir(base)).select("stratum", "idx", "m"))
-    val stream = Option.when(hasData(spark, streamHllDir(base)))(
-      spark.read.parquet(streamHllDir(base)).select("stratum", "idx", "m"))
-    val all = (batch, stream) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no hll store under $base")
-    }
-    all.groupBy("stratum", "idx").agg(max("m").as("m"))
-  }
+  def readHll(spark: SparkSession, base: String): DataFrame =
+    layers(spark, hllDir(base), col("stratum"), col("idx"), col("m")).union
+      .groupBy("stratum", "idx").agg(max("m").as("m"))
 
   /** Build-on-first-use for the per-event-type HLL register store. */
   def ensureHll(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${hllDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, hllDir(base))(
       SketchQueries.hllRegisters(
           events(spark, sfDir)
             .select(col("event_type").as("stratum"), col("user_id")))
-        .write.mode("overwrite").parquet(hllDir(base))
+        .write.mode("overwrite").parquet(hllDir(base)))
     readHll(spark, base)
   }
 
   /** Compact the HLL register store (register-MAX resolve). */
   def compactHll(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamHllDir(base)))
-      compactInto(spark, hllDir(base), streamHllDir(base),
-        readHll(spark, base))
+    compactInto(spark, hllDir(base))(readHll(spark, base))
 
   def quantileBinsDir(base: String) = s"$base/quantile_bins"
-
-  /** Streaming bin appends, batch_id-partitioned (same layout rationale
-    * as [[streamMinhashDir]]). */
-  def streamQuantileBinsDir(base: String) = s"$base/quantile_bins_stream"
 
   /** Merged per-source length-histogram bins (source, bin, n) — the
     * second ADDITIVE store member (see [[readCountMin]]): bins are
@@ -1172,44 +1027,24 @@ object SignatureStore {
     * counts its length again (additive sketches carry no per-doc
     * identity). Any rollup is a further sum: global percentiles fold
     * over sources, per-source ones filter first. */
-  def readQuantileBins(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, quantileBinsDir(base)))(
-      readSealed(spark, quantileBinsDir(base)).select("source", "bin", "n"))
-    val stream = Option.when(hasData(spark, streamQuantileBinsDir(base)))(
-      spark.read.parquet(streamQuantileBinsDir(base)).select("source", "bin", "n"))
-    val all = (batch, stream) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no quantile-bin store under $base")
-    }
-    all.groupBy("source", "bin").agg(org.apache.spark.sql.functions.sum("n").as("n"))
-  }
+  def readQuantileBins(spark: SparkSession, base: String): DataFrame =
+    layers(spark, quantileBinsDir(base), col("source"), col("bin"), col("n")).union
+      .groupBy("source", "bin").agg(org.apache.spark.sql.functions.sum("n").as("n"))
 
   /** Build-on-first-use for the per-source quantile-bin store. */
   def ensureQuantileBins(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${quantileBinsDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, quantileBinsDir(base))(
       SketchQueries.sourceLengthBins(documents(spark, sfDir))
-        .write.mode("overwrite").parquet(quantileBinsDir(base))
+        .write.mode("overwrite").parquet(quantileBinsDir(base)))
     readQuantileBins(spark, base)
   }
 
   /** Compact the quantile-bin store (bin-sum resolve). */
   def compactQuantileBins(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamQuantileBinsDir(base)))
-      compactInto(spark, quantileBinsDir(base), streamQuantileBinsDir(base),
-        readQuantileBins(spark, base))
+    compactInto(spark, quantileBinsDir(base))(readQuantileBins(spark, base))
 
   def bloomDir(base: String) = s"$base/bloom"
-
-  /** Streaming word appends, batch_id-partitioned (same layout rationale
-    * as [[streamMinhashDir]]). */
-  def streamBloomDir(base: String) = s"$base/bloom_stream"
 
   /** Merged eval-set Bloom words (w, bits) — the third sketch store and
     * the one whose merge law is IDEMPOTENT OR: batch words plus each
@@ -1218,47 +1053,27 @@ object SignatureStore {
     * replay needs no per-doc identity at all. Read cost is ≤128 rows per
     * part regardless of eval-corpus size — the gate a 100 TB
     * decontamination sweep broadcasts instead of the eval shingle set. */
-  def readBloom(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, bloomDir(base)))(
-      readSealed(spark, bloomDir(base)).select("w", "bits"))
-    val stream = Option.when(hasData(spark, streamBloomDir(base)))(
-      spark.read.parquet(streamBloomDir(base)).select("w", "bits"))
-    val all = (batch, stream) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no bloom store under $base")
-    }
-    all.groupBy("w").agg(expr("bit_or(bits)").as("bits"))
-  }
+  def readBloom(spark: SparkSession, base: String): DataFrame =
+    layers(spark, bloomDir(base), col("w"), col("bits")).union
+      .groupBy("w").agg(expr("bit_or(bits)").as("bits"))
 
   /** Build-on-first-use for the eval-set Bloom word store. */
   def ensureBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${bloomDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, bloomDir(base))(
       SketchQueries.bloomOf(SketchQueries.evalSplit(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(bloomDir(base))
+        .write.mode("overwrite").parquet(bloomDir(base)))
     readBloom(spark, base)
   }
 
   /** Compact the Bloom word store (bit_or resolve). */
   def compactBloom(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamBloomDir(base)))
-      compactInto(spark, bloomDir(base), streamBloomDir(base),
-        readBloom(spark, base))
+    compactInto(spark, bloomDir(base))(readBloom(spark, base))
 
+  /** Misra–Gries faces; counters and λs are separate faces (each with
+    * its own `_stream` sibling) because their schemas differ. */
   def mgCountersDir(base: String) = s"$base/mg_counters"
   def mgLambdasDir(base: String) = s"$base/mg_lambdas"
-
-  /** Streaming summary appends, batch_id-partitioned (layout rationale
-    * of [[streamMinhashDir]]); counters and λs are sibling subtrees
-    * because their schemas differ. */
-  def streamMgCountersDir(base: String) = s"$base/mg_counters_stream"
-  def streamMgLambdasDir(base: String) = s"$base/mg_lambdas_stream"
 
   /** Merged per-source Misra–Gries summaries — the BOUNDED-LOSSY store
     * member: the resolve SUMS counters per (source, t) and re-prunes
@@ -1275,22 +1090,7 @@ object SignatureStore {
     * Returns (counters (source, t, c), lambdas (source, lam)). */
   def readHeavyHitters(spark: SparkSession, base: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def unioned(batchDir: String, streamDir: String, cols: Seq[String]): DataFrame = {
-      val batch = Option.when(hasData(spark, batchDir))(
-        readSealed(spark, batchDir).select(cols.map(col): _*))
-      val stream = Option.when(hasData(spark, streamDir))(
-        spark.read.parquet(streamDir).select(cols.map(col): _*))
-      (batch, stream) match {
-        case (Some(b), Some(s)) => b.unionByName(s)
-        case (Some(b), None) => b
-        case (None, Some(s)) => s
-        case (None, None) =>
-          throw new IllegalArgumentException(s"no MG store under $base")
-      }
-    }
-    val summed = unioned(mgCountersDir(base), streamMgCountersDir(base),
-        Seq("source", "t", "c"))
+    val summed = layers(spark, mgCountersDir(base), col("source"), col("t"), col("c")).union
       .groupBy("source", "t").agg(sum("c").as("c"))
     val rkW = Window.partitionBy(col("source")).orderBy(col("c").desc, col("t"))
     val lamM = summed.withColumn("rk", row_number().over(rkW))
@@ -1300,8 +1100,7 @@ object SignatureStore {
     val counters = summed.join(broadcast(lamM), Seq("source"))
       .select(col("source"), col("t"), (col("c") - col("lam_m")).as("c"))
       .filter(col("c") > 0)
-    val lambdas = unioned(mgLambdasDir(base), streamMgLambdasDir(base),
-        Seq("source", "lam"))
+    val lambdas = layers(spark, mgLambdasDir(base), col("source"), col("lam")).union
       .groupBy("source").agg(sum("lam").as("lam"))
       .join(broadcast(lamM), Seq("source"), "left")
       .select(col("source"),
@@ -1313,11 +1112,8 @@ object SignatureStore {
     * the counters marker: a crash window can leave λs-only (the next
     * ensure rebuilds both), never counters over missing λs. */
   def ensureHeavyHitters(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${mgCountersDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) {
+    sealOnce(spark, mgCountersDir(base)) {
       val (counters, lambdas) = SketchQueries.mgSummaries(
         SketchQueries.sourceTokenCounts(documents(spark, sfDir)))
       lambdas.write.mode("overwrite").parquet(mgLambdasDir(base))
@@ -1332,33 +1128,15 @@ object SignatureStore {
     * counters last, so a crash window never leaves a counters marker
     * over a stale λ budget. Sealing is value-idempotent: re-resolving a
     * compacted store re-prunes with λ_m = 0 and adds nothing to λ. */
-  def compactHeavyHitters(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamMgCountersDir(base)) ||
-        hasData(spark, streamMgLambdasDir(base))) {
-      import org.apache.hadoop.fs.Path
+  def compactHeavyHitters(spark: SparkSession, base: String): Unit = {
+    val streams = Seq(streamDir(mgCountersDir(base)), streamDir(mgLambdasDir(base)))
+    if (streams.exists(hasData(spark, _))) {
       val (c, l) = readHeavyHitters(spark, base)
-      val tmpC = s"${mgCountersDir(base)}_compact_tmp"
-      val tmpL = s"${mgLambdasDir(base)}_compact_tmp"
-      c.write.mode("overwrite").parquet(tmpC)
-      l.write.mode("overwrite").parquet(tmpL)
-      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(mgLambdasDir(base)), true)
-      require(fs.rename(new Path(tmpL), new Path(mgLambdasDir(base))),
-        s"compaction rename $tmpL failed")
-      fs.delete(new Path(mgCountersDir(base)), true)
-      require(fs.rename(new Path(tmpC), new Path(mgCountersDir(base))),
-        s"compaction rename $tmpC failed")
-      fs.delete(new Path(streamMgCountersDir(base)), true)
-      fs.delete(new Path(streamMgLambdasDir(base)), true)
-      graft.util.Tables.evict(mgLambdasDir(base))
-      graft.util.Tables.evict(mgCountersDir(base))
+      seal(spark, Seq(mgLambdasDir(base) -> l, mgCountersDir(base) -> c), drop = streams)
     }
+  }
 
   def imagePhashDir(base: String) = s"$base/image_phash"
-
-  /** Streaming fingerprint appends, batch_id-partitioned (same layout
-    * rationale as [[streamMinhashDir]]). */
-  def streamImagePhashDir(base: String) = s"$base/image_phash_stream"
 
   /** Persisted image fingerprints (doc_id, phash) — the multimodal
     * member of the store layer: decode+hash runs once per image version
@@ -1367,53 +1145,27 @@ object SignatureStore {
     * pixels. Stream rows resolve LATEST-WINS per doc (a re-ingested
     * image's newest epoch replaces its fingerprint), then stream docs
     * supersede their batch rows — the [[readBm25]] contract. */
-  def readImagePhash(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, imagePhashDir(base)))(
-      readSealed(spark, imagePhashDir(base)).select("doc_id", "phash"))
-    val stream = Option.when(hasData(spark, streamImagePhashDir(base))) {
-      val raw = spark.read.parquet(streamImagePhashDir(base))
-        .select(col("doc_id"), col("phash"), col("batch_id").cast("long").as("batch_id"))
-      val latest = raw.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
-      raw.join(latest, Seq("doc_id", "batch_id"))
-        .select("doc_id", "phash").distinct()
-    }
-    (batch, stream) match {
-      case (Some(b), Some(s)) =>
-        val streamDocs = s.select("doc_id").distinct()
-        b.join(streamDocs, Seq("doc_id"), "left_anti").unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no image-phash store under $base")
-    }
-  }
+  def readImagePhash(spark: SparkSession, base: String): DataFrame =
+    docLatestWins(layers(spark, imagePhashDir(base), col("doc_id"), col("phash")))
+      .getOrElse(throw missingStore(imagePhashDir(base)))
 
   /** Image fingerprints for `sfDir`, building (decode + hash over the
     * synthesized PNG payloads) on first use. `mm_image_phash` times the
     * live decode; `mm_image_phash_stored` reads this artifact, held to
     * the same oracle. */
   def ensureImagePhash(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${imagePhashDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, imagePhashDir(base))(
       Multimodal.imagePhash(Multimodal.pngAssets(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(imagePhashDir(base))
+        .write.mode("overwrite").parquet(imagePhashDir(base)))
     readImagePhash(spark, base)
   }
 
   /** Compact the image-phash store (latest-wins resolve). */
   def compactImagePhash(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamImagePhashDir(base)))
-      compactInto(spark, imagePhashDir(base), streamImagePhashDir(base),
-        readImagePhash(spark, base))
+    compactInto(spark, imagePhashDir(base))(readImagePhash(spark, base))
 
   def frameDiffDir(base: String) = s"$base/frame_diffs"
-
-  /** Streaming frame-diff appends, batch_id-partitioned (same layout
-    * rationale as [[streamMinhashDir]]). */
-  def streamFrameDiffDir(base: String) = s"$base/frame_diffs_stream"
 
   /** Persisted per-video frame-pair energies (doc_id, idx, diff_l1) —
     * the video member of the store layer: the pair kernel (32 byte
@@ -1424,91 +1176,44 @@ object SignatureStore {
     * set — pair rows are per-version atomic, a shorter re-upload must
     * not leave stale high-idx rows), then stream docs supersede their
     * batch rows — the [[readImagePhash]] contract. */
-  def readFrameDiffs(spark: SparkSession, base: String): DataFrame = {
-    val batch = Option.when(hasData(spark, frameDiffDir(base)))(
-      readSealed(spark, frameDiffDir(base)).select("doc_id", "idx", "diff_l1"))
-    val stream = Option.when(hasData(spark, streamFrameDiffDir(base))) {
-      val raw = spark.read.parquet(streamFrameDiffDir(base))
-        .select(col("doc_id"), col("idx"), col("diff_l1"),
-          col("batch_id").cast("long").as("batch_id"))
-      val latest = raw.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
-      raw.join(latest, Seq("doc_id", "batch_id"))
-        .select("doc_id", "idx", "diff_l1").distinct()
-    }
-    (batch, stream) match {
-      case (Some(b), Some(s)) =>
-        val streamDocs = s.select("doc_id").distinct()
-        b.join(streamDocs, Seq("doc_id"), "left_anti").unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no frame-diff store under $base")
-    }
-  }
+  def readFrameDiffs(spark: SparkSession, base: String): DataFrame =
+    docLatestWins(layers(spark, frameDiffDir(base), col("doc_id"), col("idx"), col("diff_l1")))
+      .getOrElse(throw missingStore(frameDiffDir(base)))
 
   /** Frame-pair energies for `sfDir`, building on first use.
     * `mm_shot_boundaries` / `mm_keyframe_pick` time the live kernel;
     * their `_stored` twins read this artifact, held to the same
     * oracles. */
   def ensureFrameDiffs(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${frameDiffDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      Multimodal.frameDiffs(documents(spark, sfDir))
-        .write.mode("overwrite").parquet(frameDiffDir(base))
+    sealOnce(spark, frameDiffDir(base))(Multimodal.frameDiffs(documents(spark, sfDir))
+      .write.mode("overwrite").parquet(frameDiffDir(base)))
     readFrameDiffs(spark, base)
   }
 
   /** Compact the frame-diff store (latest-wins resolve). */
   def compactFrameDiffs(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamFrameDiffDir(base)))
-      compactInto(spark, frameDiffDir(base), streamFrameDiffDir(base),
-        readFrameDiffs(spark, base))
+    compactInto(spark, frameDiffDir(base))(readFrameDiffs(spark, base))
 
   /** Compact the IVF assignment store (latest-wins per vec_id). */
   def compactIvfAssignments(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamIvfDir(base)))
-      compactInto(spark, ivfDir(base), streamIvfDir(base),
-        readIvfAssignments(spark, base))
+    compactInto(spark, ivfDir(base))(readIvfAssignments(spark, base))
 
   /** Compact the int8-quantized vector store (latest-wins per vec_id). */
   def compactQuantizedVectors(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamQ8Dir(base)))
-      compactInto(spark, q8Dir(base), streamQ8Dir(base),
-        readQuantizedVectors(spark, base))
+    compactInto(spark, q8Dir(base))(readQuantizedVectors(spark, base))
 
   /** Compact the PQ code store (latest-wins per vec_id; the codebook
-    * artifact is immutable and untouched). Unlike the other seals this
-    * cannot reuse the reader verbatim: [[readPqCodes]] returns the
-    * UNPACKED per-subspace rows, while the batch subtree stores the
-    * packed 8-byte codes — so the resolve here runs on the PACKED
-    * form (the same latest-wins rule, before unpacking). */
+    * artifact is immutable and untouched). The seal keeps the PACKED
+    * form the batch subtree stores ([[readPqCodes]] unpacks). */
   def compactPqCodes(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamPqDir(base))) {
-      val batch = Option.when(hasData(spark, pqCodesDir(base)))(
-        readSealed(spark, pqCodesDir(base)).select("vec_id", "codes"))
-      val stream = spark.read.parquet(streamPqDir(base))
-        .select(col("vec_id"), col("codes"), col("batch_id").cast("long").as("batch_id"))
-        .groupBy("vec_id")
-        .agg(max_by(col("codes"), col("batch_id")).as("codes"))
-      val resolved = batch match {
-        case Some(b) =>
-          b.join(stream.select("vec_id"), Seq("vec_id"), "left_anti")
-            .unionByName(stream)
-        case None => stream
-      }
-      compactInto(spark, pqCodesDir(base), streamPqDir(base), resolved)
-    }
+    compactInto(spark, pqCodesDir(base))(packedCodes(spark, pqCodesDir(base)))
 
+  /** BM25 faces: postings (doc_id, token, tf, dl) and the per-doc
+    * length table (doc_id, dl). They share ONE stream subtree beside the
+    * postings face; stream doclens derive from the postings rows. */
   def bm25PostingsDir(base: String) = s"$base/bm25_postings"
   def bm25DoclensDir(base: String) = s"$base/bm25_doclens"
-
-  /** Streaming postings appends land in a batch_id-partitioned SIBLING
-    * subtree (same rationale as [[streamMinhashDir]]); [[readBm25]]
-    * unions both, so search transparently sees stream-ingested docs. */
-  def streamBm25Dir(base: String) = s"$base/bm25_postings_stream"
 
   /** Stored postings + doclens at `base`: the batch subtrees and/or the
     * stream-append subtree (a store may be purely batch-built, purely
@@ -1522,33 +1227,21 @@ object SignatureStore {
     * The version resolve is one max aggregate on doc_id (tiny next to
     * the postings themselves) + a semi-join; stream doclens derive from
     * the postings rows (every doc has ≥1 posting — the tokenizer never
-    * returns an empty array). */
+    * returns an empty array). A stream-ingested version supersedes the
+    * batch rows of the same doc (anti-join prune), so tf/df/n never
+    * double-count. */
   def readBm25(spark: SparkSession, base: String): (DataFrame, DataFrame) = {
-    val batch = Option.when(hasData(spark, bm25PostingsDir(base)))(
-      (readSealed(spark, bm25PostingsDir(base)),
-        readSealed(spark, bm25DoclensDir(base))))
-    val stream = Option.when(hasData(spark, streamBm25Dir(base))) {
-      val raw = spark.read.parquet(streamBm25Dir(base))
-        .select(col("doc_id"), col("token"), col("tf"), col("dl"),
-          col("batch_id").cast("long").as("batch_id"))
-      val latest = raw.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
-      val sp = raw.join(latest, Seq("doc_id", "batch_id"))
-        .select("doc_id", "token", "tf", "dl").distinct()
-      (sp, sp.select(col("doc_id"), col("dl")).distinct())
-    }
-    (batch, stream) match {
-      case (Some((bp, bl)), Some((sp, sl))) =>
-        // A stream-ingested version supersedes the batch rows of the
-        // same doc (anti-join prune), so tf/df/n never double-count.
-        val streamDocs = sp.select("doc_id").distinct()
-        (bp.join(streamDocs, Seq("doc_id"), "left_anti").unionByName(sp),
-          bl.join(streamDocs, Seq("doc_id"), "left_anti").unionByName(sl))
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no bm25 postings store under $base")
+    val l = layers(spark, bm25PostingsDir(base))
+    val stream = l.stream.map(_.select("doc_id", "token", "tf", "dl", "batch_id"))
+    val lens = Layers(bm25DoclensDir(base),
+      l.batch.map(_ => readSealed(spark, bm25DoclensDir(base))),
+      stream.map(_.select("doc_id", "dl", "batch_id")))
+    (docLatestWins(l.copy(stream = stream)), docLatestWins(lens)) match {
+      case (Some(p), Some(d)) => (p, d)
+      case _ => throw missingStore(bm25PostingsDir(base))
     }
   }
+
 
   /** Persisted BM25 postings ((doc_id, token, tf, dl) over ALL documents
     * — query-set agnostic) plus the per-doc length table (doc_id, dl)
@@ -1558,11 +1251,8 @@ object SignatureStore {
     * `bm25_search` times the live build, `bm25_search_stored` is held to
     * the same oracle and never re-tokenizes corpus text. */
   def ensureBm25(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${bm25PostingsDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString)) {
+    sealOnce(spark, bm25PostingsDir(base)) {
       val docs = documents(spark, sfDir)
       SearchQueries.doclensOf(docs)
         .write.mode("overwrite").parquet(bm25DoclensDir(base))
@@ -1599,38 +1289,24 @@ object SignatureStore {
     * [[compactBm25]] seal DROPS a stale face so it can never be served
     * past the seal; [[refreshBm25TopK]] rebuilds it eagerly. */
   def ensureBm25TopK(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val base = defaultBase(spark, sfDir)
-    // this face is swapDir-maintained ([[refreshBm25TopK]]): a crash in
-    // the park→rename window leaves the snapshot at `_bak` while a
-    // same-session probeMemo pin on the marker would skip the rebuild
-    // and fail on the missing directory — restore the park FIRST, like
-    // [[readClusters]] (r11 advisor)
-    recoverFromBak(spark, bm25TopkDir(base))
-    val marker = new Path(s"${bm25TopkDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      SearchQueries.bm25TopKOf(spark, sfDir)
-        .write.mode("overwrite").parquet(bm25TopkDir(base))
-    readSealed(spark, bm25TopkDir(base))
+    val dir = bm25TopkDir(defaultBase(spark, sfDir))
+    // this face is swapDir-maintained ([[refreshBm25TopK]]) and read
+    // without a data probe: a crash in the park→rename window leaves
+    // the snapshot at `_bak` while a same-session probeMemo pin on the
+    // marker would skip the rebuild and fail on the missing directory
+    // — restore the park FIRST, like [[readClusters]]
+    recoverFromBak(spark, dir)
+    sealOnce(spark, dir)(SearchQueries.bm25TopKOf(spark, sfDir)
+      .write.mode("overwrite").parquet(dir))
+    readSealed(spark, dir)
   }
 
   /** Rebuild the ranked-results snapshot from the current postings
-    * store — the seal-time companion of [[compactBm25]] (tmp-and-swap,
-    * same crash discipline as [[compactInto]]). */
-  def refreshBm25TopK(spark: SparkSession, sfDir: String): Unit = {
-    val base = defaultBase(spark, sfDir)
-    val tmp = s"${bm25TopkDir(base)}_compact_tmp"
-    SearchQueries.bm25TopKOf(spark, sfDir).write.mode("overwrite").parquet(tmp)
-    swapDir(spark, bm25TopkDir(base), tmp)
-  }
+    * store — the seal-time companion of [[compactBm25]]. */
+  def refreshBm25TopK(spark: SparkSession, sfDir: String): Unit =
+    seal(spark, Seq(bm25TopkDir(defaultBase(spark, sfDir)) -> SearchQueries.bm25TopKOf(spark, sfDir)))
 
   def linesDir(base: String) = s"$base/line_registry"
-
-  /** Streaming appends land in a sibling subtree (same rationale as
-    * [[streamMinhashDir]]: the stream writer partitions by `batch_id`,
-    * and mixing partition depths breaks parquet discovery). */
-  def streamLinesDir(base: String) = s"$base/line_registry_stream"
 
   /** The first-occurrence line registry — (line_fp, first_doc,
     * first_idx), md5 only, never text — unioned across the batch build
@@ -1641,26 +1317,16 @@ object SignatureStore {
     * late batch carrying a LOWER doc_id correctly takes ownership).
     * Contrast with the bm25/IVF stores, which resolve LATEST-wins:
     * supersession direction follows the semantic (newest content version
-    * there, earliest occurrence here). */
+    * there, earliest occurrence here). The batch build is already
+    * one-row-per-line, so a batch-only registry is served as stored. */
   def readLineRegistry(spark: SparkSession, base: String): DataFrame = {
     def resolve(df: DataFrame) =
-      df.groupBy("line_fp")
+      df.drop("batch_id").groupBy("line_fp")
         .agg(min(struct(col("first_doc"), col("first_idx"))).as("o"))
         .select(col("line_fp"), col("o.first_doc").as("first_doc"),
           col("o.first_idx").as("first_idx"))
-    val batch = Option.when(hasData(spark, linesDir(base)))(
-      readSealed(spark, linesDir(base))
-        .select("line_fp", "first_doc", "first_idx"))
-    val stream = Option.when(hasData(spark, streamLinesDir(base)))(
-      spark.read.parquet(streamLinesDir(base))
-        .select("line_fp", "first_doc", "first_idx"))
-    (batch, stream) match {
-      case (Some(b), Some(s)) => resolve(b.unionByName(s))
-      case (Some(b), None) => b // the batch build is already one-row-per-line
-      case (None, Some(s)) => resolve(s)
-      case (None, None) =>
-        throw new IllegalArgumentException(s"no line registry under $base")
-    }
+    layers(spark, linesDir(base), col("line_fp"), col("first_doc"), col("first_idx"))
+      .get(resolve)((b, s) => resolve(b.unionByName(s.drop("batch_id"))))
   }
 
   /** First-occurrence line registry for `sfDir`, building on first use.
@@ -1670,13 +1336,10 @@ object SignatureStore {
     * `dedup_lines_stored` re-splits its documents map-side and
     * equi-joins this artifact, held to the same oracle. */
   def ensureLineRegistry(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${linesDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
+    sealOnce(spark, linesDir(base))(
       TextQueries.lineRegistryOf(TextQueries.linesOf(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(linesDir(base))
+        .write.mode("overwrite").parquet(linesDir(base)))
     readLineRegistry(spark, base)
   }
 
@@ -1691,13 +1354,9 @@ object SignatureStore {
     * re-running the fixpoint. `dedup_clusters` times the live compute;
     * this store is what a production corpus pipeline reads. */
   def ensureClusters(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val base = defaultBase(spark, sfDir)
-    val marker = new Path(s"${clustersDir(base)}/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!sealedMarkerExists(spark, marker.toString))
-      TextQueries.clusterAssignments(spark, sfDir)
-        .write.mode("overwrite").parquet(clustersDir(base))
+    sealOnce(spark, clustersDir(base))(TextQueries.clusterAssignments(spark, sfDir)
+      .write.mode("overwrite").parquet(clustersDir(base)))
     readSealed(spark, clustersDir(base))
   }
 
@@ -1784,9 +1443,7 @@ object SignatureStore {
       .join(remapDf, col("cluster_id") === col("old_label"), "left")
       .select(col("doc_id"),
         coalesce(col("new_label"), col("cluster_id")).as("cluster_id"))
-    val tmp = s"${clustersDir(base)}_update_tmp"
-    next.write.mode("overwrite").parquet(tmp)
-    swapDir(spark, clustersDir(base), tmp)
+    seal(spark, Seq(clustersDir(base) -> next))
   }
 
   /** Seal for the cluster store: recompute the full fixpoint from the
@@ -1803,13 +1460,10 @@ object SignatureStore {
       .unionByName(pairs.select(col("doc_a").as("doc_id")))
       .unionByName(pairs.select(col("doc_b").as("doc_id")))
       .unionByName(
-        tryReadMinhashBands(spark, base, excludeBatch = None)
+        bandLayers(spark, minhashDir(base), col("band").cast("int"), None)
           .map(_.select("doc_id"))
           .getOrElse(spark.range(0).select(col("id").as("doc_id"))))
       .distinct()
-    val resolved = TextQueries.clusterAssignmentsOf(docs, pairs)
-    val tmp = s"${clustersDir(base)}_compact_tmp"
-    resolved.write.mode("overwrite").parquet(tmp)
-    swapDir(spark, clustersDir(base), tmp)
+    seal(spark, Seq(clustersDir(base) -> TextQueries.clusterAssignmentsOf(docs, pairs)))
   }
 }

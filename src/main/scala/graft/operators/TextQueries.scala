@@ -379,7 +379,7 @@ object TextQueries {
     }
     // Re-anchor each cluster label to its minimum CORPUS member: the
     // signature store may hold stream-appended docs absent from
-    // `documents` (see SignatureStore.streamMinhashDir), and a min-label
+    // `documents` (see SignatureStore.streamDir), and a min-label
     // pointing at such a node would make the canonical filter
     // (cluster_id = doc_id) silently drop the whole cluster. Isolated
     // docs (the vast majority) bypass the remap entirely; the remap

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.SignatureStore
+import graft.operators.SignatureStore.{appendEpoch, streamDir}
 
 /** Structured Streaming surface.
   *
@@ -155,7 +157,7 @@ object EventStream {
     * a replayed epoch overwrites exactly its own partitions.
     *
     * Writes land in the store's STREAM subtree
-    * ([[graft.operators.SignatureStore.streamMinhashDir]]) — the batch
+    * ([[graft.operators.SignatureStore.streamDir]] of `minhashDir`) — the batch
     * subtree is partitioned by `band` alone, so `(batch_id, band)` rows
     * written into it would break partition discovery for every
     * subsequent reader. `SignatureStore.readMinhashBands` unions both. */
@@ -163,12 +165,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextQueries.minhashBandsOf(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "band")
-          .parquet(graft.operators.SignatureStore.streamMinhashDir(storeBase))
+        appendEpoch(graft.operators.TextQueries.minhashBandsOf(batch),
+          streamDir(SignatureStore.minhashDir(storeBase)), batchId, "band")
     }
 
   /** Incremental OPH band maintenance — [[maintainSignatures]] on the
@@ -182,12 +180,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextQueries.ophBandsOf(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "band")
-          .parquet(graft.operators.SignatureStore.streamOphDir(storeBase))
+        appendEpoch(graft.operators.TextQueries.ophBandsOf(batch),
+          streamDir(SignatureStore.ophDir(storeBase)), batchId, "band")
     }
 
   /** Incremental candidate-PAIR maintenance — [[maintainSignatures]]
@@ -212,11 +206,7 @@ object EventStream {
         val spark = batch.sparkSession
         val delta = graft.operators.TextQueries.minhashBandsOf(batch)
           .localCheckpoint()
-        delta.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "band")
-          .parquet(graft.operators.SignatureStore.streamMinhashDir(storeBase))
+        appendEpoch(delta, streamDir(SignatureStore.minhashDir(storeBase)), batchId, "band")
         val all = graft.operators.SignatureStore
           .readMinhashBandsExcluding(spark, storeBase, batchId)
           .unionByName(delta).distinct()
@@ -257,11 +247,7 @@ object EventStream {
     val pinned = batch.localCheckpoint()
     val delta = graft.operators.TextQueries.minhashBandsOf(pinned)
       .localCheckpoint()
-    delta.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "band")
-      .parquet(graft.operators.SignatureStore.streamMinhashDir(storeBase))
+    appendEpoch(delta, streamDir(SignatureStore.minhashDir(storeBase)), batchId, "band")
     val all = graft.operators.SignatureStore
       .readMinhashBandsExcluding(spark, storeBase, batchId)
       .unionByName(delta).distinct()
@@ -291,12 +277,8 @@ object EventStream {
 
   /** One epoch of [[maintainPostings]] — see [[clustersEpoch]]. */
   def postingsEpoch(batch: DataFrame, batchId: Long, storeBase: String): Unit =
-    graft.operators.SearchQueries.postingsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(graft.operators.SignatureStore.streamBm25Dir(storeBase))
+    appendEpoch(graft.operators.SearchQueries.postingsOf(batch),
+      streamDir(SignatureStore.bm25PostingsDir(storeBase)), batchId)
 
   /** Incremental per-day KMV sketch maintenance — the events-table store
     * twin: each micro-batch of events (user_id, ts_ns) contributes its
@@ -309,12 +291,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchQueries.dailyUserSketch(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamDailyKmvDir(storeBase))
+        appendEpoch(graft.operators.SketchQueries.dailyUserSketch(batch),
+          streamDir(SignatureStore.dailyKmvDir(storeBase)), batchId)
     }
 
   /** Incremental phrase-bigram maintenance — the phrase-search twin of
@@ -331,12 +309,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.SearchQueries.bigramsOf(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamPhraseBigramsDir(storeBase))
+        appendEpoch(graft.operators.SearchQueries.bigramsOf(batch),
+          streamDir(SignatureStore.phraseBigramsDir(storeBase)), batchId)
     }
 
   /** Incremental image-fingerprint maintenance — the multimodal twin of
@@ -355,14 +329,10 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     assets.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.Multimodal.imagePhash(
+        appendEpoch(graft.operators.Multimodal.imagePhash(
           batch.groupBy("doc_id")
-            .agg(max_by(col("payload"), xxhash64(col("payload"))).as("payload")))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamImagePhashDir(storeBase))
+            .agg(max_by(col("payload"), xxhash64(col("payload"))).as("payload"))),
+          streamDir(SignatureStore.imagePhashDir(storeBase)), batchId)
     }
 
   /** Incremental frame-diff maintenance — the video twin of
@@ -381,14 +351,10 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.Multimodal.frameDiffs(
+        appendEpoch(graft.operators.Multimodal.frameDiffs(
           batch.groupBy("doc_id")
-            .agg(max_by(col("text"), xxhash64(col("text"))).as("text")))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamFrameDiffDir(storeBase))
+            .agg(max_by(col("text"), xxhash64(col("text"))).as("text"))),
+          streamDir(SignatureStore.frameDiffDir(storeBase)), batchId)
     }
 
   /** Incremental count-min maintenance — the ADDITIVE member of the
@@ -405,13 +371,9 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchQueries.countMinCells(
-            graft.operators.SketchQueries.tokenVocab(batch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamCountMinDir(storeBase))
+        appendEpoch(graft.operators.SketchQueries.countMinCells(
+            graft.operators.SketchQueries.tokenVocab(batch)),
+          streamDir(SignatureStore.countMinDir(storeBase)), batchId)
     }
 
   /** Incremental HLL register maintenance — the MAX member of the store
@@ -429,13 +391,9 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchQueries.hllRegisters(
-            batch.select(col("event_type").as("stratum"), col("user_id")))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamHllDir(storeBase))
+        appendEpoch(graft.operators.SketchQueries.hllRegisters(
+            batch.select(col("event_type").as("stratum"), col("user_id"))),
+          streamDir(SignatureStore.hllDir(storeBase)), batchId)
     }
 
   /** Incremental Bloom-gate maintenance — the IDEMPOTENT member of the
@@ -452,12 +410,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchQueries.bloomOf(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamBloomDir(storeBase))
+        appendEpoch(graft.operators.SketchQueries.bloomOf(batch),
+          streamDir(SignatureStore.bloomDir(storeBase)), batchId)
     }
 
   /** Incremental Misra–Gries maintenance — the BOUNDED-LOSSY member of
@@ -481,16 +435,8 @@ object EventStream {
       (batch: DataFrame, batchId: Long) =>
         val (counters, lambdas) = graft.operators.SketchQueries.mgSummaries(
           graft.operators.SketchQueries.sourceTokenCounts(batch))
-        counters.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamMgCountersDir(storeBase))
-        lambdas.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamMgLambdasDir(storeBase))
+        appendEpoch(counters, streamDir(SignatureStore.mgCountersDir(storeBase)), batchId)
+        appendEpoch(lambdas, streamDir(SignatureStore.mgLambdasDir(storeBase)), batchId)
     }
 
   /** Incremental quantile-bin maintenance — the second additive store
@@ -505,12 +451,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchQueries.sourceLengthBins(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamQuantileBinsDir(storeBase))
+        appendEpoch(graft.operators.SketchQueries.sourceLengthBins(batch),
+          streamDir(SignatureStore.quantileBinsDir(storeBase)), batchId)
     }
 
   /** Incremental line-registry maintenance — the line-dedup twin of
@@ -529,13 +471,9 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextQueries.lineRegistryOf(
-          graft.operators.TextQueries.linesOf(batch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamLinesDir(storeBase))
+        appendEpoch(graft.operators.TextQueries.lineRegistryOf(
+            graft.operators.TextQueries.linesOf(batch)),
+          streamDir(SignatureStore.linesDir(storeBase)), batchId)
     }
 
   /** Incremental span-store maintenance — the substring-dedup twin of
@@ -555,12 +493,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextQueries.positionedGrams8(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamSpanGramsDir(storeBase))
+        appendEpoch(graft.operators.TextQueries.positionedGrams8(batch),
+          streamDir(SignatureStore.spanGramsDir(storeBase)), batchId)
     }
 
   /** Incremental IVF-assignment maintenance — the vector-index twin of
@@ -577,12 +511,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.VectorQueries.ivfAssign(batch, centroids)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamIvfDir(storeBase))
+        appendEpoch(graft.operators.VectorQueries.ivfAssign(batch, centroids),
+          streamDir(SignatureStore.ivfDir(storeBase)), batchId)
     }
 
   /** Incremental int8-code maintenance — the quantized-store twin of
@@ -598,12 +528,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.VectorQueries.quantizeInt8(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamQ8Dir(storeBase))
+        appendEpoch(graft.operators.VectorQueries.quantizeInt8(batch),
+          streamDir(SignatureStore.q8Dir(storeBase)), batchId)
     }
 
   /** Incremental PQ-code maintenance — the product-quantized twin of
@@ -618,14 +544,10 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.operators.PqQueries.packCodes(
+        appendEpoch(graft.operators.PqQueries.packCodes(
           graft.operators.PqQueries.pqAssign(
-            graft.operators.PqQueries.scaledSub(batch), codebook))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamPqDir(storeBase))
+            graft.operators.PqQueries.scaledSub(batch), codebook)),
+          streamDir(SignatureStore.pqCodesDir(storeBase)), batchId)
     }
 
   /** Incremental residual-PQ-code maintenance — [[maintainPqCodes]]'s
@@ -648,12 +570,8 @@ object EventStream {
         val assign = VectorQueries.ivfAssign(batch, centroids)
         val rsub = PqQueries.residualSub(
           PqQueries.scaledSub(batch), assign, PqQueries.centroidSub(centroids))
-        PqQueries.packCodes(PqQueries.pqAssign(rsub, codebook))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(graft.operators.SignatureStore.streamRpqDir(storeBase))
+        appendEpoch(PqQueries.packCodes(PqQueries.pqAssign(rsub, codebook)),
+          streamDir(SignatureStore.rpqCodesDir(storeBase)), batchId)
     }
 
   /** Streaming event-rollup maintenance — the events-analytics twin of
@@ -672,11 +590,7 @@ object EventStream {
     windowedCounts(events, window_, delay)
       .writeStream.outputMode("update").foreachBatch {
         (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(storeDir)
+          appendEpoch(batch, storeDir, batchId)
       }
 
   /** Latest state per (window_start, event_type) from a
@@ -746,11 +660,7 @@ object EventStream {
     transitionTriples(events).toDF()
       .writeStream.outputMode("update").foreachBatch {
         (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(storeDir)
+          appendEpoch(batch, storeDir, batchId)
       }
 
   /** Corpus-wide counted triples (e1, e2, e3, n) from a
@@ -759,9 +669,13 @@ object EventStream {
     * identically off either. Latest-wins PER USER (not per triple):
     * only the user's newest emission contributes, then users sum. */
   def readTransitionCounts(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val t = spark.read.parquet(storeDir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
+      storeDir: String): DataFrame =
+    transitionCounts(spark.read.parquet(storeDir))
+
+  /** [[readTransitionCounts]] over an already-read store relation (the
+    * stream side of the batch transition store). */
+  private[graft] def transitionCounts(store: DataFrame): DataFrame = {
+    val t = store.withColumn("batch_id", col("batch_id").cast("long"))
     val latest = t.groupBy("user_id").agg(max("batch_id").as("batch_id"))
     t.join(latest, Seq("user_id", "batch_id"))
       .groupBy("e1", "e2", "e3").agg(sum("n").as("n"))
@@ -855,12 +769,7 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[RetPair] =
     retentionPairs(events).writeStream.outputMode("update").foreachBatch {
       (batch: Dataset[RetPair], batchId: Long) =>
-        batch.toDF()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
+        appendEpoch(batch.toDF(), storeDir, batchId)
     }
 
   /** The retention matrix from a [[maintainRetention]] store:
@@ -893,7 +802,7 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{SignatureStore, TextQueries}
+        import graft.operators.TextQueries
         val spark = batch.sparkSession
         // sign ONCE per epoch; the bands feed the store probe, the
         // within-batch self-join and the survivor append
@@ -907,17 +816,9 @@ object EventStream {
           .join(dupOfStore.unionByName(dupInBatch).distinct(), Seq("doc_id"), "left_anti")
           .persist()
         try {
-          keep.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(s"$base/docs")
-          bands.join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "band")
-            .parquet(SignatureStore.streamMinhashDir(base))
+          appendEpoch(keep, s"$base/docs", batchId)
+          appendEpoch(bands.join(keep.select("doc_id"), Seq("doc_id"), "left_semi"),
+            streamDir(SignatureStore.minhashDir(base)), batchId, "band")
         } finally keep.unpersist()
     }
 
@@ -946,7 +847,7 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        import graft.operators.{CurationQueries, SignatureStore, TextQueries}
+        import graft.operators.{CurationQueries, TextQueries}
         val gated = batch
           .filter(graft.functions.WsTokenCount.ws_token_count(col("text")) >= minTokens)
         val contaminated = CurationQueries
@@ -959,17 +860,9 @@ object EventStream {
           .withColumn("text", CurationQueries.redactPii(col("text")))
           .persist()
         try {
-          clean.withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(s"$outBase/docs")
-          TextQueries.minhashBandsOf(clean)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "band")
-            .parquet(SignatureStore.streamMinhashDir(outBase))
+          appendEpoch(clean, s"$outBase/docs", batchId)
+          appendEpoch(TextQueries.minhashBandsOf(clean),
+            streamDir(SignatureStore.minhashDir(outBase)), batchId, "band")
         } finally clean.unpersist()
     }
 

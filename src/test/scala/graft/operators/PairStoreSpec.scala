@@ -99,7 +99,7 @@ class PairStoreSpec extends SparkFunSuite {
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        SignatureStore.streamPairsDir(base, "k8"))))
+        SignatureStore.streamDir(SignatureStore.pairsDir(base, "k8")))))
       val sealedOnly = pairSet(spark.read.parquet(SignatureStore.pairsDir(base, "k8")))
       assert(sealedOnly == pairSet(TextQueries.bandedPairs(allBands)))
     } finally spark.conf.unset("spark.graft.sigstore.root")

@@ -79,7 +79,7 @@ class SignatureStoreSpec extends SparkFunSuite {
     TextQueries.minhashBandsOf(docs.limit(0))
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
       .write.partitionBy("batch_id", "band")
-      .parquet(SignatureStore.streamMinhashDir(base))
+      .parquet(SignatureStore.streamDir(SignatureStore.minhashDir(base)))
     val got = SignatureStore.readMinhashBands(spark, base)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(got == Set(1L))
@@ -96,7 +96,7 @@ class SignatureStoreSpec extends SparkFunSuite {
     // so the replay guard can't collapse it)
     TextQueries.minhashBandsOf(docs).withColumn("batch_id", lit(7L))
       .write.partitionBy("batch_id", "band")
-      .parquet(SignatureStore.streamMinhashDir(base))
+      .parquet(SignatureStore.streamDir(SignatureStore.minhashDir(base)))
     val rows = SignatureStore.readMinhashBands(spark, base).collect()
     val live = TextQueries.minhashBandsOf(docs).count()
     assert(rows.length == live, "union must deduplicate (doc_id, band, key)")
@@ -125,7 +125,7 @@ class SignatureStoreSpec extends SparkFunSuite {
         Seq((-5L, firstText)).toDF("doc_id", "text"))
         .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
         .write.partitionBy("batch_id", "band")
-        .parquet(SignatureStore.streamMinhashDir(sb))
+        .parquet(SignatureStore.streamDir(SignatureStore.minhashDir(sb)))
       val assigns = TextQueries.clusterAssignments(spark, sfDir)
       val ids = assigns.select("cluster_id").collect().map(_.getLong(0)).toSet
       assert(!ids.contains(-5L), "labels must re-anchor inside the corpus")
@@ -155,5 +155,58 @@ class SignatureStoreSpec extends SparkFunSuite {
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(viaScheme == live && again == live && live.nonEmpty)
     } finally spark.conf.unset("spark.graft.sigstore.root")
+  }
+
+  private def cells(df: org.apache.spark.sql.DataFrame) =
+    df.select("j", "slot", "n").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+
+  test("concurrent first ensureCountMin calls build the store once and all read it") {
+    // four threads race the FIRST build on a fresh store root: an
+    // unserialized check-then-write lets several `overwrite` jobs write
+    // one directory at once, which fails or corrupts the face
+    val live = cells(SketchQueries.countMinCells(
+      SketchQueries.tokenVocab(Tables.documents(spark, sfDir))))
+    assert(live.nonEmpty)
+    spark.conf.set("spark.graft.sigstore.root", tmpDir("sigrace"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      type Cells = Set[(Int, Long, Long)]
+      val calls = (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[Cells] {
+        def call(): Cells = cells(SignatureStore.ensureCountMin(spark, sfDir))
+      }))
+      calls.foreach(c => assert(c.get() == live, "every caller must read the live cells"))
+    } finally {
+      pool.shutdown()
+      spark.conf.unset("spark.graft.sigstore.root")
+    }
+  }
+
+  test("a compaction that crashed after the park step still serves the pre-compaction rows") {
+    import org.apache.spark.sql.functions.lit
+    import spark.implicits._
+    val base = tmpDir("sigpark")
+    val dir = SignatureStore.countMinDir(base)
+    val batchCells = SketchQueries.countMinCells(SketchQueries.tokenVocab(
+      Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text")))
+    val streamCells = SketchQueries.countMinCells(SketchQueries.tokenVocab(
+      Seq((3L, "alpha delta")).toDF("doc_id", "text")))
+    val want = cells(batchCells.unionByName(streamCells)
+      .groupBy("j", "slot").agg(org.apache.spark.sql.functions.sum("n").as("n")))
+    // the state a seal leaves between parking the live face and renaming
+    // the resolved tmp in: live dir at `_bak`, complete tmp beside it,
+    // stream subtree not yet dropped
+    batchCells.write.parquet(dir + "_bak")
+    batchCells.unionByName(streamCells).groupBy("j", "slot")
+      .agg(org.apache.spark.sql.functions.sum("n").as("n"))
+      .write.parquet(dir + "_compact_tmp")
+    streamCells.withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").parquet(SignatureStore.streamDir(dir))
+    assert(cells(SignatureStore.readCountMin(spark, base)) == want,
+      "the reader must restore the parked batch face, not serve the stream alone")
+    // and a re-run of the seal completes the compaction with the same rows
+    SignatureStore.compactCountMin(spark, base)
+    assert(cells(SignatureStore.readCountMin(spark, base)) == want)
+    assert(!new java.io.File(SignatureStore.streamDir(dir)).exists())
   }
 }

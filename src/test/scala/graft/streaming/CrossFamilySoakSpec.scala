@@ -107,9 +107,9 @@ class CrossFamilySoakSpec extends SparkFunSuite {
     SignatureStore.compactClusters(spark, base)
     SignatureStore.compactBm25(spark, base)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    for (d <- Seq(SignatureStore.streamMinhashDir(base),
-        SignatureStore.streamPairsDir(base, "k8"),
-        SignatureStore.streamBm25Dir(base)))
+    for (d <- Seq(SignatureStore.streamDir(SignatureStore.minhashDir(base)),
+        SignatureStore.streamDir(SignatureStore.pairsDir(base, "k8")),
+        SignatureStore.streamDir(SignatureStore.bm25PostingsDir(base))))
       assert(!fs.exists(new org.apache.hadoop.fs.Path(d)), s"stream subtree survived seal: $d")
     assert(SignatureStore.readMinhashBands(spark, base).count() == allBands.count())
     assert(pairSet(SignatureStore.readPairs(spark, base, "k8")) == wantPairs)

@@ -259,7 +259,7 @@ class StreamingSpec extends SparkFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(sealed1 == batch)
       assert(!new java.io.File(
-        graft.operators.SignatureStore.streamOphDir(base)
+        graft.operators.SignatureStore.streamDir(graft.operators.SignatureStore.ophDir(base))
           .stripPrefix("file:")).exists())
     } finally query.stop()
   }
@@ -358,7 +358,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(compacted.exceptAll(want).count() == 0 && want.exceptAll(compacted).count() == 0,
       "compaction changed the served residual codes")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamRpqDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.rpqCodesDir(base)))))
   }
 
   test("streaming PQ-code maintenance matches a batch encode against the same codebook") {
@@ -481,7 +481,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(rows(SignatureStore.readDailyKmv(spark, base)) == want,
       "compaction must not change the served sketch")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDailyKmvDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.dailyKmvDir(base)))))
   }
 
   test("count-min store: stream epochs ADD cell-wise, compaction seals") {
@@ -520,7 +520,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(cells(SignatureStore.readCountMin(spark, base)) == want,
       "compaction must not change the served cells")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamCountMinDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.countMinDir(base)))))
     // the sealed store keeps taking appends and cells keep adding
     val input2 = MemoryStream[(Long, String)]
     val query2 = EventStream.maintainCountMin(
@@ -589,8 +589,8 @@ class StreamingSpec extends SparkFunSuite {
     assert(counterMap(c2) == c && lamMap(l2) == lam,
       "compaction must not change the resolved summaries")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamMgCountersDir(base))))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamMgLambdasDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.mgCountersDir(base)))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.mgLambdasDir(base)))))
     // the sealed store keeps taking appends within the (grown) budget
     val input2 = MemoryStream[(Long, String, String)]
     val query2 = EventStream.maintainHeavyHitters(
@@ -649,7 +649,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(words(SignatureStore.readBloom(spark, base)) == want,
       "compaction must not change the served words")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamBloomDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.bloomDir(base)))))
     // the sealed store keeps taking appends and bits keep ORing
     val input2 = MemoryStream[(Long, String)]
     val query2 = EventStream.maintainBloom(
@@ -703,7 +703,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(regs(SignatureStore.readHll(spark, base)) == want,
       "compaction must not change the served registers")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamHllDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.hllDir(base)))))
     // the sealed store keeps taking appends; MAX keeps resolving
     val input2 = MemoryStream[(Long, String)]
     val query2 = EventStream.maintainHll(
@@ -748,7 +748,7 @@ class StreamingSpec extends SparkFunSuite {
     assert(bins(SignatureStore.readQuantileBins(spark, base)) == want,
       "compaction must not change the served bins")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamQuantileBinsDir(base))))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.quantileBinsDir(base)))))
   }
 
   test("bm25-store compaction seals postings AND doclens consistently") {
@@ -784,7 +784,7 @@ class StreamingSpec extends SparkFunSuite {
     SignatureStore.compactBm25(spark, base)
     assert(snap() == before, "compaction must not change what readBm25 serves")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamBm25Dir(base))),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.bm25PostingsDir(base)))),
       "compaction must drop the stream subtree")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.bm25TopkDir(base))),
       "compaction must drop the stale ranked-results face")
@@ -894,7 +894,7 @@ class StreamingSpec extends SparkFunSuite {
         "compaction must not change the served spans")
       val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
-        graft.operators.SignatureStore.streamSpanGramsDir(base))),
+        graft.operators.SignatureStore.streamDir(graft.operators.SignatureStore.spanGramsDir(base)))),
         "compaction must drop the stream subtree")
       // the sealed grams stay live: a post-seal re-ingest of doc 31
       // still supersedes its sealed grams and the spans vanish again
@@ -970,7 +970,7 @@ class StreamingSpec extends SparkFunSuite {
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainPhraseBigrams(
       input.toDS().toDF("doc_id", "text"),
-      SignatureStore.streamPhraseBigramsDir(base))
+      SignatureStore.streamDir(SignatureStore.phraseBigramsDir(base)))
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       input.addData((2L, "zeta eta"), (3L, "theta iota kappa"))
@@ -998,7 +998,7 @@ class StreamingSpec extends SparkFunSuite {
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainPhraseBigrams(
       input.toDS().toDF("doc_id", "text"),
-      SignatureStore.streamPhraseBigramsDir(base))
+      SignatureStore.streamDir(SignatureStore.phraseBigramsDir(base)))
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       input.addData((2L, "zeta eta"), (3L, "theta iota"))
@@ -1013,14 +1013,14 @@ class StreamingSpec extends SparkFunSuite {
     assert(after == before)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
-      SignatureStore.streamPhraseBigramsDir(base))),
+      SignatureStore.streamDir(SignatureStore.phraseBigramsDir(base)))),
       "compaction must drop the stream subtree")
     // a compacted store keeps taking appends: a NEW stream version of a
     // sealed doc still supersedes its batch rows
     val input2 = MemoryStream[(Long, String)]
     val query2 = EventStream.maintainPhraseBigrams(
       input2.toDS().toDF("doc_id", "text"),
-      SignatureStore.streamPhraseBigramsDir(base))
+      SignatureStore.streamDir(SignatureStore.phraseBigramsDir(base)))
       .option("checkpointLocation", s"$base/_ckpt2").start()
     try {
       input2.addData((2L, "mu nu"))
@@ -1049,7 +1049,7 @@ class StreamingSpec extends SparkFunSuite {
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainFrameDiffs(
       input.toDS().toDF("doc_id", "text"),
-      SignatureStore.streamFrameDiffDir(base))
+      SignatureStore.streamDir(SignatureStore.frameDiffDir(base)))
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       input.addData((2L, vid('d', 3)), (3L, vid('e', 2)))
@@ -1081,7 +1081,7 @@ class StreamingSpec extends SparkFunSuite {
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainFrameDiffs(
       input.toDS().toDF("doc_id", "text"),
-      SignatureStore.streamFrameDiffDir(base))
+      SignatureStore.streamDir(SignatureStore.frameDiffDir(base)))
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       // both versions of doc 7 in the SAME batch: batch_id can't
@@ -1117,7 +1117,7 @@ class StreamingSpec extends SparkFunSuite {
     val query = EventStream.maintainIvfAssignments(
       input.toDS().toDF("vec_id", "seed")
         .select(col("vec_id"), udf((s: Int) => vec(s)).apply(col("seed")).as("embedding")),
-      SignatureStore.streamIvfDir(base), centroids)
+      SignatureStore.streamDir(SignatureStore.ivfDir(base)), centroids)
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       input.addData((11L, 0), (12L, 1))
@@ -1132,14 +1132,14 @@ class StreamingSpec extends SparkFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(after == before)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamIvfDir(base))),
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(SignatureStore.streamDir(SignatureStore.ivfDir(base)))),
       "compaction must drop the stream subtree")
     // a compacted store keeps taking appends
     val input2 = MemoryStream[(Long, Int)]
     val query2 = EventStream.maintainIvfAssignments(
       input2.toDS().toDF("vec_id", "seed")
         .select(col("vec_id"), udf((s: Int) => vec(s)).apply(col("seed")).as("embedding")),
-      SignatureStore.streamIvfDir(base), centroids)
+      SignatureStore.streamDir(SignatureStore.ivfDir(base)), centroids)
       .option("checkpointLocation", s"$base/_ckpt2").start()
     try {
       input2.addData((10L, 1))
@@ -1168,7 +1168,7 @@ class StreamingSpec extends SparkFunSuite {
       when(col("img_src") === 999L, lit(10L)).otherwise(col("img_src")).as("doc_id"),
       udf((id: Long) => Multimodal.pngPayload(id)).apply(col("img_src")).as("payload"))
     val query = EventStream.maintainImagePhash(
-      assets, SignatureStore.streamImagePhashDir(base))
+      assets, SignatureStore.streamDir(SignatureStore.imagePhashDir(base)))
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       input.addData(999L, 12L)
@@ -1197,7 +1197,7 @@ class StreamingSpec extends SparkFunSuite {
     // including a superseded older emission for user 7
     val input = MemoryStream[EventStream.TransEvent]
     val query = EventStream.maintainTransitions(
-      input.toDS(), SignatureStore.streamEventTransitionsDir(base))
+      input.toDS(), SignatureStore.streamDir(SignatureStore.eventTransitionsDir(base)))
       .option("checkpointLocation", s"$base/_ckpt").start()
     try {
       input.addData(EventStream.TransEvent(7L, 1L, "view", 100L))
