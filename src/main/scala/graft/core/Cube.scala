@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.meta.{CubePlanner, MetadataCrawler}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A datacube: two DataFrames plus cube-level attrs.
@@ -14,9 +14,15 @@ import org.apache.spark.sql.functions._
   *   - `attrs`   — cube-level attributes (product_type, dtype, dims).
   *
   * Layers stay tiny (one row per image — driver-safe to collect); pixels
-  * are never collected, only transformed/written. Point queries filter on
-  * `band_index`, which the parquet layout partitions by, so per-product
-  * reads prune to one band's files.
+  * are never collected, only transformed/written. The keyed accessors
+  * (`productIndex`, `metadataByIndex` / `metadataByProduct` /
+  * `getMetadata`, `allProducts`, `dimensions("Band")`) read a
+  * driver-resident layer index built on first use: `layers` collected
+  * once, one row per layer, so a lookup after the first runs no Spark job
+  * of its own. The index is a snapshot per `Cube` instance (`copy` and
+  * every derived cube build their own); re-`load` to see a rewritten
+  * store. Pixel reads filter on `band_index`, which the parquet layout
+  * partitions by, so per-product reads prune to one band's files.
   */
 final case class Cube(
     layers: DataFrame,
@@ -25,42 +31,47 @@ final case class Cube(
 ) {
   import Cube._
 
+  /** Built on first keyed access; see the header. */
+  private lazy val index = new LayerIndex(layers)
+
+  /** The layer rows in band order, from the index. */
+  private[graft] def layerRows: IndexedSeq[Row] = index.rows
+
   /** Q1: data variable names (datacube.py:41-45). */
   def dataVariables: Seq[String] =
     pixels.columns.filterNot(Seq("band_index", "band_time", "azimuth", "range").contains).toSeq
 
-  /** Q2: dimension sizes (datacube.py:62-67). */
-  def dimensions: Map[String, Long] = Map(
-    "Band" -> layers.count(),
-    "Azimuth" -> attrs.get("master_azimuth").map(_.toLong).getOrElse(
-      pixels.agg(max(col("azimuth"))).first() match { case r if r.isNullAt(0) => 0L; case r => r.getInt(0) + 1L }),
-    "Range" -> attrs.get("master_range").map(_.toLong).getOrElse(
-      pixels.agg(max(col("range"))).first() match { case r if r.isNullAt(0) => 0L; case r => r.getInt(0) + 1L }),
-  )
+  /** Q2: dimension sizes (datacube.py:62-67). Band comes from the layer
+    * index; a grid side missing from the attrs costs one pixel aggregate,
+    * shared by both sides. */
+  def dimensions: Map[String, Long] = {
+    lazy val extent = pixels.agg(max(col("azimuth")), max(col("range"))).first()
+    def side(attr: String, i: Int): Long = attrs.get(attr).map(_.toLong)
+      .getOrElse(if (extent.isNullAt(i)) 0L else extent.getInt(i) + 1L)
+    Map(
+      "Band" -> index.rows.size.toLong,
+      "Azimuth" -> side("master_azimuth", 0),
+      "Range" -> side("master_range", 1),
+    )
+  }
 
   /** Q3: cube attrs (datacube.py:69-74). */
   def cubeMetadata: Map[String, String] = attrs
 
   /** Q4: ordered product list; error when all gaps (datacube.py:84-97). */
   def allProducts: Seq[String] = {
-    val products = layers.orderBy("band_index")
-      .select(coalesce(col("product_file"), lit(NoneValue)))
-      .collect().map(_.getString(0)).toSeq
+    val products = index.rows.map(r => Option(r.getString(index.productCol)).getOrElse(NoneValue))
     if (products.forall(_ == NoneValue)) {
       throw new NoSuchElementException("product files metadata is missing from the cube")
     }
     products
   }
 
-  /** Q5: band index of a product (datacube.py:99-119). */
-  def productIndex(productFile: String): Int = {
-    val rows = layers.filter(col("product_file") === productFile)
-      .select(col("band_index")).limit(1).collect()
-    if (rows.isEmpty) {
-      throw new NoSuchElementException(s"product_file: $productFile is missing from cube metadata")
-    }
-    rows.head.getInt(0)
-  }
+  /** Q5: band index of a product (datacube.py:99-119); a repeated name
+    * resolves to its lowest band. */
+  def productIndex(productFile: String): Int =
+    index.byProduct.getOrElse(productFile,
+      throw new NoSuchElementException(s"product_file: $productFile is missing from cube metadata"))
 
   /** Q6/Q8: per-product metadata with "None" fill for missing keys
     * (datacube.py:121-136; "None" padding sar_datacube.py:171-186). */
@@ -70,8 +81,8 @@ final case class Cube(
   }
 
   def metadataByIndex(bandIndex: Int): Map[String, String] = {
-    val row = layers.filter(col("band_index") === bandIndex).collect().headOption
-      .getOrElse(throw new NoSuchElementException(s"no layer at band index $bandIndex"))
+    val row = index.byBand.getOrElse(bandIndex,
+      throw new NoSuchElementException(s"no layer at band index $bandIndex"))
     val core = MetadataCrawler.SupportedVariables.map { v =>
       val i = row.fieldIndex(v)
       v -> (if (row.isNullAt(i)) NoneValue else String.valueOf(row.get(i)))
@@ -227,8 +238,9 @@ final case class Cube(
     * ⇒ NaN, int dtype ⇒ 0; stored sparse as null until this call.
     */
   def densePixels: DataFrame = {
-    val az = dimensions("Azimuth")
-    val rg = dimensions("Range")
+    val dims = dimensions
+    val az = dims("Azimuth")
+    val rg = dims("Range")
     val spark = pixels.sparkSession
     val grid = spark.range(az).select(col("id").cast("int").as("azimuth"))
       .crossJoin(spark.range(rg).select(col("id").cast("int").as("range")))
@@ -266,6 +278,19 @@ object Cube {
     * (datacube.py:203-212 output; read-back datacube.py:30-39). */
   def fromNetcdf(spark: SparkSession, path: String): Cube =
     graft.io.Netcdf.readCube(spark, path)
+
+  /** The layers table collected once (one job: no `orderBy`, so no
+    * range-partition sampling pass) and sorted by band on the driver.
+    * `byBand` keeps the first row per band, `byProduct` the lowest band
+    * per product name; null names are not indexed. */
+  private final class LayerIndex(layers: DataFrame) {
+    private val band = layers.schema.fieldIndex("band_index")
+    val rows: IndexedSeq[Row] = layers.collect().toIndexedSeq.sortBy(_.getInt(band))
+    lazy val productCol: Int = layers.schema.fieldIndex("product_file")
+    lazy val byBand: Map[Int, Row] = rows.reverseIterator.map(r => r.getInt(band) -> r).toMap
+    lazy val byProduct: Map[String, Int] = rows.reverseIterator.filterNot(_.isNullAt(productCol))
+      .map(r => r.getString(productCol) -> r.getInt(band)).toMap
+  }
 
   private[graft] def mergeAttrMaps(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     // drop_conflicts: key in both with different value → dropped

@@ -123,11 +123,12 @@ object NetcdfWriter {
 
   def write(cube: Cube, path: String): Unit = {
     // --- layer metadata (layer-cardinality: driver-safe, like the ref) ---
-    val layerRows = cube.layers.orderBy("band_index").collect()
+    val layerRows = cube.layerRows
     val nBands = layerRows.length
     require(nBands > 0, "cannot export an empty cube to netCDF")
-    val az = cube.dimensions("Azimuth").toInt
-    val rg = cube.dimensions("Range").toInt
+    val dims = cube.dimensions
+    val az = dims("Azimuth").toInt
+    val rg = dims("Range").toInt
 
     // single-file export streams every band plane THROUGH THE DRIVER
     // (inherent to the one-writer .nc format — same as the reference's
@@ -154,7 +155,7 @@ object NetcdfWriter {
     val bandMicros: Array[Long] = layerRows.map { r =>
       val ts = r.getTimestamp(r.fieldIndex("band_time"))
       ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000L
-    }
+    }.toArray
 
     // dict-of-lists attrs: core supported variables + open metadata keys,
     // one "None"-padded string per band (concat_metadata shape)

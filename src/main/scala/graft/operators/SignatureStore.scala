@@ -204,9 +204,8 @@ object SignatureStore {
   /** Both sides of face `dir`, projected to `cols` (no projection when
     * `cols` is empty): the cached batch relation when it holds data,
     * and the stream subtree when it holds data, with its `batch_id`
-    * cast to long for the latest-wins readers. A batch dir without data
-    * first restores a parked `_bak` ([[recoverFromBak]]) — only then,
-    * so the memoized batch-only path makes no filesystem call.
+    * cast to long for the latest-wins readers. The batch side is
+    * probed with [[hasSealedData]], which restores a parked `_bak`.
     *
     * Sides are admitted only when they hold at least one DATA file: a
     * micro-batch where every row was gated away writes a directory
@@ -215,9 +214,7 @@ object SignatureStore {
   private def layers(spark: SparkSession, dir: String, cols: Column*): Layers = {
     def project(df: DataFrame, extra: Column*) =
       if (cols.isEmpty) df else df.select(cols ++ extra: _*)
-    val batch = Option.when(hasData(spark, dir) ||
-        (recoverFromBak(spark, dir) && hasData(spark, dir)))(
-      project(readSealed(spark, dir)))
+    val batch = Option.when(hasSealedData(spark, dir))(project(readSealed(spark, dir)))
     val stream = Option.when(hasData(spark, streamDir(dir)))(project(
       spark.read.parquet(streamDir(dir)).withColumn("batch_id", col("batch_id").cast("long")),
       col("batch_id")))
@@ -308,6 +305,22 @@ object SignatureStore {
       graft.util.Tables.evict(dest)
     }
     parked
+  }
+
+  /** [[hasData]] for a batch face, first restoring a parked `_bak`
+    * ([[recoverFromBak]]) when `dir` holds no data — only then, so the
+    * memoized path makes no filesystem call. [[layers]] and
+    * [[readBatch]] probe every batch face they read through it. */
+  private def hasSealedData(spark: SparkSession, dir: String): Boolean =
+    hasData(spark, dir) || (recoverFromBak(spark, dir) && hasData(spark, dir))
+
+  /** The cached relation of batch face `dir`, read under the
+    * [[hasSealedData]] rule — for the batch faces a reader opens
+    * without [[layers]]: the doclens beside the postings, and the
+    * batch-only span read. */
+  private def readBatch(spark: SparkSession, dir: String): DataFrame = {
+    hasSealedData(spark, dir)
+    readSealed(spark, dir)
   }
 
   /** Does `dir` hold at least one DATA file? (A micro-batch where every
@@ -737,7 +750,7 @@ object SignatureStore {
     * LATEST-WINS (newest batch's grams replace older versions — same
     * contract as the bm25/q8 stores). */
   def readSpans(spark: SparkSession, base: String): DataFrame =
-    if (!hasData(spark, streamDir(spanGramsDir(base)))) readSealed(spark, spansDir(base))
+    if (!hasData(spark, streamDir(spanGramsDir(base)))) readBatch(spark, spansDir(base))
     else TextQueries.spansFromGrams(latestGrams(spark, base))
 
   /** The latest-wins positioned-gram table (doc_id, pos, gram) over the
@@ -1234,7 +1247,7 @@ object SignatureStore {
     val l = layers(spark, bm25PostingsDir(base))
     val stream = l.stream.map(_.select("doc_id", "token", "tf", "dl", "batch_id"))
     val lens = Layers(bm25DoclensDir(base),
-      l.batch.map(_ => readSealed(spark, bm25DoclensDir(base))),
+      l.batch.map(_ => readBatch(spark, bm25DoclensDir(base))),
       stream.map(_.select("doc_id", "dl", "batch_id")))
     (docLatestWins(l.copy(stream = stream)), docLatestWins(lens)) match {
       case (Some(p), Some(d)) => (p, d)

@@ -135,4 +135,130 @@ class CubeSpec extends SparkFunSuite {
     assert(vals.head == Fixtures.pixelValue(0, 0, 0))
     assert(vals.length == 100)
   }
+
+  /** Spark jobs `f` starts on this thread (a job group, read back from
+    * the status tracker once the listener bus has drained). */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"cubespec-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "CubeSpec job count")
+    try f finally sc.clearJobGroup()
+    org.apache.spark.GraftBusDrain.drain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  private def loadedGrd(): Cube = {
+    val out = tmpDir("servecube")
+    CubeWriter.write(Cube.fromDirectory(spark, grdDir, CubeConfig()), out)
+    Cube.load(spark, out)
+  }
+
+  test("a warm lookup on a loaded cube runs one Spark job: the pixel read") {
+    val cube = loadedGrd()
+    val p = Fixtures.grdProducts.head.name
+    cube.productValues(p).collect()
+    cube.metadataByProduct(p)
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    var md = Map.empty[String, String]
+    var idx = -1
+    var orbit = ""
+    assert(jobsOf {
+      rows = cube.productValues(p).collect()
+      md = cube.metadataByProduct(p)
+      idx = cube.productIndex(p)
+      orbit = cube.getMetadata("orbit_direction", idx)
+    } == 1)
+    assert(rows.length == 100 && md("product_file") == p && idx == 1 && orbit == "ASCENDING")
+    // the other keyed accessors start no job once the index is built
+    assert(jobsOf {
+      cube.allProducts
+      cube.dimensions("Band")
+      cube.metadataByIndex(0)
+    } == 0)
+  }
+
+  test("dimensions without master_* attrs costs one pixel aggregate") {
+    val cube = loadedGrd()
+    val bare = cube.copy(attrs = cube.attrs -- Seq("master_azimuth", "master_range"))
+    bare.allProducts // builds bare's own index
+    var dims = Map.empty[String, Long]
+    val jobs = jobsOf { dims = bare.dimensions }
+    assert(dims == Map("Band" -> 3L, "Azimuth" -> 10L, "Range" -> 10L))
+    assert(jobs == jobsOf { bare.pixels.agg(max(col("azimuth"))).first() })
+  }
+
+  test("layer index answers match filters on the layers table, fixture and gap-filled cubes") {
+    val gapCfg = CubeConfig.fromJsonString(
+      """{"start_date": 20210426, "end_date": 20210528, "temporal_resolution": 1}""")
+    for (cube <- Seq(Cube.fromDirectory(spark, grdDir, CubeConfig()), loadedGrd(),
+        Cube.fromDirectory(spark, grdDir, gapCfg))) {
+      val layers = cube.layers
+      assert(cube.dimensions("Band") == layers.count())
+      assert(cube.allProducts == layers.orderBy("band_index")
+        .select(coalesce(col("product_file"), lit(Cube.NoneValue))).collect().map(_.getString(0)).toSeq)
+      val products = layers.filter(col("product_file").isNotNull)
+        .select("product_file").collect().map(_.getString(0))
+      assert(products.length == 3)
+      for (p <- products) {
+        val want = layers.filter(col("product_file") === p).agg(min("band_index")).first().getInt(0)
+        assert(cube.productIndex(p) == want)
+        assert(cube.metadataByProduct(p) == cube.metadataByIndex(want))
+      }
+      for (b <- layers.select("band_index").collect().map(_.getInt(0))) {
+        val row = layers.filter(col("band_index") === b).collect().head
+        val core = graft.meta.MetadataCrawler.SupportedVariables.map { v =>
+          v -> Option(row.get(row.fieldIndex(v))).map(String.valueOf).getOrElse(Cube.NoneValue)
+        }.toMap
+        val want = core ++ Option(row.getAs[Map[String, String]]("metadata")).getOrElse(Map.empty)
+        assert(cube.metadataByIndex(b) == want, s"band $b")
+        want.foreach { case (k, v) => assert(cube.getMetadata(k, b) == v) }
+        assert(cube.getMetadata("nonexistent_key", b) == Cube.NoneValue)
+      }
+    }
+  }
+
+  test("a repeated product name resolves to its lowest band index") {
+    val cube = Cube.fromDirectory(spark, grdDir, CubeConfig())
+    val Seq(p0, p1, _) = cube.allProducts
+    // band 2 renamed to band 1's product; rows collected highest band first
+    val dup = cube.copy(layers = cube.layers
+      .withColumn("product_file", when(col("band_index") === 2, lit(p1)).otherwise(col("product_file")))
+      .orderBy(desc("band_index")))
+    assert(dup.productIndex(p1) == 1)
+    assert(dup.metadataByProduct(p1) == cube.metadataByIndex(1))
+    assert(dup.allProducts == Seq(p0, p1, p1))
+  }
+
+  test("a gap band is not found by name; missing products and bands keep their errors") {
+    val gapCfg = CubeConfig.fromJsonString(
+      """{"start_date": 20210426, "end_date": 20210528, "temporal_resolution": 1}""")
+    val cube = Cube.fromDirectory(spark, grdDir, gapCfg)
+    assert(cube.layers.filter(col("band_index") === 0).first().isNullAt(
+      cube.layers.schema.fieldIndex("product_file")))
+    def missing(f: => Any): String = intercept[NoSuchElementException](f).getMessage
+    assert(missing(cube.productIndex(null)) == "product_file: null is missing from cube metadata")
+    assert(missing(cube.productIndex(Cube.NoneValue)) == "product_file: None is missing from cube metadata")
+    assert(missing(cube.productIndex("missing.tif")) == "product_file: missing.tif is missing from cube metadata")
+    assert(missing(cube.metadataByProduct("missing.tif")) == "product_file: missing.tif is missing from cube metadata")
+    assert(missing(cube.productValues("missing.tif")) == "product_file: missing.tif is missing from cube metadata")
+    assert(missing(cube.metadataByIndex(33)) == "no layer at band index 33")
+    assert(missing(cube.getMetadata("product_file", -1)) == "no layer at band index -1")
+    val allGaps = cube.copy(layers = cube.layers.withColumn("product_file", lit(null).cast("string")))
+    assert(missing(allGaps.allProducts) == "product files metadata is missing from the cube")
+  }
+
+  test("cube.copy(layers = ...) sees the new layers") {
+    val cube = Cube.fromDirectory(spark, grdDir, CubeConfig())
+    val p = cube.allProducts.head
+    assert(cube.productIndex(p) == 0) // cube's index is built
+    val renamed = cube.copy(layers = cube.layers
+      .withColumn("product_file", when(col("band_index") === 0, lit("renamed.tif")).otherwise(col("product_file"))))
+    assert(renamed.productIndex("renamed.tif") == 0)
+    assert(renamed.getMetadata("product_file", 0) == "renamed.tif")
+    intercept[NoSuchElementException](renamed.productIndex(p))
+    val fewer = cube.copy(layers = cube.layers.filter(col("band_index") < 2))
+    assert(fewer.dimensions("Band") == 2L && fewer.allProducts.size == 2)
+    // the source cube keeps its own snapshot
+    assert(cube.productIndex(p) == 0 && cube.dimensions("Band") == 3L)
+  }
 }

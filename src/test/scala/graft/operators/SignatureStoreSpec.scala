@@ -209,4 +209,51 @@ class SignatureStoreSpec extends SparkFunSuite {
     assert(cells(SignatureStore.readCountMin(spark, base)) == want)
     assert(!new java.io.File(SignatureStore.streamDir(dir)).exists())
   }
+
+  test("a bm25 compaction that crashed after parking the doclens face still serves every doc length") {
+    import spark.implicits._
+    val base = tmpDir("bm25park")
+    val lensDir = SignatureStore.bm25DoclensDir(base)
+    val batchDocs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text")
+    val streamDocs = Seq((3L, "alpha delta")).toDF("doc_id", "text")
+    val want = Set((1L, 3L), (2L, 2L), (3L, 2L))
+    def lens() = SignatureStore.readBm25(spark, base)._2.select("doc_id", "dl").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the state compactBm25 leaves between parking the live doclens face
+    // (swapped first) and renaming its resolved tmp in: doclens at `_bak`,
+    // both tmps complete, postings and the stream subtree still live
+    SearchQueries.postingsOf(batchDocs).write.parquet(SignatureStore.bm25PostingsDir(base))
+    SearchQueries.doclensOf(batchDocs).write.parquet(lensDir + "_bak")
+    SearchQueries.doclensOf(batchDocs.unionByName(streamDocs)).write.parquet(lensDir + "_compact_tmp")
+    SearchQueries.postingsOf(batchDocs.unionByName(streamDocs))
+      .write.parquet(SignatureStore.bm25PostingsDir(base) + "_compact_tmp")
+    graft.streaming.EventStream.postingsEpoch(streamDocs, 0L, base)
+    assert(lens() == want, "the reader must restore the parked doclens face")
+    // and a re-run of the seal completes the compaction with the same rows
+    SignatureStore.compactBm25(spark, base)
+    assert(lens() == want)
+    assert(!new java.io.File(SignatureStore.streamDir(SignatureStore.bm25PostingsDir(base))).exists())
+  }
+
+  test("a span face parked at _bak by a crashed swap is restored by the batch-only span read") {
+    import spark.implicits._
+    val base = tmpDir("spanpark")
+    val docs = Seq(
+      (1L, "one two three four five six seven eight nine"),
+      (2L, "zero one two three four five six seven eight"),
+      (3L, "an unrelated document with words nobody else uses at all")).toDF("doc_id", "text")
+    val grams = TextQueries.positionedGrams8(docs)
+    def spanSet(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "span_start", "span_end").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val want = spanSet(TextQueries.spansFromGrams(grams))
+    assert(want.map(_._1) == Set(1L, 2L))
+    // live span dir missing, its sealed state parked at `_bak`, the gram
+    // face live, no stream grams: readSpans takes the batch-only path
+    grams.write.parquet(SignatureStore.spanGramsDir(base))
+    TextQueries.spansFromGrams(grams).write.parquet(SignatureStore.spansDir(base) + "_bak")
+    assert(spanSet(SignatureStore.readSpans(spark, base)) == want,
+      "the reader must restore the parked span face")
+    assert(new java.io.File(SignatureStore.spansDir(base)).exists())
+    assert(!new java.io.File(SignatureStore.spansDir(base) + "_bak").exists())
+  }
 }
