@@ -15,9 +15,11 @@ import org.apache.spark.sql.functions._
   *   3. driver: collect the SURVIVING file list (layer cardinality — this
   *      is the reference's metadata-before-pixels optimization: pruned
   *      files are never opened);
-  *   4. cluster: ONE parquet scan over surviving files → pixels DF tagged
-  *      with band_index/band_time via a broadcast join. Layers are "born
-  *      distributed" — no per-layer driver loop, no xr.concat.
+  *   4. cluster: ONE scan per payload format over surviving files
+  *      (rasters through the `graft-tiff`/`graft-slc` connector) →
+  *      pixels DF tagged with band_index/band_time via a broadcast join.
+  *      Layers are "born distributed" — no per-layer driver loop, no
+  *      xr.concat.
   */
 object CubeBuilder {
 
@@ -113,13 +115,18 @@ object CubeBuilder {
         val parts = byms.map { case (src, ps) => src.readPixels(spark, ps.toIndexedSeq) }
         // exact payload→product mapping built driver-side (payload may be
         // the product itself or a sidecar — no suffix-stripping guesswork).
-        // The executor-side `_fpath` comes from input_file_name()/binaryFile
-        // URIs, which percent-encode special characters (space, %, #) —
-        // key the mapping on the same encoded form so the join can never
-        // silently drop pixels for such paths.
+        // The executor-side `_fpath` differs by source: rasters carry the
+        // connector's `path` column (GraftRasterSource.pathKey — the bare,
+        // unencoded path), parquet/CSV carry input_file_name() URIs, which
+        // percent-encode special characters (space, %, #). Key the mapping
+        // on the same form as its source so the join can never silently
+        // drop pixels for such paths.
         // (toURI appends "/" to directories — parquet datasets are dirs)
-        val encode = (p: String) => new java.io.File(p).toURI.getRawPath.stripSuffix("/")
-        val payloadToProduct = payloads.map(encode).zip(survivors).toSeq.toDF("_fpath", "_ppath")
+        val fpathOf = (p: String) => CubeSource.forPath(p) match {
+          case _: RasterPixelSource => GraftRasterSource.pathKey(GraftRasterSource.qualify(p))
+          case _ => new java.io.File(p).toURI.getRawPath.stripSuffix("/")
+        }
+        val payloadToProduct = payloads.map(fpathOf).zip(survivors).toSeq.toDF("_fpath", "_ppath")
         val bandOf = layers.select(
           col("product_fpath").as("_ppath"), col("band_index"), col("band_time"))
         parts.reduce(_ unionByName _)

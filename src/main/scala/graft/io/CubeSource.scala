@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * SURVEY §2.11) — not scalar-function plugins. The Spark equivalent is
   * this trait: decode a set of product files into a long pixel DataFrame.
   * `CubeBuilder` routes each product to the source registered for its
-  * pixel-payload extension; adding a format (real TIFF/HDF5 decoders
-  * later) is one object + one registry entry, no builder changes.
+  * pixel-payload extension; adding a format is one object + one
+  * registry entry, no builder changes.
   */
 trait CubeSource {
   /** Payload extensions this source owns (e.g. "parquet", "csv"). */
@@ -53,81 +53,33 @@ object ParquetPixelSource extends CubeSource {
       .withColumn("_fpath", CubeSource.datasetPath(input_file_name(), "parquet"))
 }
 
-/** Real GRD rasters (S3): binary baseline TIFF decoded on executors.
-  *
-  * One `binaryFile` scan over all surviving rasters → per-file [[Tiff]]
-  * strip decode inside `flatMap` → long pixel rows. Parallelism is
-  * per-file, the same unit as the reference's per-raster dask graph
-  * (`grd_datacube.py:117-149`); at 100 TB the corpus is many files, so
-  * file-level fan-out saturates the cluster without a custom DataSource.
-  */
-object TiffPixelSource extends CubeSource {
-  override val extensions: Set[String] = Set("tif", "tiff")
+/** Raster payloads read through the shared DataSource V2 connector
+  * ([[GraftRasterSource]]): one connector scan over exactly the given
+  * files, so no other raster is opened or header-read. `_fpath` is the
+  * connector's `path` column ([[GraftRasterSource.pathKey]]). A raster
+  * is never split across tasks, the same unit as the reference's
+  * per-raster dask graph (`grd_datacube.py:117-149`,
+  * `slc_datacube.py:118-162`); small rasters share a task. */
+abstract class RasterPixelSource(format: RasterFormat) extends CubeSource {
+  override val extensions: Set[String] = format.extensions
 
-  override def readPixels(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (uri, bytes) =>
-        val fpath = uri.replaceFirst("^file:/+", "/")
-        val info = Tiff.fromBytes(bytes)
-        Tiff.decode(bytes, info).map { case (az, rg, v) => (az, rg, v, fpath) }
-      }
-      .toDF("azimuth", "range", "intensity", "_fpath")
-  }
+  override def readPixels(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.format(format.provider).load(paths: _*)
+      .withColumnRenamed("path", "_fpath")
 
-  /** Master dtype from the first raster's real header — a few seeks, no
-    * pixel read (get_master_dtype, grd_datacube.py:151-159). */
-  override def masterDtype(path: String): Option[String] =
-    Some(Tiff.readHeader(path).dtype)
+  /** Master dtype from the raster's own header — a few seeks, no pixel
+    * read (get_master_dtype, grd_datacube.py:151-159). */
+  override def masterDtype(path: String): Option[String] = Some(
+    GraftRasterSource.withHeader(format, GraftRasterSource.qualify(path))(_.dtype))
 }
 
-/** Real SLC rasters (S4): HDF5 `s_i`/`s_q` complex pair decoded on
-  * executors — one binaryFile scan, per-file [[Hdf5]] parse in flatMap
-  * (`slc_datacube.py:118-162`). Shape enforcement against the master
-  * shape happens at the metadata level in CubeBuilder. */
-object SlcH5Source extends CubeSource {
-  override val extensions: Set[String] = Set("h5")
+/** Real GRD rasters (S3): baseline/compressed TIFF strips and tiles. */
+object TiffPixelSource extends RasterPixelSource(RasterFormat.Grd)
 
-  override def readPixels(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (uri, bytes) =>
-        val fpath = uri.replaceFirst("^file:/+", "/")
-        val f = Hdf5.fromBytes(bytes)
-        val entries = f.rootEntries.toMap
-        val si = f.dataset("s_i", entries.getOrElse("s_i",
-          throw new IllegalArgumentException(s"no s_i dataset in $fpath")))
-        val sq = f.dataset("s_q", entries.getOrElse("s_q",
-          throw new IllegalArgumentException(s"no s_q dataset in $fpath")))
-        val re = f.readDoubles(si)
-        val im = f.readDoubles(sq)
-        require(si.dims.size == 2 && si.dims == sq.dims,
-          s"s_i/s_q must be matching 2-D datasets in $fpath")
-        val rg = si.dims(1).toInt
-        re.indices.iterator.map(i => (i / rg, i % rg, re(i), im(i), fpath))
-      }
-      .toDF("azimuth", "range", "real", "imag", "_fpath")
-  }
-
-  /** Master dtype from s_i's real datatype message — header seeks only
-    * (get_master_dtype twin, slc_datacube.py:257-277). */
-  override def masterDtype(path: String): Option[String] = {
-    val (f, raf) = Hdf5.open(path)
-    try {
-      f.rootEntries.toMap.get("s_i").map { a =>
-        f.dataset("s_i", a).dtype match {
-          case Hdf5.FixedPoint(size, signed, _) => (if (signed) "int" else "uint") + (size * 8)
-          case Hdf5.FloatPoint(size, _)         => "float" + (size * 8)
-          case t => throw new IllegalArgumentException(s"unexpected s_i dtype $t in $path")
-        }
-      }
-    } finally raf.close()
-  }
-}
+/** Real SLC rasters (S4): the HDF5 `s_i`/`s_q` complex pair. Shape
+  * enforcement against the master shape happens at the metadata level
+  * in CubeBuilder. */
+object SlcH5Source extends RasterPixelSource(RasterFormat.Slc)
 
 /** CSV payloads with a header row; numeric columns are cast to the
   * canonical pixel schema. */

@@ -78,14 +78,14 @@ object Tiff {
   type ReadAt = (Long, Int) => Array[Byte]
 
   def fromBytes(data: Array[Byte]): Info =
-    parse((off, len) => java.util.Arrays.copyOfRange(data, off.toInt, off.toInt + len))
+    readHeader((off, len) => java.util.Arrays.copyOfRange(data, off.toInt, off.toInt + len))
 
   /** Header-only read: a handful of small seeks via RandomAccessFile —
     * never touches the strip payload. */
   def readHeader(path: String): Info = {
     val raf = new java.io.RandomAccessFile(path, "r")
     try {
-      parse { (off, len) =>
+      readHeader { (off, len) =>
         val buf = new Array[Byte](len)
         raf.seek(off)
         raf.readFully(buf)
@@ -94,7 +94,9 @@ object Tiff {
     } finally raf.close()
   }
 
-  private def parse(read: ReadAt): Info = {
+  /** Header parse through any positional reader (the raster connector
+    * hands in reads through the Hadoop FileSystem). */
+  def readHeader(read: ReadAt): Info = {
     val head = read(0L, 8)
     val le = head(0) == 'I' && head(1) == 'I'
     require(le || (head(0) == 'M' && head(1) == 'M'),
@@ -231,7 +233,7 @@ object Tiff {
 
   /** Row-bounded decode: only strips/tiles whose row range intersects
     * [rowLo, rowHi] are DECOMPRESSED at all — the block-pruning hook the
-    * DataSource V2 scan ([[GraftTiffSource]]) pushes azimuth predicates
+    * DataSource V2 scan ([[GraftRasterSource]]) pushes azimuth predicates
     * into. Blocks are the TIFF's own IO unit, so this is the binary
     * analog of parquet row-group pruning. Emitted rows are exactly
     * `decode(...)` filtered to the bounds. */

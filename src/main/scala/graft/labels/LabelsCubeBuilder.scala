@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core.{Cube, CubeConfig}
+import graft.io.ParquetPixelSource
 import graft.meta.{CubePlanner, MetadataCrawler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -120,21 +121,19 @@ object LabelsCubeBuilder {
             "azimuth INT, range INT, label DOUBLE, band_index INT, band_time TIMESTAMP"))
       } else {
         // S9: one distributed scan per payload format, tagged per band.
-        // input_file_name() yields file:///… URIs; normalize both sides to
-        // plain paths before the equi-join.
-        val normalize = (c: org.apache.spark.sql.Column) => regexp_replace(c, "^file:/+", "/")
+        // Parquet masks arrive tagged with ParquetPixelSource's `_fpath`
+        // (file: prefix stripped); strip it from the layer side too
+        // before the equi-join.
         val (pngPaths, parquetPaths) = maskPaths.partition(_.toLowerCase.endsWith(".png"))
         val parts = Seq(
-          Option(parquetPaths).filter(_.nonEmpty).map { ps =>
-            spark.read.parquet(ps.toIndexedSeq: _*)
-              .withColumn("_mask_path",
-                normalize(regexp_extract(input_file_name(), "^(.*?\\.parquet)(/.*)?$", 1)))
-          },
+          Option(parquetPaths).filter(_.nonEmpty).map(ps =>
+            ParquetPixelSource.readPixels(spark, ps.toIndexedSeq)
+              .withColumnRenamed("_fpath", "_mask_path")),
           Option(pngPaths).filter(_.nonEmpty).map(ps => readPngMasks(spark, ps.toIndexedSeq)),
         ).flatten
         val raw = parts.reduce(_ unionByName _)
         val bandOf = withMask.filter(col("_mask_path").isNotNull)
-          .select(normalize(col("_mask_path")).as("_mask_path"),
+          .select(regexp_replace(col("_mask_path"), "^file:/+", "/").as("_mask_path"),
             col("band_index"), col("band_time"))
         raw.join(broadcast(bandOf), Seq("_mask_path")).drop("_mask_path")
       }

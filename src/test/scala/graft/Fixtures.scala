@@ -1433,6 +1433,41 @@ object Fixtures {
     Files.write(Paths.get(path), buf.array())
   }
 
+  /** The SLC stack's s_i/s_q only, stored in (2 × width)-row deflated
+    * chunks: every chunk holds two azimuth rows, so row pruning shows in
+    * the chunk reads. */
+  def writeChunkedH5Stack(dir: String): String = {
+    Files.createDirectories(Paths.get(dir))
+    slcProducts.zipWithIndex.foreach { case (p, idx) =>
+      val re = Array.tabulate(p.az * p.rg)(i => pixelValue(idx, i / p.rg, i % p.rg).toFloat)
+      writeH5(s"$dir/${p.name}", Seq(
+        "s_i" -> H5F32(Seq(p.az, p.rg), re, chunks = Some((2, p.rg)), deflate = true),
+        "s_q" -> H5F32(Seq(p.az, p.rg), re.map(-_), chunks = Some((2, p.rg)), deflate = true)))
+    }
+    dir
+  }
+
+  /** Every raster in `dir` decoded by the codecs from its local bytes,
+    * without Spark: per pixel `Seq(path, azimuth, range, values…)`, in
+    * the `graft-tiff` / `graft-slc` column order. */
+  def codecRows(dir: String): Seq[Seq[Any]] =
+    new java.io.File(dir).listFiles().toSeq.filter(_.isFile).sortBy(_.getName).flatMap { file =>
+      val path = file.getAbsolutePath
+      val bytes = Files.readAllBytes(file.toPath)
+      if (file.getName.endsWith(".h5")) {
+        val f = graft.io.Hdf5.fromBytes(bytes)
+        val entries = f.rootEntries.toMap
+        val si = f.dataset("s_i", entries("s_i"))
+        val re = f.readDoubles(si)
+        val im = f.readDoubles(f.dataset("s_q", entries("s_q")))
+        val rg = si.dims(1).toInt
+        re.indices.map(i => Seq[Any](path, i / rg, i % rg, re(i), im(i)))
+      } else {
+        graft.io.Tiff.decode(bytes, graft.io.Tiff.fromBytes(bytes))
+          .map { case (a, r, v) => Seq[Any](path, a, r, v) }.toSeq
+      }
+    }
+
   /** Write a directory of 3 real binary SLC HDF5 files (s_i/s_q float32
     * + metadata datasets, no sidecars). */
   def writeH5Stack(dir: String): String = {
