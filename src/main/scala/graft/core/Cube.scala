@@ -1,8 +1,10 @@
 package graft.core
 
-import graft.meta.{CubePlanner, MetadataCrawler}
+import graft.meta.MetadataCrawler
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** A datacube: two DataFrames plus cube-level attrs.
   *
@@ -19,9 +21,11 @@ import org.apache.spark.sql.functions._
   * `getMetadata`, `allProducts`, `dimensions("Band")`) read a
   * driver-resident layer index built on first use: `layers` collected
   * once, one row per layer, so a lookup after the first runs no Spark job
-  * of its own. The index is a snapshot per `Cube` instance (`copy` and
-  * every derived cube build their own); re-`load` to see a rewritten
-  * store. Pixel reads filter on `band_index`, which the parquet layout
+  * of its own. A freshly built cube's `layers` is the planner's local
+  * relation ([[graft.meta.CubePlanner.plan]]), so even the first lookup
+  * collects it without a job. The index is a snapshot per `Cube`
+  * instance (`copy` and every derived cube build their own); re-`load`
+  * to see a rewritten store. Pixel reads filter on `band_index`, which the parquet layout
   * partitions by, so per-product reads prune to one band's files.
   */
 final case class Cube(
@@ -195,33 +199,36 @@ final case class Cube(
 
   /** W2: metadata table export as XLSX (save_metadata_table_as_excel_table,
     * metadata_crawler.py:232-235) via the dependency-free [[graft.io.Xlsx]]
-    * writer. Driver-side: the table is layer-cardinality, as in the
-    * reference's pandas `to_excel`. */
+    * writer, from the layer rows in band order. The open-attrs map is
+    * written as a JSON object with sorted keys. Driver-side: the table is
+    * layer-cardinality, as in the reference's pandas `to_excel`. */
   def writeMetadataExcel(path: String): Unit = {
-    val flat = layers.withColumn("metadata", to_json(col("metadata")))
-    val header = flat.columns.toSeq
-    val rows = flat.orderBy("band_index").collect().toSeq.map(r =>
-      header.indices.map(i => Option(r.get(i)).map(String.valueOf).orNull))
+    val header = layers.columns.toSeq
+    val meta = header.indexOf("metadata")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rows = layerRows.map(r => header.indices.map { i =>
+      if (r.isNullAt(i)) null
+      else if (i == meta) json.writeValueAsString(new java.util.TreeMap(r.getMap[String, String](i).asJava))
+      else String.valueOf(r.get(i))
+    })
     graft.io.Xlsx.write(path, header, rows)
   }
 
   /** W2: image-id txt export (save_image_ids_as_txt,
     * metadata_crawler.py:243-252): one comma-separated line of image
-    * numbers in band order. The id comes from the `image_number` open
-    * attr when present, else the numeric field of the ICEYE product name
-    * (ICEYE_GRD_<image_number>_…). Layer-cardinality — a driver-side
-    * write, like the reference. */
+    * numbers in band order, from the layer rows. The id comes from the
+    * `image_number` open attr when present, else the numeric field of the
+    * ICEYE product name (ICEYE_GRD_<image_number>_…), else the whole
+    * product name. Gap bands are skipped. */
   def writeImageIdsTxt(path: String): Unit = {
-    val ids = layers.filter(col("product_file").isNotNull && col("product_file") =!= "None")
-      .orderBy("band_index")
-      // regexp_extract returns "" (not null) on no match — nullif it so
-      // non-ICEYE names fall through to the full product_file instead of
-      // emitting a blank id
-      .select(coalesce(
-        element_at(col("metadata"), "image_number"),
-        nullif(regexp_extract(col("product_file"), "^ICEYE_[A-Z]+_(\\d+)_", 1), lit("")),
-        col("product_file")))
-      .collect().map(_.getString(0))
+    val ids = layerRows.flatMap { r =>
+      Option(r.getAs[String]("product_file")).filter(_ != NoneValue).map { p =>
+        Option(r.getAs[scala.collection.Map[String, String]]("metadata"))
+          .flatMap(_.get("image_number")).flatMap(Option(_))
+          .orElse(IceyeImageNumber.findFirstMatchIn(p).map(_.group(1)))
+          .getOrElse(p)
+      }
+    }
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       ids.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
@@ -262,6 +269,8 @@ object Cube {
     * (sar_datacube.py:171-186). */
   val NoneValue = "None"
 
+  private val IceyeImageNumber = "^ICEYE_[A-Z]+_(\\d+)_".r
+
   /** Build from a fixture-layout directory (§3.1 facade path):
     * sniff product type, crawl metadata, run the planner, attach pixels.
     */
@@ -279,8 +288,9 @@ object Cube {
   def fromNetcdf(spark: SparkSession, path: String): Cube =
     graft.io.Netcdf.readCube(spark, path)
 
-  /** The layers table collected once (one job: no `orderBy`, so no
-    * range-partition sampling pass) and sorted by band on the driver.
+  /** The layers table collected once (one job, none for a local
+    * relation: no `orderBy`, so no range-partition sampling pass) and
+    * sorted by band on the driver.
     * `byBand` keeps the first row per band, `byProduct` the lowest band
     * per product name; null names are not indexed. */
   private final class LayerIndex(layers: DataFrame) {

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions.udf
   * 4-corner quads built by metadata_crawler.py:255-267, so a convex
   * polygon separating-axis test is sufficient and dependency-free.
   *
-  * Runs as a Scala UDF: the join side is layer-cardinality (one row per
-  * image), never pixel-cardinality, so codegen pressure is irrelevant —
-  * broadcast of the single primary row dominates.
+  * The planner calls [[wktIntersects]] on the driver; the KML AOI filter
+  * runs it as a Scala UDF. Both see layer-cardinality rows (one per
+  * image), never pixels, so codegen pressure is irrelevant.
   */
 object Geo {
 

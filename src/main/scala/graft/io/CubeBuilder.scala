@@ -5,20 +5,21 @@ import graft.meta.{CubePlanner, MetadataCrawler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Builds cubes from the fixture-layout source (FIXTURES.md §2): per
-  * product a `<name>.json` metadata object + `<name>.parquet` pixel table
-  * (GRD: azimuth,range,intensity; SLC: azimuth,range,real,imag).
+/** Builds cubes from product files: real rasters (GRD `.tif`, SLC `.h5`)
+  * or the fixture layout (FIXTURES.md §2: per product a `<name>.json`
+  * metadata object next to a pixel payload such as `<name>.parquet`).
   *
-  * Execution shape (SURVEY §3.1 steps 1-5, Spark-first):
+  * Execution shape (SURVEY §3.1 steps 1-5):
   *   1. driver: config + dir listing (tiny);
-  *   2. cluster: one JSON scan → layers DF; planner prunes it;
-  *   3. driver: collect the SURVIVING file list (layer cardinality — this
-  *      is the reference's metadata-before-pixels optimization: pruned
-  *      files are never opened);
+  *   2. cluster: one metadata crawl → layers DF;
+  *   3. driver: [[CubePlanner.plan]] collects the crawled layers once and
+  *      plans them (the reference's metadata-before-pixels optimization:
+  *      pruned files are never opened). The master shape, the SLC shape
+  *      check and the survivor list read the same planned rows;
   *   4. cluster: ONE scan per payload format over surviving files
   *      (rasters through the `graft-tiff`/`graft-slc` connector) →
-  *      pixels DF tagged with band_index/band_time via a broadcast join.
-  *      Layers are "born distributed" — no per-layer driver loop, no
+  *      pixels DF tagged with band_index/band_time via a broadcast join
+  *      against the planned layers — no per-layer driver loop, no
   *      xr.concat.
   */
 object CubeBuilder {
@@ -54,26 +55,23 @@ object CubeBuilder {
     val crawled =
       if (metadataPaths.forall(_.endsWith(".json"))) MetadataCrawler.crawlFiles(spark, metadataPaths)
       else MetadataCrawler.crawlRasterFiles(spark, metadataPaths)
-    val layers = new CubePlanner(config).plan(crawled).cache()
+    val layers = new CubePlanner(config).plan(crawled)
+    // the plan is a local relation in band order: reading it back runs no job
+    val rows = layers.collect()
+    val az = layers.schema.fieldIndex("number_of_azimuth_samples")
+    val rg = layers.schema.fieldIndex("number_of_range_samples")
+    val shaped = rows.filterNot(_.isNullAt(az))
 
     // master shape = first valid row by band order (get_master_shape,
     // sar_datacube_metadata.py:258-268)
-    val shapeRow = layers.filter(col("number_of_azimuth_samples").isNotNull)
-      .orderBy("band_index")
-      .select("number_of_azimuth_samples", "number_of_range_samples")
-      .limit(1).collect()
-    val (masterAz, masterRg) =
-      if (shapeRow.isEmpty) (0, 0) else (shapeRow.head.getInt(0), shapeRow.head.getInt(1))
+    val (masterAz, masterRg) = shaped.headOption.fold((0, 0))(r => (r.getInt(az), r.getInt(rg)))
 
     // SLC: mismatched layer shape is a hard error (slc_datacube.py:136-142);
     // GRD is tolerant. Metadata-level check — no pixel scan needed.
     if (productType == "SLC") {
-      val bad = layers.filter(col("number_of_azimuth_samples").isNotNull &&
-          (col("number_of_azimuth_samples") =!= masterAz || col("number_of_range_samples") =!= masterRg))
-        .select("product_file").limit(1).collect()
-      if (bad.nonEmpty) {
+      shaped.find(r => r.getInt(az) != masterAz || (!r.isNullAt(rg) && r.getInt(rg) != masterRg)).foreach { r =>
         throw new IllegalStateException(
-          s"SLC layer ${bad.head.getString(0)} shape does not match master shape ($masterAz, $masterRg)")
+          s"SLC layer ${r.getAs[String]("product_file")} shape does not match master shape ($masterAz, $masterRg)")
       }
     }
 
@@ -84,9 +82,7 @@ object CubeBuilder {
     // layout). Existence is resolved from ONE Hadoop `listStatus` per
     // parent directory — per-survivor existence probes serialize into
     // O(#layers) filesystem round-trips on an object store.
-    val survivors = layers.filter(col("product_fpath").isNotNull)
-      .orderBy("band_index")
-      .select("product_fpath").collect().map(_.getString(0))
+    val survivors = rows.flatMap(r => Option(r.getAs[String]("product_fpath")))
     val payloadExts = CubeSource.registry.flatMap(_.extensions)
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val present: Set[String] = survivors

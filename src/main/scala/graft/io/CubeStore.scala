@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions.col
   */
 object CubeWriter {
   def write(cube: Cube, dir: String): Unit = {
-    cube.layers.write.mode("overwrite").parquet(s"$dir/layers")
+    writeLayers(cube, dir)
     cube.pixels.write.mode("overwrite").partitionBy("band_index").parquet(s"$dir/pixels")
     writeAttrs(cube.attrs, dir)
   }
@@ -35,11 +35,17 @@ object CubeWriter {
     * on read. Long format is reconstructed lazily by
     * [[CubeReader.load]] via [[TiledPixels.untile]]. */
   def writeTiled(cube: Cube, dir: String, tileSize: Int): Unit = {
-    cube.layers.write.mode("overwrite").parquet(s"$dir/layers")
+    writeLayers(cube, dir)
     TiledPixels.tile(cube.pixels, tileSize)
       .write.mode("overwrite").partitionBy("band_index").parquet(s"$dir/pixels_tiled")
     writeAttrs(cube.attrs + ("tile_size" -> tileSize.toString), dir)
   }
+
+  /** One file: the layers table has layer cardinality, and a planned
+    * cube's layers are a local relation split over the default
+    * parallelism. */
+  private def writeLayers(cube: Cube, dir: String): Unit =
+    cube.layers.coalesce(1).write.mode("overwrite").parquet(s"$dir/layers")
 
   private def writeAttrs(attrs: Map[String, String], dir: String): Unit = {
     val json = new ObjectMapper().writeValueAsString(attrs.asJava)

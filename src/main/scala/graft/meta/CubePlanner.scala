@@ -1,189 +1,166 @@
 package graft.meta
 
+import java.time.{LocalDate, ZoneId}
+import java.time.format.{DateTimeFormatter, ResolverStyle}
+import java.time.temporal.ChronoUnit
+
+import scala.jdk.CollectionConverters._
+
 import graft.core.CubeConfig
 import graft.functions.Geo
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types.{IntegerType, StructType, TimestampType}
 
-/** The metadata "logical plan": the reference's
+/** The metadata plan: the reference's
   * `filter_metadata_df_as_per_configuration` pipeline
-  * (icecube/bin/sar_cube/sar_datacube_metadata.py:123-155) as composable
-  * DataFrame stages gated by config.
+  * (icecube/bin/sar_cube/sar_datacube_metadata.py:123-268) over the
+  * layers table, one row per image, before any pixel is read, so pruned
+  * files are never scanned.
   *
-  * This is the engine's core optimization, mirrored from the reference's
-  * design (docs/overview.md): every filter runs on the tiny layers table
-  * (one row per image) BEFORE any pixel I/O, so pruned files are never
-  * scanned — file-level partition pruning by construction.
-  *
-  * The all-null guards and uniqueness checks are driver-side count()s on
-  * the layers table; that table is layer-cardinality (≤ thousands of rows
-  * even at 100 TB of pixels), so these actions are O(images), not O(data).
+  * The reference runs it in pandas, and so does this planner in spirit:
+  * [[plan]] collects the crawled layers once and runs every stage on
+  * those rows on the driver. A build's plan therefore costs one Spark
+  * job whichever stages the config enables. The table has layer
+  * cardinality; README "Scale design" gives its driver-memory bound.
+  * The stage methods keep a `DataFrame => DataFrame` face for callers
+  * that compose them one at a time.
   */
 final class CubePlanner(config: CubeConfig) {
+  import CubePlanner._
 
-  /** Full pipeline: sort → date filter → angle filter → dedup → overlap →
-    * resample → non-empty assert → band index assignment. */
+  /** Full pipeline: date filter → angle filter → dedup → overlap →
+    * resample → non-empty assert → band order. Returns a local relation
+    * of the planned rows in band order, with `band_time` (midnight of
+    * `acquisition_date` in the session time zone, as `to_timestamp`) and
+    * `band_index` (0..n-1) appended. */
   def plan(layers: DataFrame): DataFrame = {
-    var df = layers
-
-    // F4 guard: filters skipped entirely when the column is all-null
+    var rows: Seq[Row] = layers.collect().toSeq
+    // F4 guard: a filter is skipped when its column is all-null
     // (sar_datacube_metadata.py:127,134) — all-null ⇒ keep all rows.
-    if (countNonNull(df, "acquisition_date") > 0) {
-      df = selectRequestedDates(df) // sort happens at the end; order is derived, not stored
-    }
-    if (countNonNull(df, "incidence_center") > 0) {
-      df = selectRequestedAngles(df)
-    }
-    if (!config.temporalOverlap && !datesUnique(df)) {
-      df = pruneTemporalOverlap(df)
-    }
-    if (config.spaceOverlap && !config.coregistered) {
-      df = selectOverlappingRasters(df)
-    }
-    if (config.temporalResolution != 0) {
-      df = setTemporalResolution(df)
-    }
-    assertNonEmpty(df)
-    withBandIndex(df)
-  }
-
-  private def countNonNull(df: DataFrame, c: String): Long =
-    df.agg(count(col(c))).first().getLong(0)
-
-  private def datesUnique(df: DataFrame): Boolean = {
-    val r = df.agg(count(col("acquisition_date")).as("n"),
-      countDistinct(col("acquisition_date")).as("d")).first()
-    r.getLong(0) == r.getLong(1)
-  }
-
-  /** F2: inclusive date-range filter (…:168-176). */
-  def selectRequestedDates(df: DataFrame): DataFrame =
-    df.filter(to_date(col("acquisition_date"), "yyyyMMdd")
-      .between(lit(java.sql.Date.valueOf(config.startDate)), lit(java.sql.Date.valueOf(config.endDate))))
-
-  /** F3: inclusive incidence-angle filter (…:178-183). */
-  def selectRequestedAngles(df: DataFrame): DataFrame =
-    df.filter(col("incidence_center").between(config.minIncidenceAngle, config.maxIncidenceAngle))
-
-  /** O2: per-date top-1 keeping max numeric acquisition_time (…:185-202).
-    * Canonical top-k-per-group window; product_file tiebreak for
-    * determinism (reference keeps first index on ties). */
-  def pruneTemporalOverlap(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("acquisition_date"))
-      .orderBy(col("acquisition_time").cast("double").desc, col("product_file").asc)
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
-
-  /** J1: spatial-overlap semi-join against the earliest raster's extent
-    * (…:204-222). Primary row is broadcast; intersection is the convex
-    * quad SAT test ([[Geo.stIntersects]]).
-    *
-    * The reference's no-secondary warning rides as a `Dataset.observe`
-    * counter instead of an eager count(): the row count accumulates
-    * DURING whatever action eventually consumes the filtered layers and
-    * a per-session QueryExecutionListener emits the warning — zero extra
-    * jobs on the build path (CubePlannerSpec pins the job count). One
-    * overlap filter per query tree (observe names must be unique in a
-    * plan) — true for every planner pipeline, which applies J1 once. */
-  def selectOverlappingRasters(df: DataFrame): DataFrame = {
-    val primary = df
-      .orderBy(col("acquisition_date").cast("long").asc_nulls_last, col("product_file"))
-      .limit(1)
-      .select(col("extent").as("_primary_extent"))
-    CubePlanner.registerOverlapWarnListener(df.sparkSession)
-    df.crossJoin(broadcast(primary))
-      .filter(Geo.stIntersects(col("extent"), col("_primary_extent")))
-      .drop("_primary_extent")
-      .observe(CubePlanner.OverlapMetric, count(lit(1)).as("n_kept"))
-  }
-
-  /** A3/J3: temporal resample + gap fill (…:224-256).
-    *
-    * pandas semantics replicated exactly: `asfreq(nD)` keeps rows aligned
-    * to the FIRST surviving date, then `reindex(date_range(start, end,
-    * nD))` re-grids from the configured start — a row survives only if its
-    * date sits on BOTH grids; every other grid date becomes an all-null
-    * gap row. Duplicate dates ⇒ error (…:232-236).
-    */
-  def setTemporalResolution(df: DataFrame): DataFrame = {
-    val n = config.temporalResolution
-    val dups = df.groupBy(col("acquisition_date")).count().filter(col("count") > 1).limit(1).count()
-    if (dups > 0) {
-      throw new IllegalStateException(
-        s"Duplicate entries found for configured temporal resolution: $n, please set temporal_overlap to false")
-    }
-    val grid = df.sparkSession.range(1).select(
-      explode(sequence(
-        lit(java.sql.Date.valueOf(config.startDate)),
-        lit(java.sql.Date.valueOf(config.endDate)),
-        expr(s"interval $n days"))).as("_grid_date"))
-
-    val firstDate = df.agg(min(to_date(col("acquisition_date"), "yyyyMMdd")).as("_first"))
-    val aligned = df
-      .crossJoin(broadcast(firstDate))
-      .withColumn("_d", to_date(col("acquisition_date"), "yyyyMMdd"))
-      .filter(datediff(col("_d"), col("_first")) % n === 0)
-      .drop("_first")
-
-    broadcast(grid).join(aligned, col("_grid_date") === col("_d"), "left")
-      .withColumn("acquisition_date", date_format(col("_grid_date"), "yyyyMMdd"))
-      .drop("_d", "_grid_date")
-  }
-
-  /** F5: empty-plan error (…:157-161). */
-  def assertNonEmpty(df: DataFrame): Unit = {
-    if (df.isEmpty) {
+    if (rows.exists(acquisitionDate(_) != null)) rows = requestedDates(rows)
+    if (rows.exists(_.getAs[Any]("incidence_center") != null)) rows = requestedAngles(rows)
+    if (!config.temporalOverlap && !datesUnique(rows)) rows = latestPerDate(rows)
+    if (config.spaceOverlap && !config.coregistered) rows = overlapping(rows)
+    if (config.temporalResolution != 0) rows = resampled(rows, nullable(layers.schema))
+    // F5: empty-plan error (…:157-161)
+    if (rows.isEmpty) {
       throw new IllegalStateException(
         "No rasters found against given configuration. Please check user-configuration.")
     }
+    // O1 + band coordinates (sar_datacube.py:144-150): date ascending,
+    // then product_file, both nulls last; equal keys keep input order
+    val zone = ZoneId.of(layers.sparkSession.conf.get("spark.sql.session.timeZone"))
+    val banded = rows.sortBy(r => (date(r).fold(Long.MaxValue)(_.toEpochDay),
+        Option(productFile(r)).fold((1, ""))((0, _))))
+      .zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(r.toSeq :+ date(r).map(_.atStartOfDay(zone).toInstant).orNull :+ i)
+      }
+    val schema = nullable(layers.schema)
+      .add("band_time", TimestampType).add("band_index", IntegerType, nullable = false)
+    layers.sparkSession.createDataFrame(banded.asJava, schema)
   }
 
-  /** O1 + band coordinates: sort by acquisition date and derive
-    * `band_time` (time axis, sar_datacube.py:144-150) and `band_index`.
-    * Global row number via the two-pass [[graft.util.Scale.globalRowNumber]]
-    * scaffold — layer cardinality is usually small, but a 10⁶-product
-    * archive should not funnel through one task either. */
-  def withBandIndex(df: DataFrame): DataFrame = {
-    val sortExprs = Seq(
-      to_date(col("acquisition_date"), "yyyyMMdd").asc_nulls_last,
-      col("product_file").asc_nulls_last)
-    val (ranked, _) = graft.util.Scale.globalRowNumber(df, sortExprs, "_rn")
-    ranked
-      .withColumn("band_time", to_timestamp(col("acquisition_date"), "yyyyMMdd"))
-      .withColumn("band_index", (col("_rn") - 1).cast("int"))
-      .drop("_rn")
+  /** F2: inclusive date-range filter (…:168-176); null dates drop. */
+  def selectRequestedDates(df: DataFrame): DataFrame = onRows(df)(requestedDates)
+
+  /** O2: one row per date, the latest numeric `acquisition_time`
+    * (…:185-202); null dates form one group. */
+  def pruneTemporalOverlap(df: DataFrame): DataFrame = onRows(df)(latestPerDate)
+
+  /** J1: spatial-overlap semi-join against the earliest raster's extent
+    * (…:204-222). */
+  def selectOverlappingRasters(df: DataFrame): DataFrame = onRows(df)(overlapping)
+
+  /** A3/J3: temporal resample + gap fill (…:224-256). */
+  def setTemporalResolution(df: DataFrame): DataFrame = onRows(df)(resampled(_, nullable(df.schema)))
+
+  private def requestedDates(rows: Seq[Row]): Seq[Row] =
+    rows.filter(r => date(r).exists(d => !d.isBefore(config.startDate) && !d.isAfter(config.endDate)))
+
+  /** F3: inclusive incidence-angle filter (…:178-183); null angles drop. */
+  private def requestedAngles(rows: Seq[Row]): Seq[Row] =
+    rows.filter(r => Option(r.getAs[Number]("incidence_center")).map(_.doubleValue)
+      .exists(a => a >= config.minIncidenceAngle && a <= config.maxIncidenceAngle))
+
+  /** Whether the non-null dates are distinct (the dedup guard). */
+  private def datesUnique(rows: Seq[Row]): Boolean = {
+    val dates = rows.flatMap(r => Option(acquisitionDate(r)))
+    dates.distinct.size == dates.size
+  }
+
+  /** Per date the row with the largest `acquisition_time` as a double
+    * (NaN largest, null smallest); ties go to the smallest
+    * `product_file` (null first), then to input order. */
+  private def latestPerDate(rows: Seq[Row]): Seq[Row] = {
+    def time(r: Row) = Option(r.getAs[String]("acquisition_time")).map(_.trim.toDouble)
+    val latest: Ordering[Int] = (a, b) => (time(rows(a)), time(rows(b))) match {
+      case (Some(x), Some(y)) if java.lang.Double.compare(x, y) != 0 => java.lang.Double.compare(y, x)
+      case (Some(_), None) => -1
+      case (None, Some(_)) => 1
+      case _ => Ordering.Option[String].compare(Option(productFile(rows(a))), Option(productFile(rows(b))))
+    }
+    rows.indices.groupBy(i => acquisitionDate(rows(i))).values.map(_.min(latest)).toSeq.sorted.map(rows)
+  }
+
+  /** The primary raster is the earliest by `acquisition_date` as a number
+    * (nulls last), then `product_file`. A row survives when its extent
+    * intersects the primary's ([[Geo.wktIntersects]]); a null extent on
+    * either side intersects nothing. Prints the reference's warning when
+    * only the primary survives. */
+  private def overlapping(rows: Seq[Row]): Seq[Row] = {
+    def extent(r: Row) = Option(r.getAs[String]("extent"))
+    val primary = rows.minByOption(r => (Option(acquisitionDate(r)).fold((1, 0L))(d => (0, d.trim.toLong)),
+      Option(productFile(r)))).flatMap(extent)
+    val kept = rows.filter(r => primary.exists(p => extent(r).exists(Geo.wktIntersects(_, p))))
+    if (kept.size == 1) Console.err.println(NoSecondaryWarning)
+    kept
+  }
+
+  /** pandas semantics: `asfreq(nD)` keeps rows aligned to the FIRST
+    * surviving date, then `reindex(date_range(start, end, nD))` re-grids
+    * from the configured start — a row survives only if its date sits on
+    * BOTH grids; every other grid date becomes an all-null gap row that
+    * carries only its date. Duplicate dates ⇒ error (…:232-236). */
+  private def resampled(rows: Seq[Row], schema: StructType): Seq[Row] = {
+    val n = config.temporalResolution
+    require(n > 0, s"temporal_resolution must be a positive number of days, got $n")
+    if (rows.groupBy(acquisitionDate).exists(_._2.size > 1)) {
+      throw new IllegalStateException(
+        s"Duplicate entries found for configured temporal resolution: $n, please set temporal_overlap to false")
+    }
+    val first = rows.flatMap(date).minOption
+    val aligned = rows.flatMap(r => date(r).map(_ -> r)).toMap
+      .filter { case (d, _) => first.exists(f => ChronoUnit.DAYS.between(f, d) % n == 0) }
+    val dateAt = schema.fieldIndex("acquisition_date")
+    Iterator.iterate(config.startDate)(_.plusDays(n)).takeWhile(!_.isAfter(config.endDate)).map { g =>
+      val values = aligned.get(g).fold(new Array[Any](schema.length))(_.toSeq.toArray)
+      values(dateAt) = g.format(DateFmt)
+      new GenericRowWithSchema(values, schema): Row
+    }.toSeq
   }
 }
 
 object CubePlanner {
 
-  /** Name of the observed overlap-filter metric (unique per plan). */
-  val OverlapMetric = "graft_overlap_filter"
+  /** The reference's warning when the overlap test keeps only the
+    * primary raster (sar_datacube_metadata.py:217-221). */
+  val NoSecondaryWarning: String = "[graft] warning: No secondary raster(s) found with " +
+    "current configuration that has space overlap with primary raster"
 
-  // weak-keyed so a retired SparkSession is not pinned by the registry
-  private val overlapSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean])
+  /** `yyyyMMdd`, strict like Spark's `to_date`: an invalid date is an error. */
+  private val DateFmt = DateTimeFormatter.ofPattern("uuuuMMdd").withResolverStyle(ResolverStyle.STRICT)
 
-  /** One listener per session: reads the [[OverlapMetric]] observation
-    * after any action over a plan that contains the overlap filter and
-    * emits the reference's warning when only the primary raster
-    * survived — the zero-extra-job spelling of the eager `count()`. */
-  private[meta] def registerOverlapWarnListener(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    if (overlapSessions.put(spark, java.lang.Boolean.TRUE) == null) {
-      spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-          qe.observedMetrics.get(OverlapMetric).foreach { row =>
-            if (row.getLong(row.fieldIndex("n_kept")) == 1L)
-              System.err.println("[graft] warning: No secondary raster(s) found with " +
-                "current configuration that has space overlap with primary raster")
-          }
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            exception: Exception): Unit = ()
-      })
-    }
+  private def acquisitionDate(r: Row): String = r.getAs[String]("acquisition_date")
+
+  private def productFile(r: Row): String = r.getAs[String]("product_file")
+
+  private def date(r: Row): Option[LocalDate] = Option(acquisitionDate(r)).map(LocalDate.parse(_, DateFmt))
+
+  private def nullable(schema: StructType): StructType = StructType(schema.map(_.copy(nullable = true)))
+
+  /** The one rows adapter behind the stage methods: collect, run the
+    * stage on the driver, return a local relation. */
+  private def onRows(df: DataFrame)(stage: Seq[Row] => Seq[Row]): DataFrame =
+    df.sparkSession.createDataFrame(stage(df.collect().toSeq).asJava, nullable(df.schema))
 }

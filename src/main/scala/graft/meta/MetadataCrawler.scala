@@ -83,8 +83,12 @@ object MetadataCrawler {
 
     val raw = spark.read.option("multiLine", value = true).json(metadataPaths: _*)
       .withColumn("_src", input_file_name())
+    // input_file_name() is a percent-encoded URI; decode it back to the
+    // path on disk. url_decode is form decoding ('+' means space), so a
+    // literal '+' is escaped first and stays '+'.
+    val src = url_decode(regexp_replace(col("_src"), "\\+", "%2B"))
     project(raw, jsonAttrs(raw),
-      regexp_replace(regexp_replace(col("_src"), "\\.json$", ""), "^file:/+", "/"))
+      regexp_replace(regexp_replace(src, "\\.json$", ""), "^file:/+", "/"))
   }
 
   /** S5/S7 for real rasters: distributed header-only crawl. Each task

@@ -261,4 +261,26 @@ class CubeSpec extends SparkFunSuite {
     // the source cube keeps its own snapshot
     assert(cube.productIndex(p) == 0 && cube.dimensions("Band") == 3L)
   }
+
+  test("a build leaves nothing in the session cache") {
+    spark.catalog.clearCache()
+    Cube.fromDirectory(spark, grdDir, CubeConfig())
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a raster build runs the same number of Spark jobs whichever planner stages run") {
+    val configs = Seq("{}",
+      """{"start_date": 20210427, "end_date": 20210430, "min_incidence_angle": 29, "max_incidence_angle": 31}""",
+      """{"temporal_overlap": false, "space_overlap": true}""",
+      """{"start_date": 20210426, "end_date": 20210528, "temporal_resolution": 1}""")
+    for ((dir, products) <- Seq(Fixtures.writeTiffStack(tmpDir("jobsgrd")) -> Fixtures.grdProducts,
+        Fixtures.writeH5Stack(tmpDir("jobsslc")) -> Fixtures.slcProducts); json <- configs) {
+      var cube: Cube = null
+      val jobs = jobsOf { cube = Cube.fromDirectory(spark, dir, CubeConfig.fromJsonString(json)) }
+      assert(jobs == 1, s"$dir $json")
+      // the planned layers are a local relation: the index reads them without a job
+      val p = products(1).name
+      assert(jobsOf { cube.productIndex(p); cube.metadataByProduct(p) } == 0, s"$dir $json")
+    }
+  }
 }

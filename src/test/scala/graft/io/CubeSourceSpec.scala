@@ -43,4 +43,25 @@ class CubeSourceSpec extends SparkFunSuite {
     }
     assert(e.getMessage.contains("no pixel payload"))
   }
+
+  test("JSON-sidecar names with a space, '#' and '+' build pixel-exact with unencoded paths") {
+    val dir = tmpDir("oddnames")
+    val products = Fixtures.grdProducts.map(p => p.copy(name = p.name.replace("_hollow_", "_hollow #+ ")))
+    Fixtures.writeStack(spark, dir, products, slc = false)
+    // drop product_file from the JSON: the name then comes from the path too
+    products.foreach { p =>
+      val json = java.nio.file.Paths.get(s"$dir/${p.name}.json")
+      java.nio.file.Files.write(json, new String(java.nio.file.Files.readAllBytes(json), "UTF-8")
+        .replaceAll(""""product_file": "[^"]*",""", "").getBytes("UTF-8"))
+    }
+    val cube = Cube.fromDirectory(spark, dir, CubeConfig())
+    val layers = cube.layers.select("product_file", "product_fpath").collect()
+    assert(layers.map(_.getString(0)).toSet == products.map(_.name).toSet)
+    assert(layers.forall(r => r.getString(1) == s"$dir/${r.getString(0)}"))
+    products.zipWithIndex.foreach { case (p, idx) =>
+      val got = cube.productValues(p.name).agg(sum(col("intensity").cast("double"))).collect().head.getDouble(0)
+      val want = (for { a <- 0 until p.az; r <- 0 until p.rg } yield Fixtures.pixelValue(idx, a, r)).sum
+      assert(got == want, p.name)
+    }
+  }
 }

@@ -114,30 +114,29 @@ class CrawlerPlannerSpec extends SparkFunSuite {
     assert(planned.filter(col("product_file").endsWith("fake_far.tif")).count() == 0)
   }
 
-  test("J1 warning rides Dataset.observe: zero jobs at build time, fires on the consuming action") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+  test("J1 keeps the 3 overlapping rows; warns only if the primary is alone") {
+    val farDir = tmpDir("farwarn")
+    val far = Fixtures.grdProducts.last.copy(name = "ICEYE_GRD_54549_X_fake_far.tif")
+    Fixtures.writeStack(spark, farDir, Fixtures.grdProducts :+ far, slc = false)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$farDir/${far.name}.json"),
+      Fixtures.metadataJson(far).replace("47.0", "12.0").replace("47.1", "12.1")
+        .replace("21.0", "90.0").replace("21.1", "90.1").getBytes("UTF-8"))
+    def planned(json: String): (Array[String], String) = {
+      val err = new java.io.ByteArrayOutputStream
+      val names = Console.withErr(err) {
+        new CubePlanner(CubeConfig.fromJsonString(json))
+          .plan(MetadataCrawler.crawlDirectory(spark, farDir))
+          .select("product_file").collect().map(_.getString(0))
+      }
+      (names, err.toString("UTF-8"))
     }
-    val layers = MetadataCrawler.crawlDirectory(spark, grdDir)
-      .localCheckpoint(true) // materialize inputs so only J1's own jobs count
-    spark.sparkContext.addSparkListener(l)
-    try {
-      org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
-      jobs.set(0)
-      val kept = new CubePlanner(CubeConfig.fromJsonString("""{"space_overlap": true}"""))
-        .selectOverlappingRasters(layers)
-      org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
-      assert(jobs.get() == 0,
-        "building the overlap filter must not run any job (the old eager count did)")
-      // the observed metric fills during the consuming action (collect
-      // runs the dataset's OWN QueryExecution, whose observedMetrics we
-      // read back; a write would plan a fresh one)
-      assert(kept.collect().length == 3)
-      val m = kept.queryExecution.observedMetrics(CubePlanner.OverlapMetric)
-      assert(m.getLong(m.fieldIndex("n_kept")) == 3L)
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (kept, quiet) = planned("""{"space_overlap": true}""")
+    assert(kept.sorted.toSeq == Fixtures.grdProducts.map(_.name).sorted)
+    assert(!quiet.contains("No secondary raster(s) found"), quiet)
+    // one day's window: the earliest raster (fake_1) is the only survivor
+    val (alone, warned) = planned("""{"space_overlap": true, "start_date": 20210427, "end_date": 20210427}""")
+    assert(alone.toSeq == Seq(Fixtures.grdProducts(1).name))
+    assert("No secondary raster\\(s\\) found".r.findAllIn(warned).size == 1, warned)
   }
 
   test("all-null acquisition_date skips the date filter entirely (F4 …:127)") {
