@@ -50,7 +50,7 @@ final class CubePlanner(config: CubeConfig) {
     }
     // O1 + band coordinates (sar_datacube.py:144-150): date ascending,
     // then product_file, both nulls last; equal keys keep input order
-    val zone = ZoneId.of(layers.sparkSession.conf.get("spark.sql.session.timeZone"))
+    val zone = ZoneId.of(layers.sparkSession.conf.get("spark.sql.session.timeZone"), ZoneId.SHORT_IDS)
     val banded = rows.sortBy(r => (date(r).fold(Long.MaxValue)(_.toEpochDay),
         Option(productFile(r)).fold((1, ""))((0, _))))
       .zipWithIndex.map { case (r, i) =>

@@ -176,4 +176,18 @@ class CrawlerPlannerSpec extends SparkFunSuite {
       new CubePlanner(cfg).plan(MetadataCrawler.crawlDirectory(spark, grdDir))
     }
   }
+
+  test("band_time is to_timestamp of the date in the session time zone") {
+    val key = "spark.sql.session.timeZone"
+    val before = spark.conf.get(key)
+    try {
+      for (tz <- Seq("UTC", "America/Los_Angeles", "Asia/Kolkata")) {
+        spark.conf.set(key, tz)
+        val planned = new CubePlanner(CubeConfig()).plan(MetadataCrawler.crawlDirectory(spark, grdDir))
+        val off = planned.filter(col("band_time") =!= to_timestamp(col("acquisition_date"), "yyyyMMdd"))
+        assert(planned.count() == 3 && off.count() == 0, tz)
+      }
+    } finally spark.conf.set(key, before)
+  }
 }
+
