@@ -103,13 +103,6 @@ object Bench {
       SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
-        // 105 queries × (warmup + 2 timed runs) × several codegen units
-        // each blows straight past the 100-entry default codegen cache;
-        // every eviction is a DRIVER-side Janino recompile — wall time
-        // with zero task CPU, which is exactly the r6 "unattributed
-        // inflation" signature on the scheduling-bound queries (probe:
-        // identical plans ran 3-4× faster in a fresh JVM).
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
         // the status store retains 1000 executions / 100k tasks by
         // default even with the UI off — ~315 executions of driver-side
         // churn the later (alphabetically) queries pay for

@@ -219,7 +219,8 @@ final case class Cube(
     * numbers in band order, from the layer rows. The id comes from the
     * `image_number` open attr when present, else the numeric field of the
     * ICEYE product name (ICEYE_GRD_<image_number>_…), else the whole
-    * product name. Gap bands are skipped. */
+    * product name. Gap bands are skipped. Written through the Hadoop
+    * `FileSystem` of `path`'s scheme. */
   def writeImageIdsTxt(path: String): Unit = {
     val ids = layerRows.flatMap { r =>
       Option(r.getAs[String]("product_file")).filter(_ != NoneValue).map { p =>
@@ -229,8 +230,10 @@ final case class Cube(
           .getOrElse(p)
       }
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      ids.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(layers.sparkSession.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(ids.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** W1 interop: export this cube in the reference's own netCDF4 format

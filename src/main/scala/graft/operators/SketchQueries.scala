@@ -1257,11 +1257,18 @@ object SketchQueries {
     // raw one makes the small-stratum bias VISIBLE, the corrected one
     // shows the regime switch earning its keep — together they are the
     // audit a sketch deployment graduates on.
+    // One aggregation chain over one events scan, no join: each
+    // distinct (stratum, h) falls in exactly one register, so the
+    // registers' hash counts sum to the exact leg. Joining a separate
+    // exact branch would let AQE pick the broadcast side by whichever
+    // branch finishes first, so the final plan, and the classes it
+    // generates, would change from run to run.
     "hll_distinct_users" -> QueryDef.sql(
       HllUsersSql) { (s, d) =>
-      val regs = hllRegisters(
-        events(s, d).select(col("event_type").as("stratum"), col("user_id")))
-      hllReport(regs, hllExact(s, d)).orderBy("event_type")
+      val regs = hllHashes(events(s, d).select(col("event_type").as("stratum"), col("user_id")))
+        .groupBy(col("stratum"), pmod(col("h"), lit(HllM)).as("idx"))
+        .agg(hllRank.as("m"), count(lit(1)).as("n_h"))
+      hllEstimates(hllSums(regs, sum(col("n_h")).as("n_exact"))).orderBy("event_type")
     },
 
     // Stored twin: registers from the 19th store family (built once,
@@ -1569,8 +1576,11 @@ object SketchQueries {
   def hllRegisters(in: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     hllHashes(in)
       .groupBy(col("stratum"), pmod(col("h"), lit(HllM)).as("idx"))
-      .agg(max(expr(s"CASE WHEN h div $HllM = 0 THEN 53 " +
-        s"ELSE 53 - length(bin(h div $HllM)) END")).as("m"))
+      .agg(hllRank.as("m"))
+
+  /** A register's value m over its hashes `h`. */
+  private def hllRank: org.apache.spark.sql.Column =
+    max(expr(s"CASE WHEN h div $HllM = 0 THEN 53 ELSE 53 - length(bin(h div $HllM)) END"))
 
   /** Exact distinct-user audit leg per event type. */
   def hllExact(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
@@ -1579,16 +1589,24 @@ object SketchQueries {
       .agg(count(lit(1)).as("n_exact"))
 
   /** The estimate/audit report from a (stratum, idx, m) register table
-    * plus an (event_type, n_exact) audit leg — shared by the live and
-    * stored faces so they stay bit-identical. */
+    * plus an (event_type, n_exact) audit leg. The live face builds the
+    * same columns through the same [[hllSums]] and [[hllEstimates]], so
+    * the two stay bit-identical. */
   def hllReport(regs: org.apache.spark.sql.DataFrame,
-      ex: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val sAgg = regs.groupBy(col("stratum").as("event_type"))
+      ex: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    hllEstimates(ex.join(hllSums(regs), Seq("event_type")))
+
+  /** Per event type: the scaled harmonic sum `s`, `n_regs` and `extra`. */
+  private def hllSums(regs: org.apache.spark.sql.DataFrame,
+      extra: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame =
+    regs.groupBy(col("stratum").as("event_type"))
       .agg((sum(expr("shiftleft(1L, cast(53 - m as int))"))
           + (lit(HllM.toLong) - count(lit(1))) * lit(1L << 53)).as("s"),
-        count(lit(1)).as("n_regs"))
-    ex.join(sAgg, Seq("event_type"))
-      .select(col("event_type"), col("n_exact"), col("n_regs"),
+        count(lit(1)).as("n_regs") +: extra: _*)
+
+  /** The report columns from (event_type, n_exact, n_regs, s) rows. */
+  private def hllEstimates(in: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    in.select(col("event_type"), col("n_exact"), col("n_regs"),
         hllEstExpr("s").as("n_est"))
       .withColumn("n_est_lc", hllLcExpr)
       .withColumn("err_ppm",
@@ -1597,7 +1615,6 @@ object SketchQueries {
       .withColumn("err_lc_ppm",
         expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * abs(n_est_lc - n_exact)) " +
           "div n_exact AS BIGINT)"))
-  }
 
   /** The α·m²·2⁵³ // S // 1e6 estimate over a BIGINT column `sCol`. */
   def hllEstExpr(sCol: String): org.apache.spark.sql.Column =

@@ -2,11 +2,17 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults shared by Verify / Bench / tests.
+/** Session defaults shared by Verify, Bench, perfbench and the tests.
   *
-  * Scale posture: shuffle partitions sized to local cores (the driver runs
-  * local[32]); AQE on so skewed joins / small post-shuffle partitions are
-  * re-planned at runtime, which is also what we'd want on a real cluster.
+  * Scale posture: shuffle partitions sized to local cores (`local[n]`
+  * with n = `SPARK_GRAFT_CPUS`, default 4); AQE on so skewed joins /
+  * small post-shuffle partitions are re-planned at runtime, which is
+  * also what we'd want on a real cluster.
+  *
+  * The codegen cache bound is a static conf: Spark's `CodeGenerator`
+  * sizes its class cache once per JVM, from the active session's conf
+  * at the first codegen. So the bound holds only when a session built
+  * here is the first to run codegen in the JVM.
   */
 object SparkUtil {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"): SparkSession.Builder =
@@ -35,6 +41,19 @@ object SparkUtil {
     // 80 GB spill volume on raw blocks. Storage pressure, not CPU, is
     // the binding constraint for checkpoint-heavy plans at scale.
     .config("spark.rdd.compress", sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
+
+  /** Generated classes kept, keyed by source text (Spark's default is
+    * 100). One pass of perfbench's `curation_mix` queries compiles about
+    * 160 classes, so under the default every pass evicted its own
+    * classes and recompiled all of them through Janino. At 2 000, about
+    * 12 times that working set, a repeated pass compiles next to nothing
+    * (0–8 classes on a 4-core VM). A pass over the whole registry (458
+    * queries at sf0.001) compiles 7 127 classes, so it misses in an LRU
+    * of 2 000 and of 4 096 alike; a bound above that working set would
+    * only pin more Metaspace. The bound stays finite so that a session
+    * of ever-new plans cannot pin their classes without limit. */
+  val CodegenCacheMaxEntries: Int = 2000
 
   def local(appName: String = "graft"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -57,6 +57,19 @@ class CubeSpec extends SparkFunSuite {
     assert(txt == "54549,54549,54549")
   }
 
+  test("image-id txt export writes through the Hadoop FileSystem of the path's scheme") {
+    import graft.io.RasterTestFs
+    val cube = Cube.fromDirectory(spark, grdDir, CubeConfig())
+    val dir = tmpDir("idsfs")
+    val path = new org.apache.hadoop.fs.Path(s"${RasterTestFs.Scheme}://$dir/image_ids.txt")
+    val txt = RasterTestFs.withScheme(spark) {
+      cube.writeImageIdsTxt(path.toString)
+      val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    assert(txt == "54549,54549,54549")
+  }
+
   test("GRD cube: metadata accessors with None fill") {
     val cube = Cube.fromDirectory(spark, grdDir, CubeConfig())
     val md = cube.metadataByProduct(Fixtures.grdProducts.head.name)

@@ -18,6 +18,19 @@ class RasterTestFs extends RawLocalFileSystem {
 
 object RasterTestFs {
   val Scheme = "graftrastertest"
+
+  /** Runs `f` with the scheme registered on the session's Hadoop conf. */
+  def withScheme[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val implKey = s"fs.$Scheme.impl"
+    conf.set(implKey, classOf[RasterTestFs].getName)
+    conf.setBoolean(s"$implKey.disable.cache", true)
+    try f
+    finally {
+      conf.unset(implKey)
+      conf.unset(s"$implKey.disable.cache")
+    }
+  }
 }
 
 /** Cube ingest of real rasters through the `graft-tiff` / `graft-slc`
@@ -28,11 +41,7 @@ class RasterIngestSpec extends SparkFunSuite {
   private lazy val slcDir: String = Fixtures.writeH5Stack(tmpDir("ingestslc"))
 
   test("both connectors read through the Hadoop FileSystem of any scheme") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val implKey = s"fs.${RasterTestFs.Scheme}.impl"
-    conf.set(implKey, classOf[RasterTestFs].getName)
-    conf.setBoolean(s"$implKey.disable.cache", true)
-    try {
+    RasterTestFs.withScheme(spark) {
       Seq("graft-tiff" -> tifDir, "graft-slc" -> slcDir).foreach { case (format, dir) =>
         val df = spark.read.format(format).load(s"${RasterTestFs.Scheme}://$dir")
         val want = Fixtures.codecRows(dir)
@@ -43,9 +52,6 @@ class RasterIngestSpec extends SparkFunSuite {
         val stats = df.select("azimuth", "range").queryExecution.optimizedPlan.stats
         assert(stats.rowCount.contains(BigInt(want.size)), s"$format statistics $stats")
       }
-    } finally {
-      conf.unset(implKey)
-      conf.unset(s"$implKey.disable.cache")
     }
   }
 

@@ -76,4 +76,16 @@ class SketchSpec extends SparkFunSuite {
         assert(errPpm == 0L)
     }
   }
+
+  test("hll_distinct_users is one aggregation chain and matches the stored face row for row") {
+    val live = SketchQueries.defs("hll_distinct_users").build(spark, sfDir)
+    val plan = live.queryExecution.sparkPlan.toString
+    assert("FileScan parquet".r.findAllIn(plan).size == 1, s"expected one events scan in:\n$plan")
+    assert(!plan.contains("Join"), s"expected no join in:\n$plan")
+    spark.conf.set("spark.graft.sigstore.root", tmpDir("hllstore"))
+    try {
+      val stored = SketchQueries.defs("hll_distinct_stored").build(spark, sfDir).collect().toSeq
+      assert(stored.nonEmpty && live.collect().toSeq == stored)
+    } finally spark.conf.unset("spark.graft.sigstore.root")
+  }
 }
