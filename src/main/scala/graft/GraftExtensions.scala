@@ -19,6 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // band joins with no equi key become bucketed equi-joins (the
     // nested-loop trap every naive time-window join falls into)
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
+    // filters that differ only in comparison constants share one
+    // generated class (graft.plans.StableFilterLiterals)
+    ext.injectColumnar(_ => graft.plans.StableFilterLiterals.columnar)
     // plans the custom AsofJoin logical node (graft.plans.Asof.join)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     // SQL `ASOF [LEFT] JOIN` syntax: lexical parser rewrite → marker →
@@ -214,6 +217,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
         require(children.length == 1, "hll_registers_agg takes exactly 1 argument")
         graft.functions.HllRegistersAgg(children.head)
+      }))
+    // one tile's values in position order (Cube.tiles): primitive
+    // buffers that grow with the pixels present, append merge
+    ext.injectFunction((
+      new FunctionIdentifier("tile_pack"),
+      new ExpressionInfo(classOf[graft.functions.TilePack].getName, "tile_pack"),
+      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(children.length == 2, "tile_pack takes exactly 2 arguments")
+        graft.functions.TilePack(children.head, children(1))
       }))
   }
 }

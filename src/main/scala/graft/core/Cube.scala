@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.meta.MetadataCrawler
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -144,8 +144,7 @@ final case class Cube(
           .join(other.pixels.select(rightKeep.map(col).toSeq: _*).drop("band_time"), coords, "full_outer")
         // Re-attach band_time (dropped pre-join since both sides carry
         // it): keeps the merged pixel schema identical to the unmerged
-        // branches — TiledPixels.tile / CubeWriter.writeTiled group by
-        // band_time and would otherwise fail on a merged cube. The lookup
+        // branches, so a merged cube writes and reads like any other. The lookup
         // unions BOTH cubes' layers so a band present only in `other`
         // still gets its time (full-outer pixels can carry such rows).
         // Broadcast join against the layer-cardinality table is
@@ -179,15 +178,22 @@ final case class Cube(
   /** Q9: ML tile/batch extraction (docs/examples/Ex5 surface): bucket the
     * pixel grid into tileSize² tiles and collect each tile's values as an
     * array ordered by (azimuth, range). One shuffle on the tile key; tile
-    * payloads (~tileSize² × 8 bytes) are the reference chunk analog. */
+    * payloads (~tileSize² values) are the reference chunk analog. The
+    * values are packed by [[graft.functions.TilePack]], keyed by the
+    * in-tile position, so no struct is shuffled or sorted per pixel.
+    * `tileSize` is at most 46 340, so a tile's positions fit an INT. */
   def tiles(tileSize: Int): DataFrame = {
+    require(tileSize > 0 && tileSize <= 46340, s"tile size $tileSize is not in 1..46340")
     val firstVar = dataVariables.head
+    val pack = graft.functions.TilePack(
+      GraftSqlBridge.expression(col("_tile_pos")), GraftSqlBridge.expression(col(firstVar)))
     pixels
       .withColumn("tile_az", (col("azimuth") / tileSize).cast("int"))
       .withColumn("tile_rg", (col("range") / tileSize).cast("int"))
+      // computed by the generated projection, so the aggregate's update reads it
+      .withColumn("_tile_pos", col("azimuth") % tileSize * tileSize + col("range") % tileSize)
       .groupBy(col("band_index"), col("tile_az"), col("tile_rg"))
-      .agg(sort_array(collect_list(struct(col("azimuth"), col("range"), col(firstVar))))
-        .getField(firstVar).as("values"))
+      .agg(GraftSqlBridge.column(pack.toAggregateExpression()).as("values"))
   }
 
   /** W2: metadata table export as CSV (metadata_crawler.py:232-252).

@@ -149,6 +149,22 @@ class CubeSpec extends SparkFunSuite {
     assert(vals.length == 100)
   }
 
+  test("a store writes and loads through the Hadoop FileSystem of its scheme") {
+    import graft.io.RasterTestFs
+    val cube = Cube.fromDirectory(spark, grdDir, CubeConfig())
+    val dir = tmpDir("storefs") + "/cube"
+    val back = RasterTestFs.withScheme(spark) {
+      CubeWriter.write(cube, s"${RasterTestFs.Scheme}://$dir")
+      val loaded = Cube.load(spark, s"${RasterTestFs.Scheme}://$dir")
+      (loaded.attrs, loaded.dimensions, loaded.productValues(Fixtures.grdProducts.head.name)
+        .agg(sum(col("intensity"))).first().getDouble(0))
+    }
+    // every part of the store, `_attrs.json` included, is where the scheme put it
+    Seq("layers", "pixels", "_attrs.json").foreach(f => assert(new java.io.File(s"$dir/$f").exists(), f))
+    val want = (for { a <- 0 until 10; r <- 0 until 10 } yield Fixtures.pixelValue(0, a, r)).sum
+    assert(back == ((cube.attrs, cube.dimensions, want)))
+  }
+
   /** Spark jobs `f` starts on this thread (a job group, read back from
     * the status tracker once the listener bus has drained). */
   private def jobsOf(f: => Unit): Int = {
