@@ -289,7 +289,8 @@ object Cube {
   def fromFiles(spark: SparkSession, metadataPaths: Seq[String], config: CubeConfig): Cube =
     graft.io.CubeBuilder.fromFiles(spark, metadataPaths, config)
 
-  /** S12/W1: parquet cube persistence. */
+  /** S12/W1: open a parquet cube store from its manifest, with no Spark
+    * job and no listing ([[graft.io.CubeReader]]). */
   def load(spark: SparkSession, dir: String): Cube = graft.io.CubeReader.load(spark, dir)
 
   /** S12 interop: read a reference-written netCDF4 cube

@@ -159,8 +159,9 @@ class CubeSpec extends SparkFunSuite {
       (loaded.attrs, loaded.dimensions, loaded.productValues(Fixtures.grdProducts.head.name)
         .agg(sum(col("intensity"))).first().getDouble(0))
     }
-    // every part of the store, `_attrs.json` included, is where the scheme put it
-    Seq("layers", "pixels", "_attrs.json").foreach(f => assert(new java.io.File(s"$dir/$f").exists(), f))
+    // every part of the store, the manifest included, is where the scheme put it
+    assert(new java.io.File(s"$dir/_manifest.json").isFile)
+    assert(new java.io.File(dir).list().count(_.startsWith("pixels-")) == 1)
     val want = (for { a <- 0 until 10; r <- 0 until 10 } yield Fixtures.pixelValue(0, a, r)).sum
     assert(back == ((cube.attrs, cube.dimensions, want)))
   }
@@ -311,5 +312,167 @@ class CubeSpec extends SparkFunSuite {
       val p = products(1).name
       assert(jobsOf { cube.productIndex(p); cube.metadataByProduct(p) } == 0, s"$dir $json")
     }
+  }
+
+  /** Layer rows in band order, attrs and per-band pixel sums: what tells
+    * two versions of a store apart. */
+  private def version(c: Cube): (Seq[org.apache.spark.sql.Row], Map[String, String], Map[Int, Double]) =
+    (c.layerRows, c.attrs, c.pixels.groupBy("band_index").agg(sum(col("intensity").cast("double")))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap)
+
+  test("a loaded store equals the written cube: layers row for row, attrs, pixel schema and values") {
+    val gapCfg = CubeConfig.fromJsonString(
+      """{"start_date": 20210426, "end_date": 20210528, "temporal_resolution": 1}""")
+    val built = Cube.fromDirectory(spark, grdDir, gapCfg)
+    // a microsecond band_time, open-attrs maps with a null value, and
+    // added columns with non-finite floats and arrays
+    val cube = built.copy(layers = built.layers
+      .withColumn("band_time", col("band_time") + expr("INTERVAL 0.000007 SECONDS"))
+      .withColumn("score", when(col("band_index") === 1, lit(Double.NaN)).otherwise(col("band_index") / 3.0))
+      .withColumn("peak", when(col("band_index") === 2, lit(Float.NegativeInfinity)).otherwise(lit(0.1f)))
+      .withColumn("tags", array(lit("a"), lit(null).cast("string")))
+      .withColumn("metadata", when(col("band_index") === 1, map(lit("k"), lit("v"), lit("none"), lit(null)))
+        .otherwise(col("metadata"))))
+    val dir = tmpDir("equalstore") + "/cube"
+    CubeWriter.write(cube, dir)
+    val back = Cube.load(spark, dir)
+    assert(back.layers.schema == cube.layers.schema)
+    assert(back.layers.collect().toSeq == cube.layers.collect().toSeq.sortBy(_.getAs[Int]("band_index")))
+    val t1 = back.layers.filter(col("band_index") === 1).select("band_time", "metadata").first()
+    assert(t1.getTimestamp(0).getNanos % 1000000 / 1000 != 0, "microseconds kept")
+    assert(t1.getMap[String, String](1) == Map("k" -> "v", "none" -> null))
+    assert(back.attrs == cube.attrs)
+    assert(back.pixels.schema == org.apache.spark.sql.types.StructType(cube.pixels.schema.map(_.copy(nullable = true))))
+    assert(back.pixels.collect().toSet == cube.pixels.collect().toSet)
+    assert(back.pixels.count() == 300)
+  }
+
+  test("a store with no pixel rows loads") {
+    val cube = Cube.fromDirectory(spark, grdDir, CubeConfig())
+    val dir = tmpDir("emptystore") + "/cube"
+    CubeWriter.write(cube.copy(pixels = cube.pixels.limit(0)), dir)
+    val back = Cube.load(spark, dir)
+    assert(back.pixels.columns.toSeq == cube.pixels.columns.toSeq)
+    assert(back.pixels.count() == 0)
+    assert(back.allProducts == cube.allProducts)
+    assert(back.productValues(Fixtures.grdProducts.head.name).collect().isEmpty)
+  }
+
+  test("a store open lists nothing and runs no job; a lookup and a window run one job each") {
+    import graft.io.RasterTestFs
+    val dir = tmpDir("opendiscovery") + "/cube"
+    val uri = s"${RasterTestFs.Scheme}://$dir"
+    val p = Fixtures.grdProducts.head.name
+    val want = (for { a <- 0 until 10; r <- 0 until 10 } yield Fixtures.pixelValue(0, a, r)).sum
+    val wantWindow = (for { a <- 2 to 5; r <- 3 to 6 } yield Fixtures.pixelValue(0, a, r)).sum
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    var window = Array.empty[org.apache.spark.sql.Row]
+    var md = Map.empty[String, String]
+    val (jobs, listings) = RasterTestFs.withScheme(spark) {
+      CubeWriter.write(Cube.fromDirectory(spark, grdDir, CubeConfig()), uri)
+      RasterTestFs.resetCalls()
+      var cube: Cube = null
+      val load = jobsOf { cube = Cube.load(spark, uri) }
+      val lookup = jobsOf {
+        rows = cube.productValues(p).collect()
+        md = cube.metadataByProduct(p)
+      }
+      val win = jobsOf {
+        window = cube.bandValues(1).filter(col("azimuth").between(2, 5) && col("range").between(3, 6)).collect()
+      }
+      ((load, lookup, win), RasterTestFs.calls("listStatus") + RasterTestFs.calls("globStatus"))
+    }
+    assert(jobs == ((0, 1, 1)), "jobs of (load, lookup, window)")
+    assert(listings == 0, "listStatus and globStatus calls")
+    assert(rows.map(_.getAs[Number]("intensity").doubleValue).sum == want && md("product_file") == p)
+    assert(window.length == 16 && window.map(_.getAs[Number]("intensity").doubleValue).sum == wantWindow)
+    // the manifest's paths are relative: a copy loads where it lands
+    val copy = tmpDir("copiedstore") + "/cube"
+    val src = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach(f => java.nio.file.Files.copy(f, java.nio.file.Paths.get(copy).resolve(src.relativize(f))))
+    finally walk.close()
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+    val copied = Cube.load(spark, copy)
+    assert(copied.productValues(p).agg(sum(col("intensity").cast("double"))).first().getDouble(0) == want)
+    assert(copied.allProducts.size == 3)
+  }
+
+  test("a rewrite that fails at any create, rename or delete leaves the old cube or the new one") {
+    import graft.io.RasterTestFs
+    val built = Cube.fromDirectory(spark, grdDir, CubeConfig())
+    // pixels as a local relation over several partitions, so each write
+    // runs several tasks without decoding again
+    val old = built.copy(pixels = spark.createDataFrame(
+      java.util.Arrays.asList(built.pixels.collect(): _*), built.pixels.schema))
+    val next = old.copy(
+      layers = old.layers.withColumn("product_file", concat(col("product_file"), lit(".v2"))),
+      pixels = old.pixels.withColumn("intensity", col("intensity") + 1000),
+      attrs = old.attrs + ("version" -> "2"))
+    val versions = Seq(version(old), version(next))
+    assert(versions.distinct.size == 2)
+    val dir = tmpDir("crashstore") + "/cube"
+    val uri = s"${RasterTestFs.Scheme}://$dir"
+    val outcomes = RasterTestFs.withScheme(spark) {
+      CubeWriter.write(old, uri)
+      RasterTestFs.resetCalls()
+      CubeWriter.write(next, uri)
+      val calls = RasterTestFs.mutatingCalls
+      assert(calls >= 3, s"$calls creates, renames and deletes in a rewrite")
+      val seen = (1L to calls).map { n =>
+        CubeWriter.write(old, uri)
+        RasterTestFs.failOnce(n)
+        val failed = scala.util.Try(CubeWriter.write(next, uri)).isFailure
+        RasterTestFs.resetCalls()
+        val got = versions.indexOf(version(Cube.load(spark, uri)))
+        assert(got >= 0, s"a failure at mutating call $n of $calls left a cube that is neither old nor new")
+        (failed, got)
+      }
+      CubeWriter.write(next, uri)
+      assert(version(Cube.load(spark, uri)) == versions(1))
+      seen
+    }
+    // a write that returned has published
+    assert(outcomes.forall { case (failed, got) => failed || got == 1 }, s"outcomes $outcomes")
+    assert(outcomes.exists(_._2 == 0) && outcomes.exists(_._2 == 1), s"outcomes $outcomes")
+    // the last write removed every stage but its own
+    val entries = new java.io.File(dir).list().toSet
+    assert(entries.count(_.startsWith("pixels-")) == 1 && entries.contains("_manifest.json"), entries)
+    assert(entries.forall(e => e == "_manifest.json" || e.startsWith("pixels-")), entries)
+  }
+
+  test("opening a directory that is not a store names its missing manifest") {
+    val dir = tmpDir("notastore")
+    val e = intercept[java.io.FileNotFoundException](Cube.load(spark, dir))
+    assert(e.getMessage.contains(s"$dir/_manifest.json") && e.getMessage.contains("is not a cube store"), e.getMessage)
+  }
+
+  test("a truncated or malformed manifest is an error that names it and what is wrong") {
+    val dir = tmpDir("badmanifest") + "/cube"
+    CubeWriter.write(Cube.fromDirectory(spark, grdDir, CubeConfig()), dir)
+    val manifest = java.nio.file.Paths.get(dir, "_manifest.json")
+    val whole = java.nio.file.Files.readAllBytes(manifest)
+    def failure(bytes: Array[Byte]): String = {
+      java.nio.file.Files.write(manifest, bytes)
+      val msg = intercept[java.io.IOException](Cube.load(spark, dir)).getMessage
+      assert(msg.contains(s"$dir/_manifest.json is not a valid cube manifest"), msg)
+      msg
+    }
+    failure(whole.take(whole.length / 2))
+    assert(failure(Array.emptyByteArray).contains("not a JSON object"))
+    assert(failure("""{"format": "graft-cube", "version": 1}""".getBytes).contains("no 'attrs'"))
+    assert(failure("""{"format": "graft-cube", "version": 2}""".getBytes).contains("version 2 is not 1"))
+    assert(failure("""{"format": "parquet"}""".getBytes).contains("format 'parquet' is not 'graft-cube'"))
+  }
+
+  test("a manifest that lists a missing pixel file fails at load, naming both") {
+    val dir = tmpDir("lostfile") + "/cube"
+    CubeWriter.write(Cube.fromDirectory(spark, grdDir, CubeConfig()), dir)
+    val stage = new java.io.File(dir).listFiles().find(_.getName.startsWith("pixels-")).get
+    val lost = stage.listFiles().filter(_.getName.startsWith("band_index=")).head
+      .listFiles().find(_.getName.endsWith(".parquet")).get
+    assert(lost.delete())
+    val msg = intercept[java.io.FileNotFoundException](Cube.load(spark, dir)).getMessage
+    assert(msg.contains(s"$dir/_manifest.json") && msg.contains(lost.getName) && msg.contains("does not exist"), msg)
   }
 }
