@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One-time store builds for [[Bench]]: an untimed prebuild, so the
   * *_stored queries measure the amortized READ path rather than the
-  * first build. Concurrent first builds inside one JVM are already safe
-  * (the store's build-once lock, see [[operators.SignatureStore]]); a
+  * first build. Each face publishes through one manifest rename, so a
+  * prebuild that dies leaves every face built or not built, and the next
+  * call builds the missing ones. Concurrent first builds inside one JVM
+  * are already safe (the store's build-once lock, see
+  * [[operators.SignatureStore]]); the store has one writer, so a
   * prebuild is still what keeps several drivers sharing one
   * `spark.graft.sigstore.root` from racing the same build. */
 object StorePrebuild {

@@ -1,7 +1,6 @@
 package graft.io
 
 import java.io.{FileNotFoundException, IOException}
-import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
@@ -9,8 +8,7 @@ import com.fasterxml.jackson.core.JacksonException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{JsonNodeFactory, NullNode}
 import graft.core.Cube
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, GenericInternalRow, Predicate}
@@ -35,17 +33,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows, the pixel schema, and every pixel file with its band and byte
   * size, by path relative to `dir` (a copied store still loads).
   *
-  * Commit rule: [[CubeWriter.write]] writes the pixels, partitioned by
-  * band, under a fresh `pixels-<id>` stage, writes the new manifest into
-  * that stage, and publishes it with one rename over `dir/_manifest.json`.
-  * A crash before the rename leaves the old cube; after it, the new one.
-  * Only then are superseded and never-published stages deleted. So a
-  * `Cube` loaded before a rewrite stops reading once the rewrite has
-  * published; re-load it. One writer per store at a time: the stage
-  * clean-up of one write removes another's unpublished stage. The
-  * commit needs a file system whose rename replaces an existing file
-  * atomically (POSIX local file systems do); where rename refuses to
-  * replace, the rewrite fails and the old cube stays.
+  * Commit rule ([[StoreCommit]], shared with the signature store):
+  * [[CubeWriter.write]] writes the pixels, partitioned by band, under a
+  * fresh `pixels-<id>` stage, writes the new manifest into that stage,
+  * and publishes it with one rename over `dir/_manifest.json`. A crash
+  * before the rename leaves the old cube; after it, the new one. Only
+  * then are superseded and never-published stages deleted. So a `Cube`
+  * loaded before a rewrite stops reading once the rewrite has published;
+  * re-load it. One writer per store at a time.
   *
   * [[CubeReader.load]] reads only the manifest: the layers become a local
   * relation, so the keyed accessors need no Spark job, and the pixels a
@@ -58,32 +53,31 @@ object CubeWriter {
   def write(cube: Cube, dir: String): Unit = {
     val spark = cube.pixels.sparkSession
     val root = new Path(dir)
-    val fs = CubeStore.fileSystem(root, spark.sparkContext.hadoopConfiguration)
-    val stage = s"${CubeStore.StagePrefix}${UUID.randomUUID}"
-    val stagePath = new Path(root, stage)
+    val fs = StoreCommit.fileSystem(root, spark.sparkContext.hadoopConfiguration)
+    val stagePath = StoreCommit.stage(root, "pixels")
+    val stage = stagePath.getName
     cube.pixels.write.partitionBy("band_index").parquet(stagePath.toString)
     val files = for {
       band <- fs.listStatus(stagePath).toSeq.sortBy(_.getPath.getName) if band.isDirectory
-      file <- fs.listStatus(band.getPath).toSeq.sortBy(_.getPath.getName) if CubeStore.isData(file)
+      file <- fs.listStatus(band.getPath).toSeq.sortBy(_.getPath.getName) if file.isFile && StoreCommit.isData(file.getPath.getName)
     } yield CubeStore.PixelFile(s"$stage/${band.getPath.getName}/${file.getPath.getName}",
       CubeStore.bandOf(band.getPath), file.getLen)
-    CubeStore.commit(fs, root, stagePath, CubeStore.encode(cube, files))
+    StoreCommit.commit(fs, root, stagePath, CubeStore.encode(cube, files))
   }
 }
 
 object CubeReader {
   def load(spark: SparkSession, dir: String): Cube = {
     val path = new Path(dir)
-    val fs = CubeStore.fileSystem(path, spark.sparkContext.hadoopConfiguration)
+    val fs = StoreCommit.fileSystem(path, spark.sparkContext.hadoopConfiguration)
     // qualified, so that tasks resolve the listed files as the driver does
     CubeStore.decode(spark, fs, fs.makeQualified(path))
   }
 }
 
-/** The manifest: its steps, its codec and the file index it yields. */
+/** The manifest: its codec and the file index it yields. */
 private[io] object CubeStore {
-  val ManifestFile = "_manifest.json"
-  val StagePrefix = "pixels-"
+  import StoreCommit.ManifestFile
   val Version = 1
 
   final case class PixelFile(path: String, band: Int, bytes: Long)
@@ -92,34 +86,8 @@ private[io] object CubeStore {
   private val nodes = JsonNodeFactory.instance
   private val PartitionSchema = StructType(Seq(StructField("band_index", IntegerType)))
 
-  /** The file system of `path`, without a checksum layer: a checksummed
-    * file system renames a file and its `.crc` in two steps, and a crash
-    * between them would leave a manifest that fails its checksum. */
-  def fileSystem(path: Path, conf: Configuration): FileSystem = path.getFileSystem(conf) match {
-    case c: ChecksumFileSystem => c.getRawFileSystem
-    case fs => fs
-  }
-
-  /** Spark's convention: names starting with `_` or `.` are not data. */
-  def isData(f: FileStatus): Boolean = f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
-
   def bandOf(dir: Path): Int = dir.getName.stripPrefix("band_index=").toIntOption.getOrElse(
     throw new IllegalArgumentException(s"$dir: pixel rows need a non-null INT band_index to be stored"))
-
-  /** Writes the manifest into the stage, renames it over the store's
-    * manifest (the one step that publishes a write), then deletes every
-    * other stage: superseded or never published. */
-  def commit(fs: FileSystem, root: Path, stage: Path, manifest: Array[Byte]): Unit = {
-    val staged = new Path(stage, ManifestFile)
-    val out = fs.create(staged, false)
-    try out.write(manifest) finally out.close()
-    val published = new Path(root, ManifestFile)
-    if (!fs.rename(staged, published)) throw new IOException(
-      s"could not publish $staged as $published: the file system's rename did not replace it")
-    fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith(StagePrefix) && p.getName != stage.getName)
-      .foreach(fs.delete(_, true))
-  }
 
   def encode(cube: Cube, files: Seq[PixelFile]): Array[Byte] = {
     val layerSchema = cube.layers.schema

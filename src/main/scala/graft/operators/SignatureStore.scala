@@ -1,9 +1,14 @@
 package graft.operators
 
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import graft.io.StoreCommit
 import graft.util.Tables._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Persisted derived-artifact stores — the 100 TB amortization for the
   * dedup, search, sketch, vector and multimodal families.
@@ -14,9 +19,8 @@ import org.apache.spark.sql.functions._
   * is pure recomputation: artifacts only change when their inputs
   * change. This store computes them ONCE and persists them, e.g.:
   *
-  *   - `minhash_bands/`: (doc_id, band, key) parquet, partitioned by
-  *     `band` — the LSH self-join then reads band-pruned row groups and
-  *     shuffles only the tiny key table, never the text;
+  *   - `minhash_bands/`: (doc_id, band, key) parquet — the LSH
+  *     self-join then shuffles only the tiny key table, never the text;
   *   - `simhash/`: (doc_id, sig) parquet — 60-bit signatures; any banding
   *     scheme can be re-derived from `sig` without touching text.
   *
@@ -27,34 +31,40 @@ import org.apache.spark.sql.functions._
   *
   * ==The store-face protocol==
   * Every family persists one or more FACES under a per-corpus base
-  * ([[defaultBase]]), and every face follows one layout, implemented
-  * once by four helpers:
+  * ([[defaultBase]]). A face is the set of tables that one build or one
+  * seal writes together: most hold one table; BM25 postings + doclens,
+  * MG counters + λs, PQ and residual-PQ codebook + codes, and spans +
+  * span grams hold two. Every face follows one layout, on the commit
+  * protocol of the cube store ([[graft.io.StoreCommit]]):
   *
-  *   - `<base>/<face>/` is the sealed batch build, sealed by Spark's
-  *     `_SUCCESS` marker. [[sealOnce]] builds it at most once per
-  *     directory per JVM: a memoized marker probe on the fast path, and
-  *     a per-directory lock plus a re-check around the build, so
-  *     concurrent first calls never write one directory twice. The lock
+  *   - `<base>/<face>/_manifest.json` publishes the face. It names the
+  *     current stage `batch-<id>`, records the schema of each table,
+  *     and lists, for each stream subtree the stage already folds in,
+  *     the stream files it consumed. Each table of the stage lives at
+  *     `<base>/<table>/batch-<id>/` (the face's own table under
+  *     `<base>/<face>/`). A face without a manifest is not built.
+  *   - [[seal]] writes a face: every table into a fresh stage, then one
+  *     rename of the manifest publishes it, and only then are superseded
+  *     stages and the folded stream subtrees deleted. A crash at any
+  *     step reads as the face before the seal or after it.
+  *     [[sealOnce]] builds a face at most once per JVM: the pinned
+  *     manifest on the fast path, and a per-face lock plus a re-check
+  *     around the build. There is one writer per store, and the lock
   *     covers ONE JVM: drivers sharing a `spark.graft.sigstore.root`
   *     still need one prebuild ([[graft.StorePrebuild]]) before they
   *     race.
-  *   - `<base>/<face>_stream/` ([[streamDir]]) holds micro-batch
+  *   - `<base>/<table>_stream/` ([[streamDir]]) holds micro-batch
   *     appends, partitioned by `batch_id` and written by [[appendEpoch]]
   *     with dynamic partition overwrite, so a replayed epoch rewrites
-  *     exactly its own partitions. It is a SIBLING subtree because the
-  *     batch layout may be partitioned differently (`band` alone for
-  *     the band stores), and mixing partition depths in one directory
-  *     breaks parquet partition discovery.
-  *   - Readers go through [[layers]]: the cached batch relation plus the
-  *     stream side when it holds data. Each reader applies its own merge
-  *     law (distinct, latest-wins, sum, max, bit_or, first-wins, KMV,
-  *     MG); a batch-only face reads as the bare cached parquet scan.
-  *   - Compaction ([[seal]]) writes every resolved table to a
-  *     `_compact_tmp` sibling first, then swaps each into place with
-  *     [[swapDir]] (the old directory parked at `_bak` until the new one
-  *     is in), then drops the consumed stream subtrees. A reader that
-  *     finds a batch directory without data restores a parked `_bak`
-  *     ([[recoverFromBak]]).
+  *     exactly its own partitions. A new streaming query restarts its
+  *     ids at 0, which is why a manifest records folded epochs by file.
+  *   - Readers go through [[layers]]: the table in the stage the pinned
+  *     manifest names (a cached relation; a stage never changes, so a
+  *     warm read makes no file-system call on the batch side), plus the
+  *     stream side when it holds data files the stage does not fold in.
+  *     Each reader applies its own merge law (distinct, latest-wins,
+  *     sum, max, bit_or, first-wins, KMV, MG); a batch-only face reads
+  *     as the bare cached parquet scan.
   */
 object SignatureStore {
 
@@ -73,13 +83,12 @@ object SignatureStore {
     * distinct IS the supersession rule). */
   def ophDir(base: String) = s"$base/oph_bands"
 
-  /** One full-corpus signature pass → parquet store at `base`. */
+  /** One full-corpus signature pass → the minhash and simhash faces at
+    * `base`. */
   def write(spark: SparkSession, sfDir: String, base: String): Unit = {
     val docs = documents(spark, sfDir)
-    TextQueries.minhashBandsOf(docs)
-      .write.mode("overwrite").partitionBy("band").parquet(minhashDir(base))
-    TextQueries.simhashSigsOf(docs)
-      .write.mode("overwrite").parquet(simhashDir(base))
+    publish(spark, minhashDir(base) -> TextQueries.minhashBandsOf(docs))
+    publish(spark, simhashDir(base) -> TextQueries.simhashSigsOf(docs))
   }
 
   /** All stored minhash bands: the batch subtree plus, when present, the
@@ -115,60 +124,132 @@ object SignatureStore {
       .resolve(_.distinct())((b, s) => b.unionByName(s).distinct())
   }
 
-  /** Positive-result memo for SEALED store probes. Every query
-    * construction probes the store directories it reads (a marker
-    * `exists` + a recursive `listFiles` per subtree); on an object
-    * store each listing is a 10-100 ms round trip, and with 20+ store
-    * families that driver-side constant dominates small queries' walls
-    * (the round-9 wall≫cpu cluster). A BATCH subtree, once observed
-    * non-empty, stays non-empty for the JVM's lifetime (ensure* builds
-    * exactly once; compaction swaps atomically via rename), so `true`
-    * is safe to pin. Stream subtrees are NEVER memoized — appends and
-    * compaction change them at any time — and negative results are
-    * never cached (the store may be built by the very next call). */
-  private val probeMemo = new scala.collection.concurrent.TrieMap[String, Boolean]()
+  /** The faces that hold a second table: each table name here is kept
+    * in the face of the table it maps to. Every other table is a face
+    * of its own. */
+  private val faceOf = Map("bm25_doclens" -> "bm25_postings", "mg_lambdas" -> "mg_counters",
+    "pq_codebook" -> "pq_codes", "rpq_codebook" -> "rpq_codes", "span_grams" -> "substring_spans")
 
-  /** Drop `dir` (and its `_SUCCESS` marker) from the probe memo — for
-    * the rare seal-time operations that DELETE a previously-sealed
-    * face (e.g. [[compactBm25]] invalidating the ranked-results
-    * snapshot): the "a sealed batch build never un-exists" pin no
-    * longer holds for that directory. Also drops the cached relation. */
-  private def invalidateProbe(dir: String): Unit = {
-    probeMemo.remove(dir)
-    probeMemo.remove(s"$dir/_SUCCESS")
-    graft.util.Tables.evict(dir)
+  private def nameOf(dir: String): String = dir.substring(dir.lastIndexOf('/') + 1)
+
+  /** The face directory that holds table `dir`: the one [[sealOnce]]
+    * guards and whose manifest publishes it. */
+  private def face(dir: String): String =
+    faceOf.get(nameOf(dir)).fold(dir)(dir.substring(0, dir.lastIndexOf('/') + 1) + _)
+
+  /** A published face, as its manifest records it: the stage, the
+    * schema (JSON) of each table in it, and the stream files (relative
+    * to their subtree, by subtree name) that the stage already folds in. */
+  private final case class Manifest(format: String, version: Int, stage: String,
+      tables: Map[String, String], folded: Map[String, Seq[String]]) {
+    private val relations = java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]())
+
+    /** Table `name` of face `face`, read with its recorded schema: one
+      * relation per session, built on first use. The stage never
+      * changes, so the relation never goes stale. */
+    def table(spark: SparkSession, face: String, name: String): Option[DataFrame] = tables.get(name).map(schema =>
+      relations.computeIfAbsent(spark, _ => scala.collection.concurrent.TrieMap.empty).getOrElseUpdate(name,
+        spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType]).parquet(stagedTable(face, name, stage))))
   }
 
-  /** Cached parquet read for batch subtrees (delegates to
-    * [[graft.util.Tables.parquetCached]]): sealed store faces are
-    * immutable between seals, so the resolved relation — file listing,
-    * footer schema, LogicalRelation — is pinned per session instead of
-    * re-derived by every query construction (the r10 verdict's 41 s
-    * driver floor). Every path that REWRITES a batch dir ([[swapDir]])
-    * evicts it; stream subtrees are never cached — they change with
-    * every micro-batch. */
-  private def readSealed(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Tables.parquetCached(spark, dir)
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  /** One lock object per face directory — see [[sealOnce]]. */
+  /** Published manifests by face, pinned per JVM once read: a face
+    * changes only through [[seal]], which drops the pin. A face that is
+    * not published is never pinned, so the next call looks again. */
+  private val manifests = new scala.collection.concurrent.TrieMap[String, Manifest]()
+
+  private def manifest(spark: SparkSession, face: String): Option[Manifest] =
+    manifests.get(face).orElse {
+      val path = new Path(face, StoreCommit.ManifestFile)
+      val fs = StoreCommit.fileSystem(path, spark.sparkContext.hadoopConfiguration)
+      val read = try {
+        val in = fs.open(path)
+        try Some(json.readValue(in: java.io.InputStream, classOf[Manifest])) finally in.close()
+      } catch {
+        case _: java.io.FileNotFoundException => None
+        case e: JacksonException => throw new java.io.IOException(s"$path is not a graft-face manifest: ${e.getOriginalMessage}")
+      }
+      read.foreach(m => if (m.format == "graft-face" && m.version == 1) manifests.put(face, m)
+        else throw new java.io.IOException(s"$path is not a version 1 graft-face manifest"))
+      read
+    }
+
+  /** Table `dir` as its face's published stage holds it; None when the
+    * face is not published. */
+  private def batch(spark: SparkSession, dir: String): Option[DataFrame] =
+    manifest(spark, face(dir)).map(_.table(spark, face(dir), nameOf(dir)).getOrElse(throw missingStore(dir)))
+
+  /** [[batch]], failing with the missing-store error when the face is
+    * not published. */
+  private def published(spark: SparkSession, dir: String): DataFrame =
+    batch(spark, dir).getOrElse(throw missingStore(dir))
+
+  /** Where `stage` keeps table `name` of face `face`: in the table's own
+    * directory beside the face's, so that the table's name leads its
+    * path (and the location string of every scan of it). */
+  private def stagedTable(face: String, name: String, stage: String): String =
+    s"${face.substring(0, face.lastIndexOf('/'))}/$name/$stage"
+
+  /** A face being written: [[put]] writes its tables into a fresh stage,
+    * each as one flat parquet directory. */
+  private final class Stage(spark: SparkSession, face: String) {
+    val path: Path = StoreCommit.stage(new Path(face), "batch")
+    val tables = scala.collection.mutable.LinkedHashMap.empty[String, String]
+
+    /** Writes `df` as table `dir` and returns the table as written. */
+    def put(dir: String, df: DataFrame): DataFrame = {
+      val out = stagedTable(face, nameOf(dir), path.getName)
+      df.write.parquet(out)
+      tables(nameOf(dir)) = df.schema.json
+      spark.read.schema(df.schema).parquet(out)
+    }
+  }
+
+  /** One build-once lock per face — see [[sealOnce]]. */
   private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
-  /** Build face `dir` unless its `_SUCCESS` marker is sealed. The fast
-    * path is the memoized marker probe alone; on a miss the build runs
-    * under a per-directory JVM lock and re-checks the marker first, so
-    * N concurrent first calls build once and the other N-1 read the
-    * sealed result (two unserialized `overwrite` writes into one
-    * directory corrupt it). A `_bak` parked by a crashed swap is
-    * restored before the re-check. `build` must write `dir` last, so
-    * the marker seals the whole face. */
-  private def sealOnce(spark: SparkSession, dir: String)(build: => Unit): Unit = {
-    val marker = s"$dir/_SUCCESS"
-    if (!sealedMarkerExists(spark, marker))
+  /** Build face `dir` unless it is published. The fast path is the
+    * pinned manifest alone; on a miss the build runs under a per-face
+    * JVM lock and re-checks first, so N concurrent first calls build
+    * once and the other N-1 read the published face. */
+  private def sealOnce(spark: SparkSession, dir: String)(build: Stage => Unit): Unit =
+    if (manifest(spark, dir).isEmpty)
       buildLocks.computeIfAbsent(dir, _ => new AnyRef).synchronized {
-        recoverFromBak(spark, dir)
-        if (!sealedMarkerExists(spark, marker)) build
+        if (manifest(spark, dir).isEmpty) seal(spark, dir)(build)
       }
+
+  /** Write face `dir` anew: `build` puts tables into a fresh stage, and
+    * every table of the published face that it did not put is carried
+    * over. One rename of the manifest publishes the stage, recording
+    * the data files of `streams` as folded in: readers skip them from
+    * then on. Only then are the superseded stages, the `streams`
+    * subtrees and the `drop` faces deleted. A crash at any step reads
+    * as the face before or after the seal: never a stream epoch counted
+    * twice. The stream files are listed before `build` resolves them;
+    * compaction is a barrier, so no epoch lands in between. */
+  private def seal(spark: SparkSession, dir: String, streams: Seq[String] = Nil,
+      drop: Seq[String] = Nil)(build: Stage => Unit): Unit = {
+    val root = new Path(dir)
+    val fs = StoreCommit.fileSystem(root, spark.sparkContext.hadoopConfiguration)
+    val folded = streams.map(s => nameOf(s) -> streamFiles(spark, s).map(_._1).toSeq).filter(_._2.nonEmpty)
+    val stage = new Stage(spark, dir)
+    build(stage)
+    manifest(spark, dir).foreach(m => m.tables.keys.filterNot(stage.tables.contains).foreach(t =>
+      stage.put(t, m.table(spark, dir, t).get)))
+    val bytes = json.writeValueAsBytes(Manifest("graft-face", 1, stage.path.getName, stage.tables.toMap, folded.toMap))
+    val others = stage.tables.keys.filter(_ != nameOf(dir)).map(t => new Path(root.getParent, t)).toSeq
+    try StoreCommit.commit(fs, root, stage.path, bytes, others)
+    finally manifests.remove(dir)
+    drop.foreach(manifests.remove)
+    (streams ++ drop).foreach(d => fs.delete(new Path(d), true))
   }
+
+  /** Test set-up: publish `tables` (table dir -> rows) as the face that
+    * holds them, as a batch build would. */
+  private[graft] def publish(spark: SparkSession, tables: (String, DataFrame)*): Unit =
+    seal(spark, face(tables.head._1))(stage => tables.foreach { case (dir, df) => stage.put(dir, df) })
 
   /** A face's two sides as [[layers]] finds them: the batch relation and
     * the stream side, each present only when it holds data. */
@@ -198,28 +279,48 @@ object SignatureStore {
 
   /** The single "no store" error: neither side of face `dir` holds data. */
   private def missingStore(dir: String) = new IllegalArgumentException(
-    s"no ${dir.substring(dir.lastIndexOf('/') + 1)} store under " +
-      dir.substring(0, dir.lastIndexOf('/')))
+    s"no ${nameOf(dir)} store under ${dir.substring(0, dir.lastIndexOf('/'))}")
 
-  /** Both sides of face `dir`, projected to `cols` (no projection when
-    * `cols` is empty): the cached batch relation when it holds data,
-    * and the stream subtree when it holds data, with its `batch_id`
-    * cast to long for the latest-wins readers. The batch side is
-    * probed with [[hasSealedData]], which restores a parked `_bak`.
-    *
-    * Sides are admitted only when they hold at least one DATA file: a
-    * micro-batch where every row was gated away writes a directory
-    * holding only `_SUCCESS`, and reading it would throw "Unable to
-    * infer schema", bricking the whole store. */
+  /** Both sides of table `dir`, projected to `cols` (no projection when
+    * `cols` is empty): the table in its face's published stage, and the
+    * stream subtree when it holds data files the stage does not fold
+    * in, with its `batch_id` cast to long for the latest-wins readers. */
   private def layers(spark: SparkSession, dir: String, cols: Column*): Layers = {
     def project(df: DataFrame, extra: Column*) =
       if (cols.isEmpty) df else df.select(cols ++ extra: _*)
-    val batch = Option.when(hasSealedData(spark, dir))(project(readSealed(spark, dir)))
-    val stream = Option.when(hasData(spark, streamDir(dir)))(project(
-      spark.read.parquet(streamDir(dir)).withColumn("batch_id", col("batch_id").cast("long")),
-      col("batch_id")))
-    Layers(dir, batch, stream)
+    val m = manifest(spark, face(dir))
+    val folded = m.flatMap(_.folded.get(nameOf(streamDir(dir)))).getOrElse(Nil).toSet
+    val stream = streamRows(spark, streamDir(dir), folded).map(s => project(
+      s.withColumn("batch_id", col("batch_id").cast("long")), col("batch_id")))
+    Layers(dir, m.map(_ => project(published(spark, dir))), stream)
   }
+
+  /** Stream subtree `dir` without the `folded` files; None when no data
+    * file is left. A subtree that a crash left beside the stage that
+    * folds it in is listed in full; any other is probed for its first
+    * data file only. */
+  private def streamRows(spark: SparkSession, dir: String, folded: Set[String]): Option[DataFrame] =
+    if (folded.isEmpty) Option.when(hasData(spark, dir))(spark.read.parquet(dir))
+    else {
+      val left = streamFiles(spark, dir).collect { case (rel, p) if !folded(rel) => p.toString }.toSeq
+      Option.when(left.nonEmpty)(spark.read.option("basePath", dir).parquet(left: _*))
+    }
+
+  /** The data files under stream subtree `dir`, relative to it, listed
+    * as they are consumed. A micro-batch where every row was gated away
+    * writes no data file, and reading a subtree without one throws
+    * "Unable to infer schema". */
+  private def streamFiles(spark: SparkSession, dir: String): Iterator[(String, Path)] = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(dir))
+    if (!fs.exists(root)) return Iterator.empty
+    val it = fs.listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath).filter(p => StoreCommit.isData(p.getName))
+      .map(p => root.toUri.relativize(p.toUri).getPath -> p)
+  }
+
+  /** Does stream subtree `dir` hold a data file? Lists up to the first. */
+  private def hasData(spark: SparkSession, dir: String): Boolean = streamFiles(spark, dir).hasNext
 
   /** Append one stream epoch: `df` lands under `dir` keyed by
     * `batch_id` (then `partitionCols`), with dynamic partition overwrite
@@ -234,138 +335,14 @@ object SignatureStore {
       .partitionBy("batch_id" +: partitionCols: _*)
       .parquet(dir)
 
-  /** Compaction seal: every `(dir, resolved)` table is written to its
-    * `_compact_tmp` sibling FIRST (the resolves read the directories
-    * being replaced, and a multi-table seal must not swap one table
-    * while another's resolve still needs the old state), then each is
-    * swapped in with [[swapDir]] in the given order, and only then are
-    * the `drop` directories (consumed stream subtrees, stale snapshots)
-    * deleted and their probe memo and cached relations dropped.
-    *
-    * A crash before the drops leaves the sealed tables beside the
-    * stream rows they already fold in: a re-resolve is idempotent for
-    * the distinct / latest-wins / max / bit_or / first-wins / KMV
-    * faces, but re-adds the stream for the additive faces (count-min,
-    * quantile bins, MG counters) until the stream subtree is dropped. */
-  private def seal(spark: SparkSession, resolved: Seq[(String, DataFrame)],
-      drop: Seq[String] = Nil): Unit = {
-    val tmps = resolved.map { case (dir, df) =>
-      val tmp = s"${dir}_compact_tmp"
-      df.write.mode("overwrite").parquet(tmp)
-      dir -> tmp
-    }
-    tmps.foreach { case (dir, tmp) => swapDir(spark, dir, tmp) }
-    drop.foreach { dir =>
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      invalidateProbe(dir)
-    }
-  }
-
   /** Single-face compaction: fold `dir`'s stream subtree into its batch
     * build with the reader's own resolve (no-op without stream data). */
   private def compactInto(spark: SparkSession, dir: String)(resolved: => DataFrame): Unit =
     if (hasData(spark, streamDir(dir)))
-      seal(spark, Seq(dir -> resolved), drop = Seq(streamDir(dir)))
-
-  /** Rename-aside directory swap: `tmp` becomes `dest` with the old
-    * `dest` PARKED at `dest_bak` until the new state is in place, then
-    * the park is dropped. A crash at any step leaves either the old
-    * state (live, or recoverable from `_bak` via [[recoverFromBak]])
-    * or the new one — never neither. The plain delete-then-rename it
-    * replaces had a window (post-delete, pre-rename) that silently
-    * lost the store: readers saw an EMPTY directory, not an error, and
-    * a subsequent seal would have frozen the loss. The probe pin on
-    * `dest` is dropped first, so a swap that fails midway in this JVM
-    * is still recovered by the next reader. */
-  private def swapDir(spark: SparkSession, dest: String, tmp: String): Unit = {
-    val d = new Path(dest)
-    val bak = new Path(dest + "_bak")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    probeMemo.remove(dest)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(d))
-      require(fs.rename(d, bak), s"swap park $dest -> $bak failed")
-    require(fs.rename(new Path(tmp), d), s"swap rename $tmp -> $dest failed")
-    fs.delete(bak, true)
-    graft.util.Tables.evict(dest) // a cached relation lists the OLD files
-  }
-
-  /** Crash recovery for [[swapDir]]: a parked `_bak` beside a MISSING
-    * live directory means the crash hit between the park and the
-    * rename-in — restore the park. True when it restored one. */
-  private def recoverFromBak(spark: SparkSession, dest: String): Boolean = {
-    val d = new Path(dest)
-    val bak = new Path(dest + "_bak")
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parked = !fs.exists(d) && fs.exists(bak)
-    if (parked) {
-      require(fs.rename(bak, d), s"swap recovery $bak -> $dest failed")
-      graft.util.Tables.evict(dest)
-    }
-    parked
-  }
-
-  /** [[hasData]] for a batch face, first restoring a parked `_bak`
-    * ([[recoverFromBak]]) when `dir` holds no data — only then, so the
-    * memoized path makes no filesystem call. [[layers]] and
-    * [[readBatch]] probe every batch face they read through it. */
-  private def hasSealedData(spark: SparkSession, dir: String): Boolean =
-    hasData(spark, dir) || (recoverFromBak(spark, dir) && hasData(spark, dir))
-
-  /** The cached relation of batch face `dir`, read under the
-    * [[hasSealedData]] rule — for the batch faces a reader opens
-    * without [[layers]]: the doclens beside the postings, and the
-    * batch-only span read. */
-  private def readBatch(spark: SparkSession, dir: String): DataFrame = {
-    hasSealedData(spark, dir)
-    readSealed(spark, dir)
-  }
-
-  /** Does `dir` hold at least one DATA file? (A micro-batch where every
-    * row was gated away writes only `_SUCCESS`; reading such a directory
-    * throws "Unable to infer schema".) Positive results for non-stream
-    * subtrees are memoized (see [[probeMemo]]). */
-  private def hasData(spark: SparkSession, dir: String): Boolean =
-    hasData(spark, dir, cacheable = !dir.contains("_stream"))
-
-  /** `cacheable = false` forces a REAL listing — for directories the
-    * maintenance paths rewrite in place (the cluster store swaps every
-    * micro-batch), where "once non-empty, always non-empty" is only
-    * true absent crashes and a pinned `true` would turn a recoverable
-    * loss into a hard read failure. */
-  private def hasData(spark: SparkSession, dir: String, cacheable: Boolean): Boolean = {
-    if (cacheable && probeMemo.contains(dir)) return true
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val found = fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var f = false
-      while (!f && it.hasNext) {
-        val name = it.next().getPath.getName
-        f = !(name.startsWith("_") || name.startsWith("."))
-      }
-      f
-    }
-    if (found && cacheable) probeMemo.put(dir, true)
-    found
-  }
-
-  /** Sealed-marker probe with the same positive-only memo: `ensure*`
-    * checks its `_SUCCESS` marker on every call, but a sealed batch
-    * build never un-exists. */
-  private def sealedMarkerExists(spark: SparkSession, markerPath: String): Boolean = {
-    if (probeMemo.contains(markerPath)) return true
-    val p = new Path(markerPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val e = fs.exists(p)
-    if (e) probeMemo.put(markerPath, true)
-    e
-  }
+      seal(spark, dir, Seq(streamDir(dir)))(_.put(dir, resolved))
 
   def readSimhash(spark: SparkSession, base: String): DataFrame =
-    readSealed(spark, simhashDir(base))
+    published(spark, simhashDir(base))
 
   /** Root directory for derived signature stores. On a cluster set
     * `spark.graft.sigstore.root` to a shared filesystem path (HDFS/S3) —
@@ -375,10 +352,11 @@ object SignatureStore {
     spark.conf.getOption("spark.graft.sigstore.root")
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
-  /** Store location for a given input dataset. The cache key covers the
-    * dataset path AND a content fingerprint (names + sizes + mtimes of
-    * the documents parquet files), so regenerating data at the same path
-    * invalidates the store instead of silently serving stale signatures.
+  /** Store location for a given input dataset. The cache key is a
+    * SHA-256 of the dataset path AND a content fingerprint (names +
+    * sizes + mtimes of the documents parquet files), so regenerating
+    * data at the same path invalidates the store instead of silently
+    * serving stale signatures, and no two datasets share a base.
     * All probing goes through the Hadoop FileSystem API, so the
     * fingerprint works identically for local, HDFS and object-store
     * paths (a `java.io.File` listing silently degenerates to a path-only
@@ -396,18 +374,22 @@ object SignatureStore {
         val st = fs.getFileStatus(docs)
         s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
       }
-    val fp = Integer.toHexString((sfDir + "#" + listing).hashCode)
+    // 64 bits of the digest: a longer name would push the table name out
+    // of the location Spark prints for every scan (100 characters)
+    val fp = java.security.MessageDigest.getInstance("SHA-256")
+      .digest((sfDir + "#" + listing).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
     s"${storeRoot(spark)}/graft_sigstore_$fp"
   }
 
   /** Minhash band table for `sfDir`, building the store on first use
     * (idempotent; subsequent calls are pure parquet reads). The build
-    * writes this face alone — the simhash face seals its own directory
-    * under its own lock, so the two first builds never overlap. */
+    * writes this face alone — the simhash face seals under its own
+    * lock, so the two first builds never overlap. */
   def ensureMinhashBands(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, minhashDir(base))(TextQueries.minhashBandsOf(documents(spark, sfDir))
-      .write.mode("overwrite").partitionBy("band").parquet(minhashDir(base)))
+    sealOnce(spark, minhashDir(base))(
+      _.put(minhashDir(base), TextQueries.minhashBandsOf(documents(spark, sfDir))))
     readMinhashBands(spark, base)
   }
 
@@ -421,8 +403,7 @@ object SignatureStore {
   /** OPH band table for `sfDir`, building the store on first use. */
   def ensureOphBands(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, ophDir(base))(TextQueries.ophBandsOf(documents(spark, sfDir))
-      .write.mode("overwrite").partitionBy("band").parquet(ophDir(base)))
+    sealOnce(spark, ophDir(base))(_.put(ophDir(base), TextQueries.ophBandsOf(documents(spark, sfDir))))
     readOphBands(spark, base)
   }
 
@@ -451,18 +432,16 @@ object SignatureStore {
     * parquet reads — encode never re-pays training. */
   def ensureBpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = bpeMergesDir(defaultBase(spark, sfDir))
-    sealOnce(spark, dir)(BpeQueries.trainedMergesDf(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(dir))
-    readSealed(spark, dir)
+    sealOnce(spark, dir)(_.put(dir, BpeQueries.trainedMergesDf(spark, sfDir).coalesce(1)))
+    published(spark, dir)
   }
 
   /** The trained unigram-LM model table for `sfDir` (piece, count,
     * score) — [[ensureBpeMerges]]'s twin for the other subword scheme. */
   def ensureUnigramModel(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = unigramModelDir(defaultBase(spark, sfDir))
-    sealOnce(spark, dir)(UnigramQueries.trainedModelDf(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(dir))
-    readSealed(spark, dir)
+    sealOnce(spark, dir)(_.put(dir, UnigramQueries.trainedModelDf(spark, sfDir).coalesce(1)))
+    published(spark, dir)
   }
 
   // ------------------------------------------------------------------
@@ -497,8 +476,7 @@ object SignatureStore {
   private def ensurePairs(spark: SparkSession, sfDir: String, family: String,
       bands: => DataFrame): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, pairsDir(base, family))(TextQueries.bandedPairs(bands)
-      .write.mode("overwrite").parquet(pairsDir(base, family)))
+    sealOnce(spark, pairsDir(base, family))(_.put(pairsDir(base, family), TextQueries.bandedPairs(bands)))
     readPairs(spark, base, family)
   }
 
@@ -534,8 +512,8 @@ object SignatureStore {
   /** Compaction seal for a pair family: recompute the FULL banded
     * self-join from the current band store (not a union-distinct of
     * the deltas — the rebuild is what restores exact bucket-cap
-    * semantics after incremental appends) and swap it in; the stream
-    * subtree is consumed. Post-condition: [[readPairs]] equals a fresh
+    * semantics after incremental appends) and seal it; the stream
+    * subtree is folded in. Post-condition: [[readPairs]] equals a fresh
     * [[TextQueries.bandedPairs]] over the band store, bit for bit. */
   def compactPairs(spark: SparkSession, base: String, family: String): Unit = {
     val bands = family match {
@@ -544,16 +522,15 @@ object SignatureStore {
       case other => throw new IllegalArgumentException(s"unknown pair family $other")
     }
     val dir = pairsDir(base, family)
-    if (hasData(spark, streamDir(dir)) || !sealedMarkerExists(spark, s"$dir/_SUCCESS"))
-      seal(spark, Seq(dir -> TextQueries.bandedPairs(bands)), drop = Seq(streamDir(dir)))
+    if (hasData(spark, streamDir(dir)) || manifest(spark, dir).isEmpty)
+      seal(spark, dir, Seq(streamDir(dir)))(_.put(dir, TextQueries.bandedPairs(bands)))
   }
 
   /** Simhash signature table for `sfDir`, building the store on first
     * use (the simhash half of [[write]]). */
   def ensureSimhash(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, simhashDir(base))(TextQueries.simhashSigsOf(documents(spark, sfDir))
-      .write.mode("overwrite").parquet(simhashDir(base)))
+    sealOnce(spark, simhashDir(base))(_.put(simhashDir(base), TextQueries.simhashSigsOf(documents(spark, sfDir))))
     readSimhash(spark, base)
   }
 
@@ -613,7 +590,7 @@ object SignatureStore {
   def ensureIvfAssignments(spark: SparkSession, sfDir: String,
       build: () => DataFrame): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, ivfDir(base))(build().write.mode("overwrite").parquet(ivfDir(base)))
+    sealOnce(spark, ivfDir(base))(_.put(ivfDir(base), build()))
     readIvfAssignments(spark, base)
   }
 
@@ -637,7 +614,7 @@ object SignatureStore {
   def ensureQuantizedVectors(spark: SparkSession, sfDir: String,
       build: () => DataFrame): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, q8Dir(base))(build().write.mode("overwrite").parquet(q8Dir(base)))
+    sealOnce(spark, q8Dir(base))(_.put(q8Dir(base), build()))
     readQuantizedVectors(spark, base)
   }
 
@@ -653,8 +630,8 @@ object SignatureStore {
   def ensureLshBuckets(spark: SparkSession, sfDir: String,
       build: () => DataFrame): DataFrame = {
     val dir = lshBucketsDir(defaultBase(spark, sfDir))
-    sealOnce(spark, dir)(build().write.mode("overwrite").partitionBy("band").parquet(dir))
-    readSealed(spark, dir)
+    sealOnce(spark, dir)(_.put(dir, build()))
+    published(spark, dir)
       .select(col("vec_id"), col("band").cast("int").as("band"), col("key"))
   }
 
@@ -664,7 +641,7 @@ object SignatureStore {
   /** The trained PQ codebook (m, code, sp, ci) — fixed M·K·SubDim rows,
     * broadcast by every consumer. */
   def readPqCodebook(spark: SparkSession, base: String): DataFrame =
-    readSealed(spark, pqCodebookDir(base)).select("m", "code", "sp", "ci")
+    published(spark, pqCodebookDir(base)).select("m", "code", "sp", "ci")
 
   /** Shared packed-code resolve (latest-wins per vec_id within the
     * stream, stream supersedes batch) — used by both the flat PQ and
@@ -686,7 +663,7 @@ object SignatureStore {
   def rpqCodesDir(base: String) = s"$base/rpq_codes"
 
   def readResidualPqCodebook(spark: SparkSession, base: String): DataFrame =
-    readSealed(spark, rpqCodebookDir(base)).select("m", "code", "sp", "ci")
+    published(spark, rpqCodebookDir(base)).select("m", "code", "sp", "ci")
 
   /** Stored RESIDUAL PQ codes, unpacked — same resolve contract as
     * [[readPqCodes]]; codes quantize IVF residuals, so they are only
@@ -704,10 +681,9 @@ object SignatureStore {
       buildCodebook: () => DataFrame,
       encode: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, rpqCodesDir(base)) {
-      buildCodebook().write.mode("overwrite").parquet(rpqCodebookDir(base))
-      encode(readResidualPqCodebook(spark, base))
-        .write.mode("overwrite").parquet(rpqCodesDir(base))
+    sealOnce(spark, rpqCodesDir(base)) { stage =>
+      val codebook = stage.put(rpqCodebookDir(base), buildCodebook())
+      stage.put(rpqCodesDir(base), encode(codebook.select("m", "code", "sp", "ci")))
     }
     (readResidualPqCodebook(spark, base), readResidualPqCodes(spark, base))
   }
@@ -726,10 +702,9 @@ object SignatureStore {
       buildCodebook: () => DataFrame,
       encode: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, pqCodesDir(base)) {
-      buildCodebook().write.mode("overwrite").parquet(pqCodebookDir(base))
-      encode(readPqCodebook(spark, base))
-        .write.mode("overwrite").parquet(pqCodesDir(base))
+    sealOnce(spark, pqCodesDir(base)) { stage =>
+      val codebook = stage.put(pqCodebookDir(base), buildCodebook())
+      stage.put(pqCodesDir(base), encode(codebook.select("m", "code", "sp", "ci")))
     }
     (readPqCodebook(spark, base), readPqCodes(spark, base))
   }
@@ -749,15 +724,19 @@ object SignatureStore {
     * keyed on fingerprints/doc_id throughout. Re-sent docs resolve
     * LATEST-WINS (newest batch's grams replace older versions — same
     * contract as the bm25/q8 stores). */
-  def readSpans(spark: SparkSession, base: String): DataFrame =
-    if (!hasData(spark, streamDir(spanGramsDir(base)))) readBatch(spark, spansDir(base))
-    else TextQueries.spansFromGrams(latestGrams(spark, base))
+  def readSpans(spark: SparkSession, base: String): DataFrame = {
+    val grams = gramLayers(spark, base)
+    if (grams.stream.isEmpty) published(spark, spansDir(base))
+    else TextQueries.spansFromGrams(latestGrams(grams))
+  }
+
+  private def gramLayers(spark: SparkSession, base: String): Layers =
+    layers(spark, spanGramsDir(base), col("doc_id"), col("pos"), col("gram"))
 
   /** The latest-wins positioned-gram table (doc_id, pos, gram) over the
-    * gram face's batch (as epoch -1) and stream sides. */
-  private def latestGrams(spark: SparkSession, base: String): DataFrame = {
-    val all = layers(spark, spanGramsDir(base), col("doc_id"), col("pos"), col("gram"))
-      .get(identity)((b, s) => b.withColumn("batch_id", lit(-1L)).unionByName(s))
+    * gram table's batch (as epoch -1) and stream sides. */
+  private def latestGrams(grams: Layers): DataFrame = {
+    val all = grams.get(identity)((b, s) => b.withColumn("batch_id", lit(-1L)).unionByName(s))
     val latest = all.groupBy("doc_id").agg(max("batch_id").as("batch_id"))
     all.join(latest, Seq("doc_id", "batch_id")).select("doc_id", "pos", "gram")
   }
@@ -775,33 +754,22 @@ object SignatureStore {
     * one. */
   def ensureSpans(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, spansDir(base)) {
-      val g = TextQueries.positionedGrams8(documents(spark, sfDir)).localCheckpoint()
-      g.write.mode("overwrite").parquet(spanGramsDir(base))
-      TextQueries.spansFromGrams(g)
-        .write.mode("overwrite").parquet(spansDir(base))
+    sealOnce(spark, spansDir(base)) { stage =>
+      val g = stage.put(spanGramsDir(base), TextQueries.positionedGrams8(documents(spark, sfDir)))
+      stage.put(spansDir(base), TextQueries.spansFromGrams(g))
     }
     readSpans(spark, base)
   }
 
-  /** Compact the span-gram store — the second two-table seal (see
-    * [[compactBm25]]): the latest-wins positioned-gram table AND the
-    * spans re-derived from it both materialize into tmp dirs BEFORE any
-    * directory is swapped (the resolved grams are persisted so the span
-    * pass does not resolve them twice). Swap order grams→spans→stream:
-    * while the stream subtree exists, [[readSpans]] re-derives from
-    * (grams ∪ stream) with latest-wins, and re-resolving already-sealed
-    * stream rows is value-idempotent — so every crash window serves the
-    * same spans; after the stream delete, reads hit the sealed spans
-    * directly. */
+  /** Compact the span face — a two-table seal: the latest-wins
+    * positioned-gram table, and the spans re-derived from it as written
+    * (so the span pass does not resolve the grams twice). */
   def compactSpans(spark: SparkSession, base: String): Unit =
-    if (hasData(spark, streamDir(spanGramsDir(base)))) {
-      val grams = latestGrams(spark, base).persist()
-      try seal(spark, Seq(spanGramsDir(base) -> grams,
-          spansDir(base) -> TextQueries.spansFromGrams(grams)),
-        drop = Seq(streamDir(spanGramsDir(base))))
-      finally grams.unpersist()
-    }
+    if (hasData(spark, streamDir(spanGramsDir(base))))
+      seal(spark, spansDir(base), Seq(streamDir(spanGramsDir(base)))) { stage =>
+        val grams = stage.put(spanGramsDir(base), latestGrams(gramLayers(spark, base)))
+        stage.put(spansDir(base), TextQueries.spansFromGrams(grams))
+      }
 
   def eventTransitionsDir(base: String) = s"$base/event_transitions"
 
@@ -818,9 +786,8 @@ object SignatureStore {
     * corpus. */
   def ensureEventTransitions(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, eventTransitionsDir(base))(RelationalQueries.eventTriples(spark, sfDir)
-      .groupBy("e1", "e2", "e3").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(eventTransitionsDir(base)))
+    sealOnce(spark, eventTransitionsDir(base))(_.put(eventTransitionsDir(base),
+      RelationalQueries.eventTriples(spark, sfDir).groupBy("e1", "e2", "e3").agg(count(lit(1)).as("n"))))
     readEventTransitions(spark, base)
   }
 
@@ -876,8 +843,8 @@ object SignatureStore {
     * the same oracle. */
   def ensurePhraseBigrams(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, phraseBigramsDir(base))(SearchQueries.bigramsOf(documents(spark, sfDir))
-      .write.mode("overwrite").parquet(phraseBigramsDir(base)))
+    sealOnce(spark, phraseBigramsDir(base))(
+      _.put(phraseBigramsDir(base), SearchQueries.bigramsOf(documents(spark, sfDir))))
     readPhraseBigrams(spark, base)
   }
 
@@ -920,27 +887,23 @@ object SignatureStore {
   def compactLineRegistry(spark: SparkSession, base: String): Unit =
     compactInto(spark, linesDir(base))(readLineRegistry(spark, base))
 
-  /** Compact the BM25 store — the TWO-TABLE variant of the seal: the
-    * postings and doclens artifacts share one stream subtree, so both
-    * resolves must materialize BEFORE any directory is touched (swapping
-    * postings first would delete the stream rows the doclens resolve
-    * still needs). Swap order puts the postings marker last: a crash
-    * window can leave both tmp dirs or doclens-only swapped, never a
-    * postings marker over a stale doclens; a crash before the stream
-    * delete is idempotent (stream docs supersede their own compacted
-    * rows with identical values).
+  /** Compact the BM25 face — a two-table seal: postings and doclens
+    * share one stream subtree, and both resolves read it.
     *
     * The ranked-results face ([[ensureBm25TopK]]) is a SNAPSHOT of
-    * pre-append corpus stats — after this seal it is stale, and the
-    * positive probe memo would serve it forever. The seal DROPS it (and
-    * its memo pins) so the next ensureBm25TopK rebuilds from the sealed
-    * postings; callers wanting the rebuild eagerly follow the seal with
+    * pre-append corpus stats — after this seal it is stale, and its
+    * pinned manifest would serve it forever. The seal DROPS that face
+    * so the next ensureBm25TopK rebuilds from the sealed postings;
+    * callers wanting the rebuild eagerly follow the seal with
     * [[refreshBm25TopK]]. */
   def compactBm25(spark: SparkSession, base: String): Unit =
     if (hasData(spark, streamDir(bm25PostingsDir(base)))) {
       val (p, l) = readBm25(spark, base)
-      seal(spark, Seq(bm25DoclensDir(base) -> l, bm25PostingsDir(base) -> p),
-        drop = Seq(streamDir(bm25PostingsDir(base)), bm25TopkDir(base)))
+      seal(spark, bm25PostingsDir(base), Seq(streamDir(bm25PostingsDir(base))),
+          drop = Seq(bm25TopkDir(base))) { stage =>
+        stage.put(bm25DoclensDir(base), l)
+        stage.put(bm25PostingsDir(base), p)
+      }
     }
 
   def dailyKmvDir(base: String) = s"$base/daily_kmv"
@@ -964,8 +927,7 @@ object SignatureStore {
   def ensureDailyKmv(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
     sealOnce(spark, dailyKmvDir(base))(
-      SketchQueries.dailyUserSketch(graft.util.Tables.events(spark, sfDir))
-        .write.mode("overwrite").parquet(dailyKmvDir(base)))
+      _.put(dailyKmvDir(base), SketchQueries.dailyUserSketch(graft.util.Tables.events(spark, sfDir))))
     readDailyKmv(spark, base)
   }
 
@@ -991,9 +953,8 @@ object SignatureStore {
   /** Build-on-first-use for the count-min cell store. */
   def ensureCountMin(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, countMinDir(base))(
-      SketchQueries.countMinCells(SketchQueries.tokenVocab(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(countMinDir(base)))
+    sealOnce(spark, countMinDir(base))(_.put(countMinDir(base),
+      SketchQueries.countMinCells(SketchQueries.tokenVocab(documents(spark, sfDir)))))
     readCountMin(spark, base)
   }
 
@@ -1018,11 +979,8 @@ object SignatureStore {
   /** Build-on-first-use for the per-event-type HLL register store. */
   def ensureHll(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, hllDir(base))(
-      SketchQueries.hllRegisters(
-          events(spark, sfDir)
-            .select(col("event_type").as("stratum"), col("user_id")))
-        .write.mode("overwrite").parquet(hllDir(base)))
+    sealOnce(spark, hllDir(base))(_.put(hllDir(base), SketchQueries.hllRegisters(
+      events(spark, sfDir).select(col("event_type").as("stratum"), col("user_id")))))
     readHll(spark, base)
   }
 
@@ -1048,8 +1006,7 @@ object SignatureStore {
   def ensureQuantileBins(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
     sealOnce(spark, quantileBinsDir(base))(
-      SketchQueries.sourceLengthBins(documents(spark, sfDir))
-        .write.mode("overwrite").parquet(quantileBinsDir(base)))
+      _.put(quantileBinsDir(base), SketchQueries.sourceLengthBins(documents(spark, sfDir))))
     readQuantileBins(spark, base)
   }
 
@@ -1074,8 +1031,7 @@ object SignatureStore {
   def ensureBloom(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
     sealOnce(spark, bloomDir(base))(
-      SketchQueries.bloomOf(SketchQueries.evalSplit(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(bloomDir(base)))
+      _.put(bloomDir(base), SketchQueries.bloomOf(SketchQueries.evalSplit(documents(spark, sfDir)))))
     readBloom(spark, base)
   }
 
@@ -1083,8 +1039,8 @@ object SignatureStore {
   def compactBloom(spark: SparkSession, base: String): Unit =
     compactInto(spark, bloomDir(base))(readBloom(spark, base))
 
-  /** Misra–Gries faces; counters and λs are separate faces (each with
-    * its own `_stream` sibling) because their schemas differ. */
+  /** Misra–Gries tables: counters and λs, one face, each table with its
+    * own `_stream` sibling because their schemas differ. */
   def mgCountersDir(base: String) = s"$base/mg_counters"
   def mgLambdasDir(base: String) = s"$base/mg_lambdas"
 
@@ -1121,31 +1077,29 @@ object SignatureStore {
     (counters, lambdas)
   }
 
-  /** Build-on-first-use for the MG summary store. λs are written before
-    * the counters marker: a crash window can leave λs-only (the next
-    * ensure rebuilds both), never counters over missing λs. */
+  /** Build-on-first-use for the MG summary store. */
   def ensureHeavyHitters(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, mgCountersDir(base)) {
+    sealOnce(spark, mgCountersDir(base)) { stage =>
       val (counters, lambdas) = SketchQueries.mgSummaries(
         SketchQueries.sourceTokenCounts(documents(spark, sfDir)))
-      lambdas.write.mode("overwrite").parquet(mgLambdasDir(base))
-      counters.write.mode("overwrite").parquet(mgCountersDir(base))
+      stage.put(mgLambdasDir(base), lambdas)
+      stage.put(mgCountersDir(base), counters)
     }
     readHeavyHitters(spark, base)
   }
 
-  /** Compact the MG store — a two-table seal like [[compactBm25]]: both
-    * resolves materialize into tmp dirs BEFORE any directory is touched
-    * (the resolve reads the dirs being replaced), then λs swap first and
-    * counters last, so a crash window never leaves a counters marker
-    * over a stale λ budget. Sealing is value-idempotent: re-resolving a
-    * compacted store re-prunes with λ_m = 0 and adds nothing to λ. */
+  /** Compact the MG face — a two-table seal like [[compactBm25]].
+    * Sealing is value-idempotent: re-resolving a compacted store
+    * re-prunes with λ_m = 0 and adds nothing to λ. */
   def compactHeavyHitters(spark: SparkSession, base: String): Unit = {
     val streams = Seq(streamDir(mgCountersDir(base)), streamDir(mgLambdasDir(base)))
     if (streams.exists(hasData(spark, _))) {
       val (c, l) = readHeavyHitters(spark, base)
-      seal(spark, Seq(mgLambdasDir(base) -> l, mgCountersDir(base) -> c), drop = streams)
+      seal(spark, mgCountersDir(base), streams) { stage =>
+        stage.put(mgLambdasDir(base), l)
+        stage.put(mgCountersDir(base), c)
+      }
     }
   }
 
@@ -1168,9 +1122,8 @@ object SignatureStore {
     * the same oracle. */
   def ensureImagePhash(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, imagePhashDir(base))(
-      Multimodal.imagePhash(Multimodal.pngAssets(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(imagePhashDir(base)))
+    sealOnce(spark, imagePhashDir(base))(_.put(imagePhashDir(base),
+      Multimodal.imagePhash(Multimodal.pngAssets(documents(spark, sfDir)))))
     readImagePhash(spark, base)
   }
 
@@ -1199,8 +1152,8 @@ object SignatureStore {
     * oracles. */
   def ensureFrameDiffs(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, frameDiffDir(base))(Multimodal.frameDiffs(documents(spark, sfDir))
-      .write.mode("overwrite").parquet(frameDiffDir(base)))
+    sealOnce(spark, frameDiffDir(base))(
+      _.put(frameDiffDir(base), Multimodal.frameDiffs(documents(spark, sfDir))))
     readFrameDiffs(spark, base)
   }
 
@@ -1246,8 +1199,7 @@ object SignatureStore {
   def readBm25(spark: SparkSession, base: String): (DataFrame, DataFrame) = {
     val l = layers(spark, bm25PostingsDir(base))
     val stream = l.stream.map(_.select("doc_id", "token", "tf", "dl", "batch_id"))
-    val lens = Layers(bm25DoclensDir(base),
-      l.batch.map(_ => readBatch(spark, bm25DoclensDir(base))),
+    val lens = Layers(bm25DoclensDir(base), batch(spark, bm25DoclensDir(base)),
       stream.map(_.select("doc_id", "dl", "batch_id")))
     (docLatestWins(l.copy(stream = stream)), docLatestWins(lens)) match {
       case (Some(p), Some(d)) => (p, d)
@@ -1265,12 +1217,10 @@ object SignatureStore {
     * the same oracle and never re-tokenizes corpus text. */
   def ensureBm25(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, bm25PostingsDir(base)) {
+    sealOnce(spark, bm25PostingsDir(base)) { stage =>
       val docs = documents(spark, sfDir)
-      SearchQueries.doclensOf(docs)
-        .write.mode("overwrite").parquet(bm25DoclensDir(base))
-      SearchQueries.postingsOf(docs)
-        .write.mode("overwrite").parquet(bm25PostingsDir(base))
+      stage.put(bm25DoclensDir(base), SearchQueries.doclensOf(docs))
+      stage.put(bm25PostingsDir(base), SearchQueries.postingsOf(docs))
     }
     // spread the postings across all cores at the SERVING boundary: a
     // fixture-scale store arrives as one input split, which serializes
@@ -1303,21 +1253,16 @@ object SignatureStore {
     * past the seal; [[refreshBm25TopK]] rebuilds it eagerly. */
   def ensureBm25TopK(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = bm25TopkDir(defaultBase(spark, sfDir))
-    // this face is swapDir-maintained ([[refreshBm25TopK]]) and read
-    // without a data probe: a crash in the park→rename window leaves
-    // the snapshot at `_bak` while a same-session probeMemo pin on the
-    // marker would skip the rebuild and fail on the missing directory
-    // — restore the park FIRST, like [[readClusters]]
-    recoverFromBak(spark, dir)
-    sealOnce(spark, dir)(SearchQueries.bm25TopKOf(spark, sfDir)
-      .write.mode("overwrite").parquet(dir))
-    readSealed(spark, dir)
+    sealOnce(spark, dir)(_.put(dir, SearchQueries.bm25TopKOf(spark, sfDir)))
+    published(spark, dir)
   }
 
   /** Rebuild the ranked-results snapshot from the current postings
     * store — the seal-time companion of [[compactBm25]]. */
-  def refreshBm25TopK(spark: SparkSession, sfDir: String): Unit =
-    seal(spark, Seq(bm25TopkDir(defaultBase(spark, sfDir)) -> SearchQueries.bm25TopKOf(spark, sfDir)))
+  def refreshBm25TopK(spark: SparkSession, sfDir: String): Unit = {
+    val dir = bm25TopkDir(defaultBase(spark, sfDir))
+    seal(spark, dir)(_.put(dir, SearchQueries.bm25TopKOf(spark, sfDir)))
+  }
 
   def linesDir(base: String) = s"$base/line_registry"
 
@@ -1350,9 +1295,8 @@ object SignatureStore {
     * equi-joins this artifact, held to the same oracle. */
   def ensureLineRegistry(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, linesDir(base))(
-      TextQueries.lineRegistryOf(TextQueries.linesOf(documents(spark, sfDir)))
-        .write.mode("overwrite").parquet(linesDir(base)))
+    sealOnce(spark, linesDir(base))(_.put(linesDir(base),
+      TextQueries.lineRegistryOf(TextQueries.linesOf(documents(spark, sfDir)))))
     readLineRegistry(spark, base)
   }
 
@@ -1368,22 +1312,15 @@ object SignatureStore {
     * this store is what a production corpus pipeline reads. */
   def ensureClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val base = defaultBase(spark, sfDir)
-    sealOnce(spark, clustersDir(base))(TextQueries.clusterAssignments(spark, sfDir)
-      .write.mode("overwrite").parquet(clustersDir(base)))
-    readSealed(spark, clustersDir(base))
+    sealOnce(spark, clustersDir(base))(_.put(clustersDir(base), TextQueries.clusterAssignments(spark, sfDir)))
+    published(spark, clustersDir(base))
   }
 
-  /** Current cluster assignments at `base`, empty when never built.
-    * Recovers a parked `_bak` first: the cluster store is maintained by
-    * [[swapDir]] every micro-batch, so a crashed swap must restore the
-    * previous epoch rather than silently read as empty. */
-  def readClusters(spark: SparkSession, base: String): DataFrame = {
-    recoverFromBak(spark, clustersDir(base))
-    if (hasData(spark, clustersDir(base), cacheable = false))
-      readSealed(spark, clustersDir(base)).select("doc_id", "cluster_id")
-    else spark.range(0)
-      .select(col("id").as("doc_id"), col("id").as("cluster_id"))
-  }
+  /** Current cluster assignments at `base`, empty when never built. */
+  def readClusters(spark: SparkSession, base: String): DataFrame =
+    batch(spark, clustersDir(base)).fold(
+      spark.range(0).select(col("id").as("doc_id"), col("id").as("cluster_id")))(
+      _.select("doc_id", "cluster_id"))
 
   /** INCREMENTAL connected-components maintenance — the streaming twin
     * of the cluster store (batch rebuilds run the full fixpoint; a
@@ -1400,8 +1337,8 @@ object SignatureStore {
     *      them — the repo's bounded-driver-fold discipline, applied
     *      after the distributed distinct;
     *   3. rewrite = one broadcast remap join over the store plus the
-    *      delta docs' new rows; tmp-write → swap, so readers never see
-    *      a partial state.
+    *      delta docs' new rows, sealed as the face's next stage, so
+    *      readers never see a partial state.
     *
     * Exactness: each component's label is its min member, and min is
     * associative over merges — so ingesting a corpus in ANY micro-batch
@@ -1456,7 +1393,7 @@ object SignatureStore {
       .join(remapDf, col("cluster_id") === col("old_label"), "left")
       .select(col("doc_id"),
         coalesce(col("new_label"), col("cluster_id")).as("cluster_id"))
-    seal(spark, Seq(clustersDir(base) -> next))
+    seal(spark, clustersDir(base))(_.put(clustersDir(base), next))
   }
 
   /** Seal for the cluster store: recompute the full fixpoint from the
@@ -1477,6 +1414,6 @@ object SignatureStore {
           .map(_.select("doc_id"))
           .getOrElse(spark.range(0).select(col("id").as("doc_id"))))
       .distinct()
-    seal(spark, Seq(clustersDir(base) -> TextQueries.clusterAssignmentsOf(docs, pairs)))
+    seal(spark, clustersDir(base))(_.put(clustersDir(base), TextQueries.clusterAssignmentsOf(docs, pairs)))
   }
 }

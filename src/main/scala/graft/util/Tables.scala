@@ -26,9 +26,7 @@ object Tables {
       new java.util.WeakHashMap[SparkSession,
         scala.collection.concurrent.TrieMap[String, DataFrame]]())
 
-  /** Loaded parquet at `path`, memoized per session. Shared with
-    * [[graft.operators.SignatureStore]] for sealed store faces (which
-    * evict on compaction via [[evict]]). */
+  /** Loaded parquet at `path`, memoized per session. */
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
     val perSession = tableMemo.synchronized {
       var m = tableMemo.get(spark)
@@ -39,14 +37,6 @@ object Tables {
       m
     }
     perSession.getOrElseUpdate(path, spark.read.parquet(path))
-  }
-
-  /** Drop every session's memo entry for `path` — REQUIRED whenever
-    * the files under a cached path change (compaction seals, swap
-    * maintenance): the pinned relation holds the old file listing and
-    * would read deleted files. */
-  def evict(path: String): Unit = tableMemo.synchronized {
-    tableMemo.values.forEach(m => { m.remove(path); () })
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -542,7 +542,7 @@ class PlanAssertSpec extends SparkFunSuite {
       s"PRF's final plan must not rescan documents (query side is pinned):\n$plan")
     val base = graft.operators.SignatureStore.defaultBase(spark, sfDir)
     val marker = new org.apache.hadoop.fs.Path(
-      s"${graft.operators.SignatureStore.bm25PostingsDir(base)}/_SUCCESS")
+      s"${graft.operators.SignatureStore.bm25PostingsDir(base)}/_manifest.json")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(marker), "the postings artifact must exist after the build")
     assert(q.count() > 0)

@@ -54,9 +54,8 @@ class IncrementalClustersSpec extends SparkFunSuite {
     import spark.implicits._
     val base = tmpDir("incmerge")
     // plant a store with two components {1,2}->1 and {10,11}->10
-    Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L), (99L, 99L))
-      .toDF("doc_id", "cluster_id")
-      .write.parquet(SignatureStore.clustersDir(base))
+    SignatureStore.publish(spark, SignatureStore.clustersDir(base) ->
+      Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L), (99L, 99L)).toDF("doc_id", "cluster_id"))
     // one bridging pair (2, 11) merges them; endpoint 50 is brand new
     SignatureStore.updateClustersWithDelta(spark, base,
       Seq(50L).toDF("doc_id"),
@@ -67,32 +66,22 @@ class IncrementalClustersSpec extends SparkFunSuite {
       s"merged state wrong: $got")
   }
 
-  test("a crashed swap leaves a recoverable store, and the seal heals a lost one") {
+  test("the cluster seal heals a lost store") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
     val base = tmpDir("inccrash")
-    Seq((1L, 1L), (2L, 1L), (7L, 7L)).toDF("doc_id", "cluster_id")
-      .write.parquet(SignatureStore.clustersDir(base))
-    val before = assigns(SignatureStore.readClusters(spark, base))
-    // simulate the swapDir crash window: live dir parked at _bak, the
-    // rename-in never happened (advisor r10: the old delete-then-rename
-    // made this window a SILENT total loss — readClusters returned
-    // empty, and the next seal froze it)
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(SignatureStore.clustersDir(base))
-    assert(fs.rename(live, new Path(SignatureStore.clustersDir(base) + "_bak")))
-    assert(assigns(SignatureStore.readClusters(spark, base)) == before,
-      "readClusters must restore the parked _bak, not read empty")
-    // and the seal can rebuild the doc universe WITHOUT the cluster
-    // store: band rows + pairs are the durable roll-call
+    SignatureStore.publish(spark, SignatureStore.clustersDir(base) ->
+      Seq((1L, 1L), (2L, 1L), (7L, 7L)).toDF("doc_id", "cluster_id"))
+    // the seal can rebuild the doc universe WITHOUT the cluster store:
+    // band rows + pairs are the durable roll-call
     val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (7L, "totally unrelated content words seven eight nine ten eleven twelve"))
       .toDF("doc_id", "text")
-    TextQueries.minhashBandsOf(docs)
-      .write.mode("overwrite").parquet(SignatureStore.minhashDir(base))
-    TextQueries.bandedPairs(SignatureStore.readMinhashBands(spark, base))
-      .write.mode("overwrite").parquet(SignatureStore.pairsDir(base, "k8"))
+    SignatureStore.publish(spark, SignatureStore.minhashDir(base) -> TextQueries.minhashBandsOf(docs))
+    SignatureStore.publish(spark, SignatureStore.pairsDir(base, "k8") ->
+      TextQueries.bandedPairs(SignatureStore.readMinhashBands(spark, base)))
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(SignatureStore.clustersDir(base)), true) // total loss
     SignatureStore.compactClusters(spark, base)
     val healed = assigns(SignatureStore.readClusters(spark, base))
@@ -103,8 +92,8 @@ class IncrementalClustersSpec extends SparkFunSuite {
   test("replaying the same delta is a no-op") {
     import spark.implicits._
     val base = tmpDir("increplay")
-    Seq((1L, 1L), (2L, 2L)).toDF("doc_id", "cluster_id")
-      .write.parquet(SignatureStore.clustersDir(base))
+    SignatureStore.publish(spark, SignatureStore.clustersDir(base) ->
+      Seq((1L, 1L), (2L, 2L)).toDF("doc_id", "cluster_id"))
     val delta = Seq((1L, 2L)).toDF("doc_a", "doc_b")
     SignatureStore.updateClustersWithDelta(spark, base, Seq.empty[Long].toDF("doc_id"), delta)
     val once = assigns(SignatureStore.readClusters(spark, base))

@@ -67,8 +67,7 @@ class PairStoreSpec extends SparkFunSuite {
     val oldBands = allBands.filter(col("doc_id") % 10 =!= 0)
     val deltaBands = allBands.filter(col("doc_id") % 10 === 0)
     // batch face: pairs among the old docs
-    TextQueries.bandedPairs(oldBands)
-      .write.parquet(SignatureStore.pairsDir(base, "k8"))
+    SignatureStore.publish(spark, SignatureStore.pairsDir(base, "k8") -> TextQueries.bandedPairs(oldBands))
     // stream delta for epoch 3, written twice (at-least-once replay)
     SignatureStore.appendPairsDelta(spark, base, "k8", deltaBands, allBands, 3L)
     SignatureStore.appendPairsDelta(spark, base, "k8", deltaBands, allBands, 3L)
@@ -89,9 +88,9 @@ class PairStoreSpec extends SparkFunSuite {
       val allBands = TextQueries.minhashBandsOf(docs).localCheckpoint()
       // band store: full corpus; pair store: built from a PARTIAL view,
       // topped up by a stream delta (the incremental lifecycle)
-      allBands.write.partitionBy("band").parquet(SignatureStore.minhashDir(base))
-      TextQueries.bandedPairs(allBands.filter(col("doc_id") % 10 =!= 0))
-        .write.parquet(SignatureStore.pairsDir(base, "k8"))
+      SignatureStore.publish(spark, SignatureStore.minhashDir(base) -> allBands)
+      SignatureStore.publish(spark, SignatureStore.pairsDir(base, "k8") ->
+        TextQueries.bandedPairs(allBands.filter(col("doc_id") % 10 =!= 0)))
       SignatureStore.appendPairsDelta(spark, base, "k8",
         allBands.filter(col("doc_id") % 10 === 0), allBands, 0L)
       SignatureStore.compactPairs(spark, base, "k8")
@@ -100,7 +99,7 @@ class PairStoreSpec extends SparkFunSuite {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(
         SignatureStore.streamDir(SignatureStore.pairsDir(base, "k8")))))
-      val sealedOnly = pairSet(spark.read.parquet(SignatureStore.pairsDir(base, "k8")))
+      val sealedOnly = pairSet(SignatureStore.readPairs(spark, base, "k8"))
       assert(sealedOnly == pairSet(TextQueries.bandedPairs(allBands)))
     } finally spark.conf.unset("spark.graft.sigstore.root")
   }

@@ -38,21 +38,24 @@ class RankedResultsStoreSpec extends SparkFunSuite {
     assert(after == before)
   }
 
-  test("a crash in the refresh park→rename window is recoverable (r11 advisor)") {
-    import org.apache.hadoop.fs.Path
-    val before = rows(SignatureStore.ensureBm25TopK(spark, sfDir))
-    // simulate refreshBm25TopK dying between the park and the
-    // rename-in: live face parked at _bak, nothing in its place. The
-    // probeMemo still carries a positive pin on the _SUCCESS marker, so
-    // without recovery ensureBm25TopK would skip the rebuild and fail
-    // on the missing directory.
-    val base = SignatureStore.defaultBase(spark, sfDir)
-    val live = new Path(SignatureStore.bm25TopkDir(base))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(live, new Path(SignatureStore.bm25TopkDir(base) + "_bak")))
-    graft.util.Tables.evict(SignatureStore.bm25TopkDir(base))
-    val after = rows(SignatureStore.ensureBm25TopK(spark, sfDir))
-    assert(after == before, "ensureBm25TopK must restore the parked _bak")
+  test("a failed refresh at any step serves the same snapshot") {
+    import graft.io.RasterTestFs
+    RasterTestFs.withScheme(spark) {
+      spark.conf.set("spark.graft.sigstore.root", s"${RasterTestFs.Scheme}://${tmpDir("topkcrash")}")
+      try {
+        val before = rows(SignatureStore.ensureBm25TopK(spark, sfDir))
+        RasterTestFs.resetCalls()
+        SignatureStore.refreshBm25TopK(spark, sfDir)
+        val calls = RasterTestFs.mutatingCalls
+        assert(calls >= 3, s"$calls creates, renames and deletes")
+        (1L to calls).foreach { n =>
+          RasterTestFs.failOnce(n)
+          scala.util.Try(SignatureStore.refreshBm25TopK(spark, sfDir))
+          RasterTestFs.resetCalls()
+          assert(rows(SignatureStore.ensureBm25TopK(spark, sfDir)) == before, s"a failure at mutating call $n")
+        }
+      } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
   }
 
   test("eval consumers read the face, never the postings store") {

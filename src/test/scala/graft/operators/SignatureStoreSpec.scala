@@ -73,8 +73,7 @@ class SignatureStoreSpec extends SparkFunSuite {
     import spark.implicits._
     val base = tmpDir("sigempty")
     val docs = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    TextQueries.minhashBandsOf(docs)
-      .write.partitionBy("band").parquet(SignatureStore.minhashDir(base))
+    SignatureStore.publish(spark, SignatureStore.minhashDir(base) -> TextQueries.minhashBandsOf(docs))
     // empty stream write, same shape maintainSignatures produces
     TextQueries.minhashBandsOf(docs.limit(0))
       .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
@@ -90,8 +89,7 @@ class SignatureStoreSpec extends SparkFunSuite {
     import spark.implicits._
     val base = tmpDir("sigdup")
     val docs = Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    TextQueries.minhashBandsOf(docs)
-      .write.partitionBy("band").parquet(SignatureStore.minhashDir(base))
+    SignatureStore.publish(spark, SignatureStore.minhashDir(base) -> TextQueries.minhashBandsOf(docs))
     // the same doc signed again by a stream append (different batch_id,
     // so the replay guard can't collapse it)
     TextQueries.minhashBandsOf(docs).withColumn("batch_id", lit(7L))
@@ -182,78 +180,21 @@ class SignatureStoreSpec extends SparkFunSuite {
     }
   }
 
-  test("a compaction that crashed after the park step still serves the pre-compaction rows") {
-    import org.apache.spark.sql.functions.lit
+  test("corpora whose path and listing strings share a 32-bit hash get different store bases") {
     import spark.implicits._
-    val base = tmpDir("sigpark")
-    val dir = SignatureStore.countMinDir(base)
-    val batchCells = SketchQueries.countMinCells(SketchQueries.tokenVocab(
-      Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text")))
-    val streamCells = SketchQueries.countMinCells(SketchQueries.tokenVocab(
-      Seq((3L, "alpha delta")).toDF("doc_id", "text")))
-    val want = cells(batchCells.unionByName(streamCells)
-      .groupBy("j", "slot").agg(org.apache.spark.sql.functions.sum("n").as("n")))
-    // the state a seal leaves between parking the live face and renaming
-    // the resolved tmp in: live dir at `_bak`, complete tmp beside it,
-    // stream subtree not yet dropped
-    batchCells.write.parquet(dir + "_bak")
-    batchCells.unionByName(streamCells).groupBy("j", "slot")
-      .agg(org.apache.spark.sql.functions.sum("n").as("n"))
-      .write.parquet(dir + "_compact_tmp")
-    streamCells.withColumn("batch_id", lit(0L))
-      .write.partitionBy("batch_id").parquet(SignatureStore.streamDir(dir))
-    assert(cells(SignatureStore.readCountMin(spark, base)) == want,
-      "the reader must restore the parked batch face, not serve the stream alone")
-    // and a re-run of the seal completes the compaction with the same rows
-    SignatureStore.compactCountMin(spark, base)
-    assert(cells(SignatureStore.readCountMin(spark, base)) == want)
-    assert(!new java.io.File(SignatureStore.streamDir(dir)).exists())
-  }
-
-  test("a bm25 compaction that crashed after parking the doclens face still serves every doc length") {
-    import spark.implicits._
-    val base = tmpDir("bm25park")
-    val lensDir = SignatureStore.bm25DoclensDir(base)
-    val batchDocs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma")).toDF("doc_id", "text")
-    val streamDocs = Seq((3L, "alpha delta")).toDF("doc_id", "text")
-    val want = Set((1L, 3L), (2L, 2L), (3L, 2L))
-    def lens() = SignatureStore.readBm25(spark, base)._2.select("doc_id", "dl").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the state compactBm25 leaves between parking the live doclens face
-    // (swapped first) and renaming its resolved tmp in: doclens at `_bak`,
-    // both tmps complete, postings and the stream subtree still live
-    SearchQueries.postingsOf(batchDocs).write.parquet(SignatureStore.bm25PostingsDir(base))
-    SearchQueries.doclensOf(batchDocs).write.parquet(lensDir + "_bak")
-    SearchQueries.doclensOf(batchDocs.unionByName(streamDocs)).write.parquet(lensDir + "_compact_tmp")
-    SearchQueries.postingsOf(batchDocs.unionByName(streamDocs))
-      .write.parquet(SignatureStore.bm25PostingsDir(base) + "_compact_tmp")
-    graft.streaming.EventStream.postingsEpoch(streamDocs, 0L, base)
-    assert(lens() == want, "the reader must restore the parked doclens face")
-    // and a re-run of the seal completes the compaction with the same rows
-    SignatureStore.compactBm25(spark, base)
-    assert(lens() == want)
-    assert(!new java.io.File(SignatureStore.streamDir(SignatureStore.bm25PostingsDir(base))).exists())
-  }
-
-  test("a span face parked at _bak by a crashed swap is restored by the batch-only span read") {
-    import spark.implicits._
-    val base = tmpDir("spanpark")
-    val docs = Seq(
-      (1L, "one two three four five six seven eight nine"),
-      (2L, "zero one two three four five six seven eight"),
-      (3L, "an unrelated document with words nobody else uses at all")).toDF("doc_id", "text")
-    val grams = TextQueries.positionedGrams8(docs)
-    def spanSet(df: org.apache.spark.sql.DataFrame) = df.select("doc_id", "span_start", "span_end").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = spanSet(TextQueries.spansFromGrams(grams))
-    assert(want.map(_._1) == Set(1L, 2L))
-    // live span dir missing, its sealed state parked at `_bak`, the gram
-    // face live, no stream grams: readSpans takes the batch-only path
-    grams.write.parquet(SignatureStore.spanGramsDir(base))
-    TextQueries.spansFromGrams(grams).write.parquet(SignatureStore.spansDir(base) + "_bak")
-    assert(spanSet(SignatureStore.readSpans(spark, base)) == want,
-      "the reader must restore the parked span face")
-    assert(new java.io.File(SignatureStore.spansDir(base)).exists())
-    assert(!new java.io.File(SignatureStore.spansDir(base) + "_bak").exists())
+    // "Aa" and "BB" have the same String.hashCode, and so do the two
+    // fingerprint strings below: same file names, sizes and mtimes
+    val root = tmpDir("sigbases")
+    val dirs = Seq("Aa", "BB").map(n => s"$root/$n")
+    Seq((1L, "alpha")).toDF("doc_id", "text").coalesce(1).write.parquet(s"${dirs(0)}/documents.parquet")
+    val copy = new java.io.File(s"${dirs(1)}/documents.parquet")
+    assert(copy.mkdirs())
+    new java.io.File(s"${dirs(0)}/documents.parquet").listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, copy.toPath.resolve(f.getName)))
+    for (d <- dirs; f <- new java.io.File(s"$d/documents.parquet").listFiles())
+      assert(f.setLastModified(1700000000000L))
+    assert(s"${dirs(0)}#x".hashCode == s"${dirs(1)}#x".hashCode)
+    val bases = dirs.map(SignatureStore.defaultBase(spark, _))
+    assert(bases.distinct.size == 2, s"one base for two corpora: $bases")
   }
 }

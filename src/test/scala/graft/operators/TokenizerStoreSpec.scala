@@ -9,17 +9,18 @@ class TokenizerStoreSpec extends SparkFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def successMtime(dir: String): Long =
-    new java.io.File(s"$dir/_SUCCESS").lastModified()
+  private def manifestMtime(dir: String): Long =
+    new java.io.File(s"$dir/_manifest.json").lastModified()
 
   test("bpe merge store seals once; stored encode equals live encode") {
     val base = SignatureStore.defaultBase(spark, sf)
     val first = SignatureStore.ensureBpeMerges(spark, sf).collect()
     assert(first.length == 8) // K merges
-    val m1 = successMtime(SignatureStore.bpeMergesDir(base))
+    val m1 = manifestMtime(SignatureStore.bpeMergesDir(base))
+    assert(m1 > 0)
     // second ensure is a pure read — the seal is never rewritten
     val second = SignatureStore.ensureBpeMerges(spark, sf).collect()
-    assert(successMtime(SignatureStore.bpeMergesDir(base)) == m1)
+    assert(manifestMtime(SignatureStore.bpeMergesDir(base)) == m1)
     assert(first.map(_.toString).sorted.sameElements(second.map(_.toString).sorted))
     // stored face ≡ live face, row for row
     val live = BpeQueries.defs("bpe_encode_docs").build(spark, sf).collect()
@@ -31,9 +32,10 @@ class TokenizerStoreSpec extends SparkFunSuite {
     val base = SignatureStore.defaultBase(spark, sf)
     val first = SignatureStore.ensureUnigramModel(spark, sf).collect()
     assert(first.nonEmpty)
-    val m1 = successMtime(SignatureStore.unigramModelDir(base))
+    val m1 = manifestMtime(SignatureStore.unigramModelDir(base))
+    assert(m1 > 0)
     SignatureStore.ensureUnigramModel(spark, sf).collect()
-    assert(successMtime(SignatureStore.unigramModelDir(base)) == m1)
+    assert(manifestMtime(SignatureStore.unigramModelDir(base)) == m1)
     val live = UnigramQueries.defs("unigram_encode_docs").build(spark, sf).collect()
     val stored = UnigramQueries.defs("unigram_encode_docs_stored").build(spark, sf).collect()
     assert(live.map(_.toString).toSeq == stored.map(_.toString).toSeq)
@@ -56,17 +58,20 @@ class TokenizerStoreSpec extends SparkFunSuite {
     val base = SignatureStore.defaultBase(spark, dir)
     val storeDir = new java.io.File(SignatureStore.bpeMergesDir(base))
     // simulate a write that crashed after some data but before the
-    // marker: garbage parquet bytes, NO _SUCCESS
-    storeDir.mkdirs()
-    java.nio.file.Files.write(storeDir.toPath.resolve("part-corrupt.parquet"),
+    // manifest: a stage of garbage parquet bytes, NO _manifest.json
+    val orphan = new java.io.File(storeDir, "batch-orphan")
+    orphan.mkdirs()
+    java.nio.file.Files.write(orphan.toPath.resolve("part-corrupt.parquet"),
       Array[Byte](1, 2, 3))
-    assert(!new java.io.File(storeDir, "_SUCCESS").exists())
-    // ensure must REBUILD (mode=overwrite clears the partial write) and
-    // the rebuilt artifact encodes identically to live training
+    assert(!new java.io.File(storeDir, "_manifest.json").exists())
+    // ensure must REBUILD into a fresh stage, and the publish removes
+    // the orphan; the rebuilt artifact encodes identically to live
+    // training
     val merges = BpeQueries.mergesFromStore(SignatureStore.ensureBpeMerges(spark, dir))
     assert(merges.nonEmpty)
-    assert(new java.io.File(storeDir, "_SUCCESS").exists())
-    assert(!new java.io.File(storeDir, "part-corrupt.parquet").exists())
+    assert(new java.io.File(storeDir, "_manifest.json").exists())
+    assert(!new java.io.File(storeDir, "batch-orphan").exists())
+    assert(storeDir.list().count(_.startsWith("batch-")) == 1)
     val live = BpeQueries.defs("bpe_encode_docs").build(spark, dir).collect()
     val stored = BpeQueries.defs("bpe_encode_docs_stored").build(spark, dir).collect()
     assert(live.map(_.toString).toSeq == stored.map(_.toString).toSeq)

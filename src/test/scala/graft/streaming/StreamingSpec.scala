@@ -232,9 +232,8 @@ class StreamingSpec extends SparkFunSuite {
     // batch-built subtree first
     val batchDocs = Seq((1L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    graft.operators.TextQueries.ophBandsOf(batchDocs)
-      .write.partitionBy("band")
-      .parquet(graft.operators.SignatureStore.ophDir(base))
+    graft.operators.SignatureStore.publish(spark,
+      graft.operators.SignatureStore.ophDir(base) -> graft.operators.TextQueries.ophBandsOf(batchDocs))
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainOph(input.toDF().toDF("doc_id", "text"), base)
       .option("checkpointLocation", s"$base/_ckpt").start()
@@ -274,9 +273,8 @@ class StreamingSpec extends SparkFunSuite {
     val base = tmpDir("sigmix")
     val batchDocs = Seq((1L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
-    graft.operators.TextQueries.minhashBandsOf(batchDocs)
-      .write.partitionBy("band")
-      .parquet(graft.operators.SignatureStore.minhashDir(base))
+    graft.operators.SignatureStore.publish(spark,
+      graft.operators.SignatureStore.minhashDir(base) -> graft.operators.TextQueries.minhashBandsOf(batchDocs))
 
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainSignatures(input.toDF().toDF("doc_id", "text"), base)
@@ -335,8 +333,8 @@ class StreamingSpec extends SparkFunSuite {
     val cb = PqQueries.trainCodebookOn(e, rsubOf(e))
     val allCodes = PqQueries.packCodes(PqQueries.pqAssign(rsubOf(e), cb))
     val batchHalf = e.filter(col("vec_id") < 20)
-    PqQueries.packCodes(PqQueries.pqAssign(rsubOf(batchHalf), cb))
-      .write.parquet(SignatureStore.rpqCodesDir(base))
+    SignatureStore.publish(spark,
+      SignatureStore.rpqCodesDir(base) -> PqQueries.packCodes(PqQueries.pqAssign(rsubOf(batchHalf), cb)))
     val input = MemoryStream[(Long, Seq[Float])]
     val query = EventStream.maintainResidualPqCodes(
       input.toDF().toDF("vec_id", "embedding"), base, cb, centroids)
@@ -376,10 +374,10 @@ class StreamingSpec extends SparkFunSuite {
       graft.operators.PqQueries.pqAssign(graft.operators.PqQueries.scaledSub(e), cb))
 
     val batchHalf = e.filter(col("vec_id") < 20)
-    graft.operators.PqQueries.packCodes(
-      graft.operators.PqQueries.pqAssign(
-        graft.operators.PqQueries.scaledSub(batchHalf), cb))
-      .write.parquet(graft.operators.SignatureStore.pqCodesDir(base))
+    graft.operators.SignatureStore.publish(spark,
+      graft.operators.SignatureStore.pqCodesDir(base) -> graft.operators.PqQueries.packCodes(
+        graft.operators.PqQueries.pqAssign(
+          graft.operators.PqQueries.scaledSub(batchHalf), cb)))
 
     val input = MemoryStream[(Long, Seq[Float])]
     val query = EventStream.maintainPqCodes(
@@ -418,10 +416,9 @@ class StreamingSpec extends SparkFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val base = tmpDir("bm25maint")
     val batchDocs = Seq((1L, "alpha beta alpha")).toDF("doc_id", "text")
-    graft.operators.SearchQueries.postingsOf(batchDocs)
-      .write.parquet(graft.operators.SignatureStore.bm25PostingsDir(base))
-    graft.operators.SearchQueries.doclensOf(batchDocs)
-      .write.parquet(graft.operators.SignatureStore.bm25DoclensDir(base))
+    graft.operators.SignatureStore.publish(spark,
+      graft.operators.SignatureStore.bm25PostingsDir(base) -> graft.operators.SearchQueries.postingsOf(batchDocs),
+      graft.operators.SignatureStore.bm25DoclensDir(base) -> graft.operators.SearchQueries.doclensOf(batchDocs))
 
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainPostings(input.toDF().toDF("doc_id", "text"), base)
@@ -453,8 +450,7 @@ class StreamingSpec extends SparkFunSuite {
     // batch subtree: day 0 users 1-80, day 1 users 1-10
     val batchEvents = ((1L to 80L).map(ev(_, 0L)) ++ (1L to 10L).map(ev(_, 1L)))
       .toDF("user_id", "ts_ns")
-    SketchQueries.dailyUserSketch(batchEvents)
-      .write.parquet(SignatureStore.dailyKmvDir(base))
+    SignatureStore.publish(spark, SignatureStore.dailyKmvDir(base) -> SketchQueries.dailyUserSketch(batchEvents))
     // stream: day 0 users 60-150 (overlapping 60-80 — duplicates across
     // batch and stream), day 1 users 11-20
     val input = MemoryStream[(Long, Long)]
@@ -491,8 +487,8 @@ class StreamingSpec extends SparkFunSuite {
     // batch subtree from two docs
     val batchDocs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"))
       .toDF("doc_id", "text")
-    SketchQueries.countMinCells(SketchQueries.tokenVocab(batchDocs))
-      .write.parquet(SignatureStore.countMinDir(base))
+    SignatureStore.publish(spark,
+      SignatureStore.countMinDir(base) -> SketchQueries.countMinCells(SketchQueries.tokenVocab(batchDocs)))
     // stream: two epochs, one sharing tokens with the batch subtree
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainCountMin(
@@ -545,8 +541,7 @@ class StreamingSpec extends SparkFunSuite {
     val batchDocs = Seq((1L, "web", doc(12)))
       .toDF("doc_id", "source", "text")
     val (bc, bl) = SketchQueries.mgSummaries(SketchQueries.sourceTokenCounts(batchDocs))
-    bl.write.parquet(SignatureStore.mgLambdasDir(base))
-    bc.write.parquet(SignatureStore.mgCountersDir(base))
+    SignatureStore.publish(spark, SignatureStore.mgLambdasDir(base) -> bl, SignatureStore.mgCountersDir(base) -> bc)
     // stream: epoch 1 re-weights web's vocabulary (overlapping tokens —
     // counters must SUM then re-prune), epoch 2 opens a new source
     val input = MemoryStream[(Long, String, String)]
@@ -618,8 +613,7 @@ class StreamingSpec extends SparkFunSuite {
     val batchDocs = Seq((1L, "alpha beta gamma delta epsilon"),
       (2L, "the quick brown fox jumps over"))
       .toDF("doc_id", "text")
-    SketchQueries.bloomOf(batchDocs)
-      .write.parquet(SignatureStore.bloomDir(base))
+    SignatureStore.publish(spark, SignatureStore.bloomDir(base) -> SketchQueries.bloomOf(batchDocs))
     def words(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val afterBatch = words(SignatureStore.readBloom(spark, base))
@@ -676,8 +670,7 @@ class StreamingSpec extends SparkFunSuite {
     val base = tmpDir("hll")
     val batchEv = Seq((1L, "click"), (2L, "click"), (3L, "view"), (4L, "view"))
       .toDF("user_id", "event_type")
-    SketchQueries.hllRegisters(strat(batchEv))
-      .write.parquet(SignatureStore.hllDir(base))
+    SignatureStore.publish(spark, SignatureStore.hllDir(base) -> SketchQueries.hllRegisters(strat(batchEv)))
     val afterBatch = regs(SignatureStore.readHll(spark, base))
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainHll(
@@ -724,8 +717,7 @@ class StreamingSpec extends SparkFunSuite {
     val base = tmpDir("qbins")
     val batchDocs = Seq((1L, "web", 10L), (2L, "web", 100L), (3L, "book", 200L))
       .toDF("doc_id", "source", "n_chars")
-    SketchQueries.sourceLengthBins(batchDocs)
-      .write.parquet(SignatureStore.quantileBinsDir(base))
+    SignatureStore.publish(spark, SignatureStore.quantileBinsDir(base) -> SketchQueries.sourceLengthBins(batchDocs))
     val input = MemoryStream[(Long, String, Long)]
     val query = EventStream.maintainQuantileBins(
       input.toDF().toDF("doc_id", "source", "n_chars"), base)
@@ -757,10 +749,8 @@ class StreamingSpec extends SparkFunSuite {
     import graft.operators.{SearchQueries, SignatureStore}
     val base = tmpDir("bm25compact")
     val batchDocs = Seq((1L, "alpha beta alpha"), (2L, "gamma")).toDF("doc_id", "text")
-    SearchQueries.postingsOf(batchDocs)
-      .write.parquet(SignatureStore.bm25PostingsDir(base))
-    SearchQueries.doclensOf(batchDocs)
-      .write.parquet(SignatureStore.bm25DoclensDir(base))
+    SignatureStore.publish(spark, SignatureStore.bm25PostingsDir(base) -> SearchQueries.postingsOf(batchDocs),
+      SignatureStore.bm25DoclensDir(base) -> SearchQueries.doclensOf(batchDocs))
     // stream: doc 2 re-ingested with new text, doc 3 new
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainPostings(input.toDF().toDF("doc_id", "text"), base)
@@ -779,8 +769,8 @@ class StreamingSpec extends SparkFunSuite {
     // stats — the seal must drop it so it can never be served stale
     // (advisor r10: nothing invalidated it, and the positive probe memo
     // would have pinned it forever)
-    Seq((1L, 1L, 1L, 100L)).toDF("qid", "doc_id", "rank", "score")
-      .write.parquet(SignatureStore.bm25TopkDir(base))
+    SignatureStore.publish(spark,
+      SignatureStore.bm25TopkDir(base) -> Seq((1L, 1L, 1L, 100L)).toDF("qid", "doc_id", "rank", "score"))
     SignatureStore.compactBm25(spark, base)
     assert(snap() == before, "compaction must not change what readBm25 serves")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -810,9 +800,9 @@ class StreamingSpec extends SparkFunSuite {
     def tokens(p: String) = (1 to 10).map(i => s"$p$i").mkString(" ")
     // batch build: docs 5 and 6 own lines X and Y
     val batchDocs = Seq((5L, tokens("x")), (6L, tokens("y"))).toDF("doc_id", "text")
-    graft.operators.TextQueries.lineRegistryOf(
-      graft.operators.TextQueries.linesOf(batchDocs))
-      .write.parquet(graft.operators.SignatureStore.linesDir(base))
+    graft.operators.SignatureStore.publish(spark,
+      graft.operators.SignatureStore.linesDir(base) -> graft.operators.TextQueries.lineRegistryOf(
+        graft.operators.TextQueries.linesOf(batchDocs)))
 
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainLineRegistry(
@@ -849,9 +839,8 @@ class StreamingSpec extends SparkFunSuite {
     // batch build: two docs with NO duplication — batch spans are empty
     val batchDocs = Seq((1L, tokens("a")), (2L, tokens("b"))).toDF("doc_id", "text")
     val g = graft.operators.TextQueries.positionedGrams8(batchDocs)
-    g.write.parquet(graft.operators.SignatureStore.spanGramsDir(base))
-    graft.operators.TextQueries.spansFromGrams(g)
-      .write.parquet(graft.operators.SignatureStore.spansDir(base))
+    graft.operators.SignatureStore.publish(spark, graft.operators.SignatureStore.spanGramsDir(base) -> g,
+      graft.operators.SignatureStore.spansDir(base) -> graft.operators.TextQueries.spansFromGrams(g))
     assert(graft.operators.SignatureStore.readSpans(spark, base).count() == 0)
 
     val input = MemoryStream[(Long, String)]
@@ -961,10 +950,10 @@ class StreamingSpec extends SparkFunSuite {
     import graft.operators.SignatureStore
     val base = tmpDir("phrasestore")
     // batch subtree for docs 1 and 2
-    Seq((1L, "alpha beta gamma"), (2L, "delta echo"))
-      .toDF("doc_id", "text")
-      .transform(graft.operators.SearchQueries.bigramsOf)
-      .write.parquet(SignatureStore.phraseBigramsDir(base))
+    SignatureStore.publish(spark, SignatureStore.phraseBigramsDir(base) ->
+      Seq((1L, "alpha beta gamma"), (2L, "delta echo"))
+        .toDF("doc_id", "text")
+        .transform(graft.operators.SearchQueries.bigramsOf))
     // stream: doc 2 re-ingested with CHANGED text, doc 3 new; then doc 2
     // corrected again in a later epoch (latest must win)
     val input = MemoryStream[(Long, String)]
@@ -991,10 +980,10 @@ class StreamingSpec extends SparkFunSuite {
     import spark.implicits._
     import graft.operators.SignatureStore
     val base = tmpDir("phrasecompact")
-    Seq((1L, "alpha beta gamma"), (2L, "delta echo"))
-      .toDF("doc_id", "text")
-      .transform(graft.operators.SearchQueries.bigramsOf)
-      .write.parquet(SignatureStore.phraseBigramsDir(base))
+    SignatureStore.publish(spark, SignatureStore.phraseBigramsDir(base) ->
+      Seq((1L, "alpha beta gamma"), (2L, "delta echo"))
+        .toDF("doc_id", "text")
+        .transform(graft.operators.SearchQueries.bigramsOf))
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainPhraseBigrams(
       input.toDS().toDF("doc_id", "text"),
@@ -1042,9 +1031,8 @@ class StreamingSpec extends SparkFunSuite {
     def vid(seed: Char, frames: Int): String =
       (0 until frames * 32).map(i => (('a' + (i * (seed - 'a' + 1)) % 20).toChar)).mkString
     // batch subtree: docs 1 (3 frames) and 2 (4 frames → pair idx up to 2)
-    Multimodal.frameDiffs(Seq((1L, vid('b', 3)), (2L, vid('c', 4)))
-      .toDF("doc_id", "text"))
-      .write.parquet(SignatureStore.frameDiffDir(base))
+    SignatureStore.publish(spark, SignatureStore.frameDiffDir(base) ->
+      Multimodal.frameDiffs(Seq((1L, vid('b', 3)), (2L, vid('c', 4))).toDF("doc_id", "text")))
     // stream: doc 2 re-ingested SHORTER (3 frames → pairs 0,1 only), doc 3 new
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainFrameDiffs(
@@ -1109,9 +1097,8 @@ class StreamingSpec extends SparkFunSuite {
     val centroids = Seq(0L, 1L).map(id => (id, vec(id.toInt)))
       .toDF("cent_id", "cv")
     // batch subtree: vectors 10, 11 assigned by the real assigner
-    VectorQueries.ivfAssign(
-        Seq((10L, vec(0)), (11L, vec(1))).toDF("vec_id", "embedding"), centroids)
-      .write.parquet(SignatureStore.ivfDir(base))
+    SignatureStore.publish(spark, SignatureStore.ivfDir(base) -> VectorQueries.ivfAssign(
+      Seq((10L, vec(0)), (11L, vec(1))).toDF("vec_id", "embedding"), centroids))
     // stream: vector 11 re-sent pointing at the OTHER centroid, 12 new
     val input = MemoryStream[(Long, Int)]
     val query = EventStream.maintainIvfAssignments(
@@ -1156,9 +1143,8 @@ class StreamingSpec extends SparkFunSuite {
     import graft.operators.{Multimodal, SignatureStore}
     val base = tmpDir("phashstore")
     // batch subtree: real decode+hash of two synthesized images
-    Multimodal.imagePhash(
-      Multimodal.pngAssets(Seq(10L, 11L).toDF("doc_id")))
-      .write.parquet(SignatureStore.imagePhashDir(base))
+    SignatureStore.publish(spark, SignatureStore.imagePhashDir(base) ->
+      Multimodal.imagePhash(Multimodal.pngAssets(Seq(10L, 11L).toDF("doc_id"))))
     val batchHash10 = SignatureStore.readImagePhash(spark, base)
       .filter(col("doc_id") === 10L).collect().head.getLong(1)
     // stream: doc 10 re-ingested with a DIFFERENT picture (payload of id
@@ -1189,10 +1175,10 @@ class StreamingSpec extends SparkFunSuite {
     import graft.operators.SignatureStore
     val base = tmpDir("transunion")
     // batch subtree: pre-aggregated triples, as ensureEventTransitions writes
-    Seq(("view", Some("click"), None: Option[String], 3L),
-      ("view", None: Option[String], None: Option[String], 1L))
-      .toDF("e1", "e2", "e3", "n")
-      .write.parquet(SignatureStore.eventTransitionsDir(base))
+    SignatureStore.publish(spark, SignatureStore.eventTransitionsDir(base) ->
+      Seq(("view", Some("click"), None: Option[String], 3L),
+        ("view", None: Option[String], None: Option[String], 1L))
+        .toDF("e1", "e2", "e3", "n"))
     // stream subtree: per-user emissions via the real maintenance writer,
     // including a superseded older emission for user 7
     val input = MemoryStream[EventStream.TransEvent]
@@ -1468,10 +1454,9 @@ class StreamingSpec extends SparkFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val base = tmpDir("bm25resend")
     val batchDocs = Seq((1L, "alpha beta alpha"), (2L, "gamma")).toDF("doc_id", "text")
-    graft.operators.SearchQueries.postingsOf(batchDocs)
-      .write.parquet(graft.operators.SignatureStore.bm25PostingsDir(base))
-    graft.operators.SearchQueries.doclensOf(batchDocs)
-      .write.parquet(graft.operators.SignatureStore.bm25DoclensDir(base))
+    graft.operators.SignatureStore.publish(spark,
+      graft.operators.SignatureStore.bm25PostingsDir(base) -> graft.operators.SearchQueries.postingsOf(batchDocs),
+      graft.operators.SignatureStore.bm25DoclensDir(base) -> graft.operators.SearchQueries.doclensOf(batchDocs))
 
     val input = MemoryStream[(Long, String)]
     val query = EventStream.maintainPostings(input.toDF().toDF("doc_id", "text"), base)
