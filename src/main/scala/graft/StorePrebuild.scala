@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-time store builds for [[Bench]]: an untimed prebuild, so the
-  * *_stored queries measure the amortized READ path rather than the
-  * first build. Each face publishes through one manifest rename, so a
-  * prebuild that dies leaves every face built or not built, and the next
-  * call builds the missing ones. Concurrent first builds inside one JVM
-  * are already safe (the store's build-once lock, see
-  * [[operators.SignatureStore]]); the store has one writer, so a
-  * prebuild is still what keeps several drivers sharing one
-  * `spark.graft.sigstore.root` from racing the same build. */
+/** The untimed prebuild of every signature-store face, for drivers
+  * that share one `spark.graft.sigstore.root`. Each face publishes
+  * through one manifest rename, so a prebuild that dies leaves every
+  * face built or not built, and the next call builds the missing ones.
+  * Concurrent first builds inside one JVM are already safe (the store's
+  * build-once lock, see [[operators.SignatureStore]]); the store has one
+  * writer, so a prebuild is what keeps several drivers sharing one root
+  * from racing the same build, and after it the *_stored queries read
+  * the amortized store rather than the first build. */
 object StorePrebuild {
 
   def all(spark: SparkSession, sfDir: String): Unit = {

@@ -2147,18 +2147,16 @@ object VectorQueries {
 
   /** The full ANN bitext miner (IVF candidate generation in both
     * directions + the shortlist-pruned margin tail) over a (vec_id,
-    * embedding, label) frame — the `mine_bitext_margin_ann` body,
-    * exposed with a tunable shortlist for the spill-isolation probe
-    * ([[graft.tools.BitextProbe]]).
+    * embedding, label) frame — the `mine_bitext_margin_ann` body.
     *
-    * Partition sizing (r13, from the BitextProbe isolation runs): the
+    * Partition sizing (r13, from spill-isolation runs of the miner): the
     * candidate mass is ≈ 4·N^1.5 skinny rows; at the session default
     * (cores-sized) partition count every exchange past ~10⁷ candidates
     * sort-spills — measured 357 GB spilled / 18.1k cpu-s at N=200k vs
     * 106 GB / 6.6k cpu-s just by raising the count. The miner now
     * right-sizes its own exchanges to ~10⁶ rows per partition (capped
     * at 4096), leaving small corpora on the session default. */
-  def bitextAnnMiner(e: DataFrame, shortlist: Int = BitextShortlist): DataFrame = {
+  def bitextAnnMiner(e: DataFrame): DataFrame = {
     val n = e.count()
     val base = e.sparkSession.sessionState.conf.numShufflePartitions
     val mass = 4.0 * n * math.sqrt(n.toDouble)
@@ -2166,7 +2164,7 @@ object VectorQueries {
     val np = if (p > base) Some(p) else None
     bitextMarginOverScores(
       bitextAnnCandidateScores(e, np, broadcastSides = n / 2 <= BitextBroadcastSideMax),
-      BitextK, Some(shortlist), np)
+      BitextK, Some(BitextShortlist), np)
   }
 
   /** Mutual-best margin pairs between an (xid, xv) and a (yid, yv) side

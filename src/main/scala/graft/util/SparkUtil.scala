@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults shared by Verify, Bench, perfbench and the tests.
+/** Session defaults shared by Verify, perfbench and the tests.
   *
   * Scale posture: shuffle partitions sized to local cores (`local[n]`
   * with n = `SPARK_GRAFT_CPUS`, default 4); AQE on so skewed joins /
@@ -40,7 +40,7 @@ object SparkUtil {
     // 100× point (200k vectors, ~350M-row shortlist build) exhausted an
     // 80 GB spill volume on raw blocks. Storage pressure, not CPU, is
     // the binding constraint for checkpoint-heavy plans at scale.
-    .config("spark.rdd.compress", sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
+    .config("spark.rdd.compress", "true")
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
 
   /** Generated classes kept, keyed by source text (Spark's default is

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * test-scope, but a writer/reader disagreement would invalidate every
   * decoder spec, so the pair is pinned property-style.) Plain scalacheck
   * generators with fixed seeds — deterministic, offline-classpath only. */
-class CodecPropertiesSpec extends AnyFunSuite {
+class CodecPropertiesSpec extends AnyFunSuite with graft.TmpDirs {
 
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
@@ -56,7 +56,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
     samples(gen, 20, 0x9ACB6).foreach { case ((az, rg), tileFlag, be) =>
       val tiled = if (tileFlag == 1) Some((5, 3)) else None
       val p = graft.Fixtures.grdProducts.head.copy(az = az, rg = rg)
-      val dir = java.nio.file.Files.createTempDirectory("tifpb").toString
+      val dir = tmpDir("tifpb")
       val path = s"$dir/${p.name}"
       graft.Fixtures.writeTiff(path, p, idx = 1, compression = 32773,
         tiled = tiled, bigendian = be)
@@ -75,7 +75,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
     samples(gen, 25, 0xBEEF1).foreach { case ((az, rg), compression, tileFlag) =>
       val tiled = if (tileFlag == 1) Some((5, 3)) else None
       val p = graft.Fixtures.grdProducts.head.copy(az = az, rg = rg)
-      val dir = java.nio.file.Files.createTempDirectory("tifprop").toString
+      val dir = tmpDir("tifprop")
       val path = s"$dir/${p.name}"
       graft.Fixtures.writeTiff(path, p, idx = 1, compression = compression, tiled = tiled)
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -91,7 +91,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
     samples(gen, 20, 0xF10A7).foreach { case ((az, rg), compression, tileFlag) =>
       val tiled = if (tileFlag == 1) Some((5, 3)) else None
       val p = graft.Fixtures.grdProducts.head.copy(az = az, rg = rg)
-      val dir = java.nio.file.Files.createTempDirectory("tiffp3").toString
+      val dir = tmpDir("tiffp3")
       val path = s"$dir/${p.name}"
       graft.Fixtures.writeTiff(path, p, idx = 1, dtype = "float32",
         compression = compression, tiled = tiled, predictor = 3)
@@ -111,7 +111,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
       val tiled = if (tileFlag == 1) Some((5, 3)) else None
       val dtype = if (predictor == 3) "float32" else "uint16"
       val p = graft.Fixtures.grdProducts.head.copy(az = az, rg = rg)
-      val dir = java.nio.file.Files.createTempDirectory("bigtiff").toString
+      val dir = tmpDir("bigtiff")
       val path = s"$dir/${p.name}"
       graft.Fixtures.writeTiff(path, p, idx = 1, dtype = dtype,
         compression = compression, tiled = tiled, predictor = predictor, bigtiff = true)
@@ -136,7 +136,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
       Gen.zip(Gen.oneOf(false, true), Gen.oneOf(false, true), Gen.oneOf(false, true)))
     samples(gen, 25, 0xCAFE2).foreach { case ((az, rg), ch, cw, (deflate, shuffle, fletcher)) =>
       val vals = Array.tabulate(az * rg)(i => (i * 7 % 1000).toFloat)
-      val dir = java.nio.file.Files.createTempDirectory("h5prop").toString
+      val dir = tmpDir("h5prop")
       val path = s"$dir/x.h5"
       graft.Fixtures.writeH5(path, Seq(
         "contig" -> graft.Fixtures.H5F32(Seq(az, rg), vals),
@@ -181,7 +181,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
         val vals = Array.fill(az * rg)(
           if (precision == 2) rng.nextInt(2) << offset
           else (rng.nextInt(1 << math.min(precision - 1, 30))) << offset)
-        val dir = java.nio.file.Files.createTempDirectory("h5nbit").toString
+        val dir = tmpDir("h5nbit")
         graft.Fixtures.writeH5(s"$dir/x.h5", Seq(
           "n" -> graft.Fixtures.H5I32C(Seq(az, rg), vals, chunks = (ch, cw),
             nbit = Some((precision, offset)),
@@ -211,7 +211,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
         // reserved all-ones fill code next to real offsets
         val vals = Array.fill(az * rg)(
           if (rng.nextInt(6) == 0) 0 else base + rng.nextInt(span))
-        val dir = java.nio.file.Files.createTempDirectory("h5soint").toString
+        val dir = tmpDir("h5soint")
         graft.Fixtures.writeH5(s"$dir/x.h5", Seq(
           "s" -> graft.Fixtures.H5I32C(Seq(az, rg), vals, chunks = (ch, cw),
             soMinbits = Some(fixed), deflate = deflate, fletcher32 = fletcher)))
@@ -244,7 +244,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
         val rng = new scala.util.Random(az * 131 + rg * 17 + base + 1)
         val vals = Array.fill(az * rg)(
           if (rng.nextInt(6) == 0) 0 else base + rng.nextInt(span))
-        val dir = java.nio.file.Files.createTempDirectory("h5sobe").toString
+        val dir = tmpDir("h5sobe")
         graft.Fixtures.writeH5(s"$dir/x.h5", Seq(
           "s" -> graft.Fixtures.H5I32C(Seq(az, rg), vals, chunks = (ch, cw),
             soMinbits = Some(if (full) 32 else 0), be = true,
@@ -278,7 +278,7 @@ class CodecPropertiesSpec extends AnyFunSuite {
         // fill (0.0f) survives exactly; everything else rounds to 10^-scale
         val expect = vals.map(v =>
           if (v == 0.0f) 0.0 else (llround(v) / p10.toDouble).toFloat.toDouble).toSeq
-        val dir = java.nio.file.Files.createTempDirectory("h5sof").toString
+        val dir = tmpDir("h5sof")
         graft.Fixtures.writeH5(s"$dir/x.h5", Seq(
           "d" -> graft.Fixtures.H5F32(Seq(az, rg), vals, chunks = Some((ch, cw)),
             scaleoffset = Some(scale),

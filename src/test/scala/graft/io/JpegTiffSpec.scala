@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * images stay within DCT rounding tolerance; split-tables (tag 347),
   * tiles, restart markers and the BE container all decode; everything
   * out of baseline-grayscale scope fails LOUDLY. */
-class JpegTiffSpec extends AnyFunSuite {
+class JpegTiffSpec extends AnyFunSuite with graft.TmpDirs {
 
   private def samples[A](g: Gen[A], n: Int, seed: Long): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed + i)))
@@ -35,7 +35,7 @@ class JpegTiffSpec extends AnyFunSuite {
     } yield (bw * 8, bh * 8, tiled, split, be, rst)
     samples(gen, 25, 0x77E61).foreach { case (w, h, tiled, split, be, rst) =>
       val px = blockConstant(w, h, w * 131 + h)
-      val dir = java.nio.file.Files.createTempDirectory("tifjpg").toString
+      val dir = tmpDir("tifjpg")
       val path = s"$dir/x.tif"
       graft.JpegFixture.writeJpegTiff(path, px, w, h, ones, split = split,
         tiled = tiled, restartInterval = rst, bigendian = be)
@@ -67,7 +67,7 @@ class JpegTiffSpec extends AnyFunSuite {
         px(i) = v.toByte
         i += 1
       }
-      val dir = java.nio.file.Files.createTempDirectory("tifjpgr").toString
+      val dir = tmpDir("tifjpgr")
       val path = s"$dir/x.tif"
       graft.JpegFixture.writeJpegTiff(path, px, w, h, ones, split = split)
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -87,7 +87,7 @@ class JpegTiffSpec extends AnyFunSuite {
     val q16 = Array.fill(64)(16)
     val (w, h) = (24, 16)
     val px = blockConstant(w, h, 42)
-    val dir = java.nio.file.Files.createTempDirectory("tifjpgq").toString
+    val dir = tmpDir("tifjpgq")
     val path = s"$dir/x.tif"
     graft.JpegFixture.writeJpegTiff(path, px, w, h, q16, split = false)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -139,7 +139,7 @@ class JpegTiffSpec extends AnyFunSuite {
   test("SOF1 8-bit (extended sequential) decodes identically to baseline") {
     val (w, h) = (24, 16)
     val px = blockConstant(w, h, 7)
-    val dir = java.nio.file.Files.createTempDirectory("tifjpgs1").toString
+    val dir = tmpDir("tifjpgs1")
     Seq(false, true).foreach { split =>
       val path = s"$dir/x$split.tif"
       graft.JpegFixture.writeJpegTiff(path, px, w, h, ones, split = split,
@@ -173,7 +173,7 @@ class JpegTiffSpec extends AnyFunSuite {
     } yield (bw * 8, bh * 8, tiled, split, be)
     samples(gen, 20, 0x77E63).foreach { case (w, h, tiled, split, be) =>
       val px = blockConstant12(w, h, w * 131 + h + 1)
-      val dir = java.nio.file.Files.createTempDirectory("tifjpg12").toString
+      val dir = tmpDir("tifjpg12")
       val path = s"$dir/x.tif"
       graft.JpegFixture.writeJpegTiff12(path, px, w, h, ones, split = split,
         tiled = tiled, bigendian = be)
@@ -202,7 +202,7 @@ class JpegTiffSpec extends AnyFunSuite {
         px(i) = v
         i += 1
       }
-      val dir = java.nio.file.Files.createTempDirectory("tifjpg12r").toString
+      val dir = tmpDir("tifjpg12r")
       val path = s"$dir/x.tif"
       graft.JpegFixture.writeJpegTiff12(path, px, w, h, ones, split = split)
       val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -262,7 +262,7 @@ class JpegTiffSpec extends AnyFunSuite {
     samples(gen, 25, 0x77E65).foreach { case (w, h, qv, split, be, tiled) =>
       val qt = Array.fill(64)(qv)
       val px = noisy(w, h, w * 2003 + h)
-      val dir = java.nio.file.Files.createTempDirectory("tifjpgp").toString
+      val dir = tmpDir("tifjpgp")
       graft.JpegFixture.writeJpegTiff(s"$dir/seq.tif", px, w, h, qt,
         split = split, tiled = tiled, bigendian = be)
       graft.JpegFixture.writeJpegTiffProgressive(s"$dir/prog.tif",
@@ -281,7 +281,7 @@ class JpegTiffSpec extends AnyFunSuite {
     val (w, h) = (40, 24)
     val px = noisy(w, h, 99)
     val qt = Array.fill(64)(1)
-    val dir = java.nio.file.Files.createTempDirectory("tifjpgpr").toString
+    val dir = tmpDir("tifjpgpr")
     graft.JpegFixture.writeJpegTiffProgressive(s"$dir/plain.tif",
       (x, y) => px(y * w + x) & 0xff, w, h, qt, prec = 8, split = false)
     graft.JpegFixture.writeJpegTiffProgressive(s"$dir/rst.tif",
@@ -305,7 +305,7 @@ class JpegTiffSpec extends AnyFunSuite {
       val px = Array.tabulate(w * h)(i =>
         base((i / w / 8) * (w / 8 + 1) + (i % w) / 8) + rng.nextInt(256))
       val qt = Array.fill(64)(1)
-      val dir = java.nio.file.Files.createTempDirectory("tifjpgp12").toString
+      val dir = tmpDir("tifjpgp12")
       graft.JpegFixture.writeJpegTiff12(s"$dir/seq.tif", px, w, h, qt,
         split = false, bigendian = be)
       graft.JpegFixture.writeJpegTiffProgressive(s"$dir/prog.tif",

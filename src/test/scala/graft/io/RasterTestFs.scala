@@ -30,6 +30,9 @@ class RasterTestFs extends RawLocalFileSystem {
     count("globStatus"); super.globStatus(p, filter)
   }
   override def getFileStatus(f: Path): FileStatus = { count("getFileStatus"); super.getFileStatus(f) }
+  // RawLocalFileSystem answers exists through java.io.File, not through
+  // getFileStatus, so the probe is counted on its own
+  override def exists(f: Path): Boolean = { count("exists"); super.exists(f) }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = { count("open"); super.open(f, bufferSize) }
   override def mkdirs(f: Path, permission: FsPermission): Boolean = { count("mkdirs"); super.mkdirs(f, permission) }
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,

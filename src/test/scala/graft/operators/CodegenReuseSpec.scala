@@ -27,8 +27,7 @@ class CodegenReuseSpec extends SparkFunSuite {
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("a second curation_mix cycle compiles at most a tenth of the first cycle's classes") {
-    spark.conf.set("spark.graft.sigstore.root", tmpDir("codegenreuse"))
-    try {
+    withStoreRoot(tmpDir("codegenreuse")) {
       def cycle(): Seq[(String, Long)] = curationMix.map { q =>
         val c0 = compiles
         SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
@@ -40,7 +39,7 @@ class CodegenReuseSpec extends SparkFunSuite {
       info(counts)
       assert(first.map(_._2).sum > 0, counts)
       assert(second.map(_._2).sum * 10 <= first.map(_._2).sum, counts)
-    } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       SparkUtil.CodegenCacheMaxEntries.toString)
   }

@@ -148,11 +148,9 @@ class FaceCommitSpec extends SparkFunSuite {
     val live = rows(BpeQueries.trainedMergesDf(spark, corpus))
     assert(live.nonEmpty)
     RasterTestFs.withScheme(spark) {
-      def withRoot[T](f: java.io.File => T): T = {
-        spark.conf.set("spark.graft.sigstore.root", storeBase("bperoot"))
-        try f(new java.io.File(new org.apache.hadoop.fs.Path(
+      def withRoot[T](f: java.io.File => T): T = withStoreRoot(storeBase("bperoot")) {
+        f(new java.io.File(new org.apache.hadoop.fs.Path(
           SignatureStore.bpeMergesDir(SignatureStore.defaultBase(spark, corpus))).toUri.getPath))
-        finally spark.conf.unset("spark.graft.sigstore.root")
       }
       val calls = withRoot { _ =>
         RasterTestFs.resetCalls()
@@ -181,8 +179,7 @@ class FaceCommitSpec extends SparkFunSuite {
     Seq((1L, words.mkString(" ")), (2L, "lowest newer")).toDF("doc_id", "text")
       .write.parquet(s"$corpus/documents.parquet")
     RasterTestFs.withScheme(spark) {
-      spark.conf.set("spark.graft.sigstore.root", storeBase("warmroot"))
-      try {
+      withStoreRoot(storeBase("warmroot")) {
         def ensureAll(): Unit = {
           SignatureStore.ensureIvfAssignments(spark, corpus, () => Seq((1L, 0L)).toDF("vec_id", "cent_id"))
           SignatureStore.ensureQuantizedVectors(spark, corpus,
@@ -195,10 +192,12 @@ class FaceCommitSpec extends SparkFunSuite {
         val calls = Seq("listStatus", "globStatus", "getFileStatus", "open", "mkdirs", "create", "rename", "delete")
           .map(m => m -> RasterTestFs.calls(m)).toMap
         assert(calls("listStatus") + calls("globStatus") + calls("open") == 0, calls)
-        // no more than before the manifest, which made none of these
-        // calls (the stream probes' `exists` is not among them)
+        // no more than before the manifest, which made none of these calls
         assert(calls.values.sum == 0, calls)
-      } finally spark.conf.unset("spark.graft.sigstore.root")
+        // one probe of the stream subtree for each stream-backed face (IVF
+        // and q8), as before the manifest
+        assert(RasterTestFs.calls("exists") == 2, RasterTestFs.calls("exists"))
+      }
     }
   }
 

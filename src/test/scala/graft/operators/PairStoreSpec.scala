@@ -19,8 +19,7 @@ class PairStoreSpec extends SparkFunSuite {
 
   test("k8 and oph pair stores equal the live banded self-join") {
     val root = tmpDir("pairstore")
-    spark.conf.set("spark.graft.sigstore.root", root)
-    try {
+    withStoreRoot(root) {
       val docs = Tables.documents(spark, sfDir)
       val liveK8 = pairSet(TextQueries.bandedPairs(TextQueries.minhashBandsOf(docs)))
       val liveOph = pairSet(TextQueries.bandedPairs(TextQueries.ophBandsOf(docs)))
@@ -29,7 +28,7 @@ class PairStoreSpec extends SparkFunSuite {
       assert(pairSet(SignatureStore.ensureOphPairs(spark, sfDir)) == liveOph)
       // idempotent: second call is a pure read with the same rows
       assert(pairSet(SignatureStore.ensureK8Pairs(spark, sfDir)) == liveK8)
-    } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
   }
 
   test("delta law: pairs(batch) ∪ deltaPairs(delta, all) = pairs(all)") {
@@ -81,8 +80,7 @@ class PairStoreSpec extends SparkFunSuite {
 
   test("compaction seal: batch subtree alone equals a fresh rebuild") {
     val root = tmpDir("paircompact")
-    spark.conf.set("spark.graft.sigstore.root", root)
-    try {
+    withStoreRoot(root) {
       val base = SignatureStore.defaultBase(spark, sfDir)
       val docs = Tables.documents(spark, sfDir)
       val allBands = TextQueries.minhashBandsOf(docs).localCheckpoint()
@@ -101,7 +99,7 @@ class PairStoreSpec extends SparkFunSuite {
         SignatureStore.streamDir(SignatureStore.pairsDir(base, "k8")))))
       val sealedOnly = pairSet(SignatureStore.readPairs(spark, base, "k8"))
       assert(sealedOnly == pairSet(TextQueries.bandedPairs(allBands)))
-    } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
   }
 
   test("maintainCandidatePairs appends bands AND pair deltas per micro-batch") {

@@ -41,8 +41,7 @@ class RankedResultsStoreSpec extends SparkFunSuite {
   test("a failed refresh at any step serves the same snapshot") {
     import graft.io.RasterTestFs
     RasterTestFs.withScheme(spark) {
-      spark.conf.set("spark.graft.sigstore.root", s"${RasterTestFs.Scheme}://${tmpDir("topkcrash")}")
-      try {
+      withStoreRoot(s"${RasterTestFs.Scheme}://${tmpDir("topkcrash")}") {
         val before = rows(SignatureStore.ensureBm25TopK(spark, sfDir))
         RasterTestFs.resetCalls()
         SignatureStore.refreshBm25TopK(spark, sfDir)
@@ -54,7 +53,7 @@ class RankedResultsStoreSpec extends SparkFunSuite {
           RasterTestFs.resetCalls()
           assert(rows(SignatureStore.ensureBm25TopK(spark, sfDir)) == before, s"a failure at mutating call $n")
         }
-      } finally spark.conf.unset("spark.graft.sigstore.root")
+      }
     }
   }
 

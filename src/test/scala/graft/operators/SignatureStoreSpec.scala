@@ -109,8 +109,7 @@ class SignatureStoreSpec extends SparkFunSuite {
     // where doc 5 (not in the corpus slice) bridges docs of the corpus.
     import spark.implicits._
     val base = tmpDir("sigstream_canon")
-    spark.conf.set("spark.graft.sigstore.root", base)
-    try {
+    withStoreRoot(base) {
       // same text => identical minhash bands => guaranteed LSH collision
       val batchDocs = Tables.documents(spark, sfDir)
       val sb = SignatureStore.defaultBase(spark, sfDir)
@@ -132,14 +131,13 @@ class SignatureStoreSpec extends SparkFunSuite {
       val canonicals = assigns.filter(org.apache.spark.sql.functions
         .col("cluster_id") === org.apache.spark.sql.functions.col("doc_id")).count()
       assert(canonicals == clusters, "one canonical per cluster, none dropped")
-    } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
   }
 
   test("store works end-to-end through explicit file:-scheme URIs (Hadoop FS path)") {
     val schemedInput = s"file://$sfDir"
     val schemedRoot = s"file://${tmpDir("sigroot")}"
-    spark.conf.set("spark.graft.sigstore.root", schemedRoot)
-    try {
+    withStoreRoot(schemedRoot) {
       // fingerprint resolves through the Hadoop FileSystem (content-based,
       // not a degenerate path-only key)
       val base = SignatureStore.defaultBase(spark, schemedInput)
@@ -152,7 +150,7 @@ class SignatureStoreSpec extends SparkFunSuite {
       val live = TextQueries.minhashBandsOf(Tables.documents(spark, sfDir))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(viaScheme == live && again == live && live.nonEmpty)
-    } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
   }
 
   private def cells(df: org.apache.spark.sql.DataFrame) =
@@ -166,18 +164,14 @@ class SignatureStoreSpec extends SparkFunSuite {
     val live = cells(SketchQueries.countMinCells(
       SketchQueries.tokenVocab(Tables.documents(spark, sfDir))))
     assert(live.nonEmpty)
-    spark.conf.set("spark.graft.sigstore.root", tmpDir("sigrace"))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
+    try withStoreRoot(tmpDir("sigrace")) {
       type Cells = Set[(Int, Long, Long)]
       val calls = (1 to 4).map(_ => pool.submit(new java.util.concurrent.Callable[Cells] {
         def call(): Cells = cells(SignatureStore.ensureCountMin(spark, sfDir))
       }))
       calls.foreach(c => assert(c.get() == live, "every caller must read the live cells"))
-    } finally {
-      pool.shutdown()
-      spark.conf.unset("spark.graft.sigstore.root")
-    }
+    } finally pool.shutdown()
   }
 
   test("corpora whose path and listing strings share a 32-bit hash get different store bases") {

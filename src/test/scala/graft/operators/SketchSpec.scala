@@ -82,10 +82,9 @@ class SketchSpec extends SparkFunSuite {
     val plan = live.queryExecution.sparkPlan.toString
     assert("FileScan parquet".r.findAllIn(plan).size == 1, s"expected one events scan in:\n$plan")
     assert(!plan.contains("Join"), s"expected no join in:\n$plan")
-    spark.conf.set("spark.graft.sigstore.root", tmpDir("hllstore"))
-    try {
+    withStoreRoot(tmpDir("hllstore")) {
       val stored = SketchQueries.defs("hll_distinct_stored").build(spark, sfDir).collect().toSeq
       assert(stored.nonEmpty && live.collect().toSeq == stored)
-    } finally spark.conf.unset("spark.graft.sigstore.root")
+    }
   }
 }
