@@ -36,17 +36,15 @@ object CubeConfig {
 
   private val DateFmt = DateTimeFormatter.ofPattern("yyyyMMdd")
 
-  /** Load from a JSON file; `null`/absent path yields pure defaults
-    * (reference load_config(None), config.py:184-203). */
+  /** Load from a JSON file through the Hadoop FileSystem of its scheme;
+    * `null`/absent path yields pure defaults (reference
+    * load_config(None), config.py:184-203). */
   def fromJsonFile(path: String): CubeConfig =
     if (path == null) CubeConfig()
-    else fromMap(parseJson(path))
+    else fromMap(graft.io.HadoopFiles.readJson(path, classOf[java.util.Map[String, Object]]).asScala.toMap)
 
   def fromJsonString(json: String): CubeConfig =
     fromMap(new ObjectMapper().readValue(json, classOf[java.util.Map[String, Object]]).asScala.toMap)
-
-  private def parseJson(path: String): Map[String, Object] =
-    new ObjectMapper().readValue(new java.io.File(path), classOf[java.util.Map[String, Object]]).asScala.toMap
 
   /** Python-truthiness for the three boolean keys (config.py:87-97 accepts
     * True, 'True', 1 — any value `bool()` accepts). */

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,7 +20,8 @@ trait CubeSource {
 
   /** Read pixel payloads for the given files into a DataFrame with
     * columns (azimuth INT, range INT, value columns…) plus `_fpath` =
-    * the normalized dataset path, for band tagging. Must be one
+    * the payload's qualified path in [[GraftRasterSource.pathKey]] form,
+    * for band tagging. Must be one
     * distributed read per call — no per-file driver loops. */
   def readPixels(spark: SparkSession, paths: Seq[String]): DataFrame
 
@@ -32,14 +33,27 @@ trait CubeSource {
 }
 
 object CubeSource {
-  /** file:///a/b.parquet/part-x.parquet → /a/b.parquet */
-  private[io] def datasetPath(c: org.apache.spark.sql.Column, ext: String) =
-    regexp_replace(regexp_extract(c, s"^(.*?\\.$ext)(/.*)?$$", 1), "^file:/+", "/")
+  /** `input_file_name()` in the form of the raster connector's `path`
+    * column, [[GraftRasterSource.pathKey]] of the qualified path: the
+    * bare path on the local filesystem, the full path elsewhere. It is a
+    * percent-encoded URI: decode it (url_decode is form decoding, where '+' means space,
+    * so a literal '+' is escaped first and stays '+'), drop an empty
+    * authority as a Hadoop `Path` does (`s:///p` → `s:/p`) and drop a
+    * local `file:`. */
+  def inputPath: Column = {
+    val uri = url_decode(regexp_replace(input_file_name(), "\\+", "%2B"))
+    regexp_replace(regexp_replace(uri, "^([A-Za-z][A-Za-z0-9+.-]*:)//(?=/)", "$1"), "^file:", "")
+  }
+
+  /** The dataset a file source row came from, as [[inputPath]]:
+    * file:///a/b.parquet/part-x.parquet → /a/b.parquet */
+  private[io] def datasetKey(ext: String): Column =
+    regexp_extract(inputPath, s"^(.*?\\.$ext)(/.*)?$$", 1)
 
   val registry: Seq[CubeSource] = Seq(ParquetPixelSource, CsvPixelSource, TiffPixelSource, SlcH5Source)
 
   def forPath(path: String): CubeSource = {
-    val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
+    val ext = HadoopFiles.extension(path)
     registry.find(_.extensions.contains(ext)).getOrElse(
       throw new IllegalArgumentException(s"no CubeSource registered for .$ext ($path)"))
   }
@@ -50,13 +64,13 @@ object ParquetPixelSource extends CubeSource {
   override val extensions: Set[String] = Set("parquet")
   override def readPixels(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.parquet(paths: _*)
-      .withColumn("_fpath", CubeSource.datasetPath(input_file_name(), "parquet"))
+      .withColumn("_fpath", CubeSource.datasetKey("parquet"))
 }
 
 /** Raster payloads read through the shared DataSource V2 connector
   * ([[GraftRasterSource]]): one connector scan over exactly the given
   * files, so no other raster is opened or header-read. `_fpath` is the
-  * connector's `path` column ([[GraftRasterSource.pathKey]]). A raster
+  * connector's `path` column. A raster
   * is never split across tasks, the same unit as the reference's
   * per-raster dask graph (`grd_datacube.py:117-149`,
   * `slc_datacube.py:118-162`); small rasters share a task. */
@@ -87,7 +101,7 @@ object CsvPixelSource extends CubeSource {
   override val extensions: Set[String] = Set("csv")
   override def readPixels(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val raw = spark.read.option("header", "true").option("inferSchema", "false").csv(paths: _*)
-      .withColumn("_fpath", CubeSource.datasetPath(input_file_name(), "csv"))
+      .withColumn("_fpath", CubeSource.datasetKey("csv"))
     val typed = raw.columns.filterNot(_ == "_fpath").foldLeft(raw) { (df, c) =>
       val target = if (c == "azimuth" || c == "range") "int" else "double"
       df.withColumn(c, col(c).cast(target))

@@ -77,20 +77,14 @@ class GraftSlcSource extends GraftRasterSource(RasterFormat.Slc)
 
 object GraftRasterSource {
 
-  private def hadoopConf: Configuration =
-    SparkSession.active.sparkContext.hadoopConfiguration
-
   /** The raster files of load paths as (qualified path, length),
     * distinct and sorted by path: each path itself if it is a file, else
     * its children with one of the format's extensions. */
   def listRasters(format: RasterFormat, paths: String*): Seq[(String, Long)] =
     paths.flatMap { pathStr =>
       val p = new Path(pathStr)
-      val fs = p.getFileSystem(hadoopConf)
-      val st = fs.getFileStatus(p)
-      if (st.isFile) Seq(st)
-      else fs.listStatus(p).toSeq.filter(f => f.isFile &&
-        format.extensions.exists(e => f.getPath.getName.toLowerCase.endsWith("." + e)))
+      val st = p.getFileSystem(HadoopFiles.conf).getFileStatus(p)
+      if (st.isFile) Seq(st) else HadoopFiles.list(pathStr, format.extensions, recursive = false)
     }.map(f => f.getPath.toString -> f.getLen).distinct.sortBy(_._1)
 
   /** Rasters grouped into read tasks the way Spark's file sources pack
@@ -128,66 +122,26 @@ object GraftRasterSource {
   /** A path as a caller spells it, qualified against its filesystem. */
   def qualify(path: String): String = {
     val p = new Path(path)
-    p.getFileSystem(hadoopConf).makeQualified(p).toString
+    p.getFileSystem(HadoopFiles.conf).makeQualified(p).toString
   }
 
-  /** Files up to this size are read whole at the first read of a
-    * payload open: one filesystem read serves the header walk and the
-    * payload. */
-  private val WholeFile = 1 << 20
-
-  /** In larger files, reads shorter than this come from one window of
-    * this size read ahead from the first miss, so a header walk (dozens
-    * of small reads) costs about one filesystem read; longer reads
-    * (payloads, chunks) go straight to the stream. */
-  private val Window = 64 * 1024
-
-  /** Open one raster through the Hadoop FileSystem, run `body` on it,
-    * close it. Reads are positional (clipped at EOF, as [[Hdf5.open]]
-    * does); every read a [[Raster]] makes happens inside `body`.
-    * `payload` = `body` decodes pixels; a header-only open (stats, dims,
-    * dtype) never reads a file whole, only the windows its header walk
-    * touches. */
+  /** Open one raster through [[HadoopFiles.withFile]], run `body` on
+    * it, close it. Every read a [[Raster]] makes happens inside `body`.
+    * `payload` = `body` decodes pixels. */
   def withRaster[T](format: RasterFormat, file: String, conf: Configuration, payload: Boolean)(
-      body: Raster => T): T = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    try {
-      def direct(off: Long, n: Int): Array[Byte] = {
-        val buf = new Array[Byte](math.max(math.min(n.toLong, len - off), 0L).toInt)
-        if (buf.nonEmpty) { in.seek(off); in.readFully(buf) }
-        buf
-      }
-      val whole = payload && len <= WholeFile
-      var winOff = 0L
-      var win = Array.emptyByteArray
-      val read: Tiff.ReadAt = (off, n) => {
-        val hit = off >= winOff && (off + n <= winOff + win.length || winOff + win.length == len)
-        if (!hit && !whole && n >= Window) direct(off, n)
-        else {
-          if (!hit) {
-            winOff = if (whole) 0L else off
-            win = direct(winOff, if (whole) len.toInt else Window)
-          }
-          val from = math.min(off - winOff, win.length.toLong).toInt
-          java.util.Arrays.copyOfRange(win, from, math.min(from.toLong + n, win.length.toLong).toInt)
-        }
-      }
-      body(format.open(pathKey(file), read, len))
-    } finally in.close()
-  }
+      body: Raster => T): T =
+    HadoopFiles.withFile(file, conf, payload)((read, len) => body(format.open(pathKey(file), read, len)))
 
   /** A header-only [[withRaster]] with the active session's Hadoop
     * configuration. */
   def withHeader[T](format: RasterFormat, file: String)(body: Raster => T): T =
-    withRaster(format, file, hadoopConf, payload = false)(body)
+    withRaster(format, file, HadoopFiles.conf, payload = false)(body)
 }
 
-/** What varies between the raster formats of [[GraftRasterSource]]. */
-sealed abstract class RasterFormat(val shortName: String,
-    val extensions: Set[String], valueCols: Seq[String]) extends Serializable {
+/** What varies between the raster formats of [[GraftRasterSource]].
+  * `productType` names the cube a stack of them builds. */
+sealed abstract class RasterFormat(val shortName: String, val productType: String,
+    val extensions: Set[String], val valueCols: Seq[String]) extends Serializable {
 
   val schema: StructType = StructType(
     Seq(StructField("path", StringType, nullable = false),
@@ -206,8 +160,23 @@ sealed abstract class RasterFormat(val shortName: String,
 
 object RasterFormat {
 
+  val all: Seq[RasterFormat] = Seq(Grd, Slc)
+
+  /** The one format of a stack of products, or of their `.json`
+    * sidecars, by extension (generate_cube.py:53-72): .tif and .tiff
+    * are GRD and may mix, .h5 is SLC; a mix of the two, or any other
+    * extension, is an error. */
+  def ofProducts(paths: Seq[String]): RasterFormat = {
+    val exts = paths.map(p => HadoopFiles.extension(p.stripSuffix(".json"))).distinct
+    exts.map(e => all.find(_.extensions(e))).distinct match {
+      case Seq(Some(format)) => format
+      case _ => throw new IllegalArgumentException(
+        s"Folder consists of mixed or unsupported product extensions: ${exts.mkString(", ")}")
+    }
+  }
+
   /** GRD GeoTIFF: one `intensity` value per pixel. */
-  case object Grd extends RasterFormat("graft-tiff", Set("tif", "tiff"), Seq("intensity")) {
+  case object Grd extends RasterFormat("graft-tiff", "GRD", Set("tif", "tiff"), Seq("intensity")) {
     def provider: String = classOf[GraftTiffSource].getName
     def open(name: String, read: Tiff.ReadAt, len: Long): Raster = {
       val info = Tiff.readHeader(read)
@@ -232,7 +201,7 @@ object RasterFormat {
   }
 
   /** SLC HDF5: the `s_i`/`s_q` complex pair as `real`, `imag`. */
-  case object Slc extends RasterFormat("graft-slc", Set("h5"), Seq("real", "imag")) {
+  case object Slc extends RasterFormat("graft-slc", "SLC", Set("h5"), Seq("real", "imag")) {
     def provider: String = classOf[GraftSlcSource].getName
     def open(name: String, read: Tiff.ReadAt, len: Long): Raster = {
       val f = new Hdf5.File(read)
@@ -540,8 +509,7 @@ final case class RowBounds(required: StructType, rowLo: Int, rowHi: Int,
   * Built on the driver, so it ships the session's Hadoop configuration. */
 class RasterReaderFactory(format: RasterFormat, read: Either[Seq[HeaderAgg], RowBounds])
     extends PartitionReaderFactory {
-  private val conf = new SerializableConfiguration(
-    SparkSession.active.sparkContext.hadoopConfiguration)
+  private val conf = new SerializableConfiguration(HadoopFiles.conf)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val files = partition.asInstanceOf[RasterPartition].files

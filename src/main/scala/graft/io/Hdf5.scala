@@ -1231,17 +1231,4 @@ object Hdf5 {
   def fromBytes(data: Array[Byte]): File =
     new File((off, len) => java.util.Arrays.copyOfRange(
       data, off.toInt, math.min(data.length, off.toInt + len)))
-
-  /** Header/metadata reads via seeks — never loads pixel datasets. */
-  def open(path: String): (File, java.io.RandomAccessFile) = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    val readAt: ReadAt = (off, len) => {
-      val n = math.min(len.toLong, raf.length() - off).toInt
-      val buf = new Array[Byte](math.max(n, 0))
-      raf.seek(off)
-      raf.readFully(buf)
-      buf
-    }
-    (new File(readAt), raf)
-  }
 }

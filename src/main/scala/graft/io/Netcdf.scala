@@ -3,6 +3,7 @@ package graft.io
 import graft.core.Cube
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** netCDF4 cube interop — reads the reference's own persistence format
   * (S12: `datacube.py:203-212` writes cubes with `xr.Dataset.to_netcdf`;
@@ -26,8 +27,9 @@ import org.apache.spark.sql.types._
   *     parser by construction.
   *
   * Scale posture: structure/attrs parse on the driver (KBs); the pixel
-  * decode is DISTRIBUTED — one task per band re-opens the file (works on
-  * local and shared filesystems) and reads only its plane through
+  * decode is DISTRIBUTED — one task per band re-opens the file through
+  * the Hadoop FileSystem of its scheme ([[HadoopFiles.withFile]], as
+  * the driver does) and reads only its plane through
   * [[Hdf5.File.readSlice0]], so no single process ever materializes the
   * cube. Persist to the parquet [[CubeStore]] layout for repeated
   * distributed work; this is the interop import.
@@ -74,8 +76,9 @@ object Netcdf {
   }
 
   def readCube(spark: SparkSession, path: String): Cube = {
-    val (f, raf) = Hdf5.open(path)
-    try {
+    val sc = spark.sparkContext
+    HadoopFiles.withFile(path, sc.hadoopConfiguration, payload = false) { (read, _) =>
+      val f = new Hdf5.File(read)
       val entries = f.rootEntries
       val attrsOf: Map[String, Map[String, Hdf5.AttrValue]] =
         entries.map { case (n, a) => n -> f.attributes(a).toMap }.toMap
@@ -116,7 +119,7 @@ object Netcdf {
       }
 
       // --- pixels: long format, DISTRIBUTED band-plane decode — one task
-      // per band re-opens the file (local or shared filesystem) and reads
+      // per band re-opens the file through its FileSystem and reads
       // only its plane via readSlice0 (contiguous: one ranged read;
       // chunked: intersecting chunks only). Neither the driver nor any
       // task ever holds more than one plane per variable. ---
@@ -130,12 +133,13 @@ object Netcdf {
       val ncPath = path
       val rgW = rg
       val azW = az
-      val parallelism = spark.sparkContext.defaultParallelism
-      val pixelRdd = spark.sparkContext
+      val parallelism = sc.defaultParallelism
+      val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+      val pixelRdd = sc
         .parallelize(0 until nBands, math.max(1, math.min(parallelism, nBands)))
         .flatMap { b =>
-          val (bf, braf) = Hdf5.open(ncPath)
-          try {
+          HadoopFiles.withFile(ncPath, conf.value.value, payload = true) { (bread, _) =>
+            val bf = new Hdf5.File(bread)
             val planes = varDs.map(d => bf.readSlice0(d, b.toLong))
             val ts = if (b < bandMicros.length)
               java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(
@@ -156,7 +160,7 @@ object Netcdf {
               a += 1
             }
             rows.toSeq
-          } finally braf.close()
+          }
         }
       val pixels = spark.createDataFrame(pixelRdd, pixelSchema)
 
@@ -197,7 +201,7 @@ object Netcdf {
           b, ts, m)
       }
       val layers = spark.createDataFrame(
-        spark.sparkContext.parallelize(layerRows, 1), layerSchema)
+        sc.parallelize(layerRows, 1), layerSchema)
 
       // --- cube attrs: root attributes + dims. "_"-prefixed bookkeeping
       // attrs (netCDF-C writes _NCProperties at root) are library
@@ -209,7 +213,7 @@ object Netcdf {
       }.toMap
       Cube(layers, pixels, rootAttrs ++ Map(
         "master_azimuth" -> az.toString, "master_range" -> rg.toString))
-    } finally raf.close()
+    }
   }
 
   /** Integral doubles print without the ".0" (attr values were ints). */

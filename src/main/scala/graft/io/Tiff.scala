@@ -80,22 +80,8 @@ object Tiff {
   def fromBytes(data: Array[Byte]): Info =
     readHeader((off, len) => java.util.Arrays.copyOfRange(data, off.toInt, off.toInt + len))
 
-  /** Header-only read: a handful of small seeks via RandomAccessFile —
-    * never touches the strip payload. */
-  def readHeader(path: String): Info = {
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      readHeader { (off, len) =>
-        val buf = new Array[Byte](len)
-        raf.seek(off)
-        raf.readFully(buf)
-        buf
-      }
-    } finally raf.close()
-  }
-
-  /** Header parse through any positional reader (the raster connector
-    * hands in reads through the Hadoop FileSystem). */
+  /** Header parse through any positional reader (the crawl and the
+    * raster connector hand in reads through [[HadoopFiles.withFile]]). */
   def readHeader(read: ReadAt): Info = {
     val head = read(0L, 8)
     val le = head(0) == 'I' && head(1) == 'I'

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.core.{Cube, CubeConfig}
-import graft.io.ParquetPixelSource
+import graft.io.{HadoopFiles, ParquetPixelSource}
 import graft.meta.{CubePlanner, MetadataCrawler}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,9 +24,10 @@ object LabelsCubeBuilder {
 
   case class LabelEntry(productFile: String, firstKey: String, objectsJson: String, maskPath: String)
 
-  /** S8: read + type-sniff the labels JSON (labels_utils.py:8-51). */
+  /** S8: read + type-sniff the labels JSON (labels_utils.py:8-51),
+    * through the Hadoop FileSystem of its scheme. */
   def readLabels(labelsFpath: String): (String, Seq[LabelEntry]) = {
-    val root = mapper.readValue(new java.io.File(labelsFpath), classOf[java.util.List[java.util.Map[String, Object]]])
+    val root = HadoopFiles.readJson(labelsFpath, classOf[java.util.List[java.util.Map[String, Object]]])
     val entries = root.asScala.toSeq.map { m =>
       val pf = String.valueOf(m.get("product_file"))
       val labels = m.get("labels").asInstanceOf[java.util.Map[String, Object]]

@@ -5,8 +5,9 @@ import graft.io.Tiff
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** GRD metadata tag read + coercion (S5/M10) — executor-side port of
-  * `read_GRD_metadata` (analytics_IO.py:374-403):
+/** GRD metadata tag coercion (S5/M10) — executor-side port of
+  * `read_GRD_metadata` (analytics_IO.py:374-403) over a parsed TIFF
+  * header, which the crawl reads through [[graft.io.HadoopFiles]]:
   *
   *   1. GDAL_METADATA tag → (key, value) pairs; keys normalized (M4,
   *      analytics_IO.py:343-371).
@@ -79,11 +80,8 @@ object GrdTags {
     "window_function_azimuth" -> S, "window_function_range" -> S,
     "zerodoppler_end_utc" -> D, "zerodoppler_start_utc" -> D)
 
-  private val CoreKeys = Set(
-    "product_file", "incidence_center", "local_incidence_angle",
-    "incidence_near", "incidence_far", "look_side", "orbit_direction",
-    "acquisition_end_utc", "number_of_azimuth_samples", "number_of_range_samples",
-    "coord_first_near", "coord_first_far", "coord_last_near", "coord_last_far")
+  /** The crawler's typed fields; every other tag goes to the open attrs. */
+  private[meta] val CoreKeys: Set[String] = RawSchema.fieldNames.toSet - "_extras" - "_src"
 
   /** M8 executor twin: numpy-printed vector string → doubles. Single-level
     * brackets only; nested (2-D) or bracket-less ⇒ None, and
@@ -102,7 +100,7 @@ object GrdTags {
 
   /** Python-list style stringification of a parsed vector (NumpyEncoder
     * ndarray → str(list), common_utils.py:133-135). */
-  private def strList(xs: Array[Double]): String = xs.mkString("[", ", ", "]")
+  private[meta] def strList(xs: Array[Double]): String = xs.mkString("[", ", ", "]")
 
   /** Coerce-and-stringify one non-core tag for the open-attrs map. */
   private def extraValue(key: String, v: String): String =
@@ -117,10 +115,9 @@ object GrdTags {
       case Some(_)   => v // str / datetime kinds stay as-is
     }
 
-  /** One raster → one raw crawler row (RawSchema). Runs on executors;
-    * header-only seeks via [[Tiff.readHeader]]. */
-  def rasterRawRow(path: String): Row = {
-    val info = Tiff.readHeader(path)
+  /** One raster's parsed header → one raw crawler row (RawSchema), with
+    * `path` as its source. Runs on executors. */
+  def rasterRawRow(info: Tiff.Info, path: String): Row = {
     val tags: Map[String, String] = info.gdalXml
       .map(Tiff.gdalItems(_).map { case (k, v) => (Parsers.correctGrdMetadataKey(k), v) }.toMap)
       .getOrElse(Map.empty)

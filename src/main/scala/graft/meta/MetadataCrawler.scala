@@ -1,19 +1,27 @@
 package graft.meta
 
+import java.io.FileNotFoundException
+
+import graft.io.{CubeSource, GraftRasterSource, HadoopFiles, Hdf5, RasterFormat, Tiff}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Directory scan → layers (metadata) DataFrame.
   *
   * Port of the reference metadata crawler semantics
-  * (icecube/utils/metadata_crawler.py:20-65,138-229,255-267) over the
-  * binary-decode-free fixture layout (FIXTURES.md §2): each product is a
-  * `<product_file>.json` metadata object next to a `<product_file>.parquet`
-  * pixel table.
+  * (icecube/utils/metadata_crawler.py:20-65,138-229,255-267) over two
+  * layouts: real rasters (GRD `.tif`, SLC `.h5`), whose tags are read
+  * from each file's header, and the binary-decode-free fixture layout
+  * (FIXTURES.md §2), where each product is a `<product_file>.json`
+  * metadata object next to a `<product_file>.parquet` pixel table.
   *
-  * All projection/fallback logic is columnar (`coalesce` chains) so the
-  * whole crawl is one distributed JSON scan — no per-file driver loop.
+  * Every listing and read goes through the Hadoop FileSystem of the
+  * path's scheme ([[HadoopFiles]]). All projection/fallback logic is
+  * columnar (`coalesce` chains), so each crawl is one distributed pass
+  * — no per-file driver loop.
   */
 object MetadataCrawler {
 
@@ -24,49 +32,35 @@ object MetadataCrawler {
     "orbit_direction", "extent", "acquisition_date", "acquisition_time",
     "number_of_azimuth_samples", "number_of_range_samples")
 
-  private val CoreJsonFields = Set(
-    "product_file", "incidence_center", "local_incidence_angle",
-    "incidence_near", "incidence_far", "look_side", "orbit_direction",
-    "acquisition_end_utc", "number_of_azimuth_samples", "number_of_range_samples",
-    "coord_first_near", "coord_first_far", "coord_last_near", "coord_last_far")
-
   /** S1: crawl a product directory. Dispatch: JSON-sidecar fixture layout
     * when `.json` files are present, else real binary rasters (`.tif`).
     * `recursive` walks subfolders too (metadata_crawler.py:128-135 /
     * DirUtils.get_dir_files recursive variant). */
-  def crawlDirectory(spark: SparkSession, dir: String, recursive: Boolean = false): DataFrame = {
-    val jsons = listMetadataFiles(dir, recursive)
-    if (jsons.nonEmpty) crawlFiles(spark, jsons)
-    else {
-      val rasters = listRasterFiles(dir, recursive)
-      require(rasters.nonEmpty, s"Could not find any products in $dir")
-      crawlRasterFiles(spark, rasters)
-    }
+  def crawlDirectory(spark: SparkSession, dir: String, recursive: Boolean = false): DataFrame =
+    crawl(spark, listProducts(dir, recursive))
+
+  /** A directory's products: its JSON sidecars when it holds any, else
+    * its rasters. */
+  def listProducts(dir: String, recursive: Boolean = false): Seq[String] = {
+    val jsons = listFiles(dir, Set("json"), recursive)
+    val files = if (jsons.nonEmpty) jsons else listRasterFiles(dir, recursive)
+    require(files.nonEmpty, s"Could not find any products in $dir")
+    files
   }
 
-  def listMetadataFiles(dir: String): Seq[String] = listMetadataFiles(dir, recursive = false)
-
-  def listMetadataFiles(dir: String, recursive: Boolean): Seq[String] =
-    listFiles(dir, Set("json"), recursive)
+  /** Crawl product files: JSON sidecars when all are `.json`, else
+    * rasters. */
+  def crawl(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.forall(_.endsWith(".json"))) crawlFiles(spark, files) else crawlRasterFiles(spark, files)
 
   /** Raster-product listing shared with CubeBuilder.fromDirectory. */
   def listRasterFiles(dir: String, recursive: Boolean = false): Seq[String] =
-    listFiles(dir, Set("tif", "tiff", "h5"), recursive)
+    listFiles(dir, RasterFormat.all.flatMap(_.extensions).toSet, recursive)
 
-  /** Directory listing (common_utils.py:20-41): non-recursive by default,
-    * recursive = full subtree walk. Driver-side — the listing is
-    * file-cardinality, never pixel-cardinality. */
-  private def listFiles(dir: String, exts: Set[String], recursive: Boolean): Seq[String] = {
-    def ext(n: String) = n.substring(n.lastIndexOf('.') + 1).toLowerCase
-    def walk(d: java.io.File): Seq[java.io.File] = {
-      val children = Option(d.listFiles()).getOrElse(Array.empty).toSeq
-      children.filter(_.isFile) ++
-        (if (recursive) children.filter(_.isDirectory).flatMap(walk) else Nil)
-    }
-    walk(new java.io.File(dir))
-      .filter(f => exts.contains(ext(f.getName)))
-      .map(_.getAbsolutePath).sorted
-  }
+  /** [[HadoopFiles.list]] as product paths: on the local filesystem the
+    * bare absolute path, on any other scheme the qualified path. */
+  private def listFiles(dir: String, exts: Set[String], recursive: Boolean): Seq[String] =
+    HadoopFiles.list(dir, exts, recursive).map(f => GraftRasterSource.pathKey(f.getPath.toString))
 
   /** Build from an explicit file list; validates existence and homogeneous
     * product extension (compute_metdatadf_from_list,
@@ -74,52 +68,46 @@ object MetadataCrawler {
   def crawlFiles(spark: SparkSession, metadataPaths: Seq[String]): DataFrame = {
     require(metadataPaths != null && metadataPaths.nonEmpty,
       s"Please provide a correct input - $metadataPaths")
+    val conf = spark.sparkContext.hadoopConfiguration
     metadataPaths.foreach { p =>
-      require(new java.io.File(p).isFile, s"File $p isn't a correct path")
+      val path = new Path(p)
+      val isFile = try path.getFileSystem(conf).getFileStatus(path).isFile
+        catch { case _: FileNotFoundException => false }
+      require(isFile, s"File $p isn't a correct path")
     }
-    val exts = metadataPaths.map(productExtension).distinct
-    require(exts.size == 1,
-      s"All files should have the same extensions, found: ${exts.mkString(", ")}")
+    RasterFormat.ofProducts(metadataPaths)
 
     val raw = spark.read.option("multiLine", value = true).json(metadataPaths: _*)
-      .withColumn("_src", input_file_name())
-    // input_file_name() is a percent-encoded URI; decode it back to the
-    // path on disk. url_decode is form decoding ('+' means space), so a
-    // literal '+' is escaped first and stays '+'.
-    val src = url_decode(regexp_replace(col("_src"), "\\+", "%2B"))
-    project(raw, jsonAttrs(raw),
-      regexp_replace(regexp_replace(src, "\\.json$", ""), "^file:/+", "/"))
+      .withColumn("_src", regexp_replace(CubeSource.inputPath, "\\.json$", ""))
+    project(raw, jsonAttrs(raw), col("_src"))
   }
 
   /** S5/S7 for real rasters: distributed header-only crawl. Each task
-    * reads a raster's IFD + GDAL metadata tag with a few seeks (never the
-    * pixel strips — the metadata-before-pixels plan stays O(KB) per file
-    * at any raster size), normalizes keys (M4), coerces the GRD dtype
-    * table (analytics_IO.py:614-717), and parses the RPC tag (M10,
+    * opens its rasters through [[HadoopFiles.withFile]], with the
+    * session's Hadoop configuration, and parses only
+    * the header: a TIFF's IFD and tags, an HDF5 file's root group and its
+    * small datasets, never the pixels, so the metadata-before-pixels
+    * plan reads at most one read-ahead window per header at any raster
+    * size. It normalizes keys (M4), coerces the GRD dtype table
+    * (analytics_IO.py:614-717), and parses the RPC tag (M10,
     * analytics_IO.py:876-948). */
   def crawlRasterFiles(spark: SparkSession, rasterPaths: Seq[String]): DataFrame = {
     require(rasterPaths.nonEmpty, s"Please provide a correct input - $rasterPaths")
-    // .tif and .tiff are the same format class (generate_cube.py:53-72
-    // accepts them mixed); .h5 must not mix with either
-    val exts = rasterPaths.map(p => p.substring(p.lastIndexOf('.') + 1).toLowerCase).distinct
-    val classes = exts.map { case "tiff" => "tif"; case e => e }.distinct
-    require(classes.size == 1,
-      s"All files should have the same extensions, found: ${exts.mkString(", ")}")
-    val slices = math.min(rasterPaths.size, spark.sparkContext.defaultParallelism)
-    val rowOf: String => org.apache.spark.sql.Row =
-      if (classes.head == "h5") SlcTags.rasterRawRow else GrdTags.rasterRawRow
-    val rows = spark.sparkContext.parallelize(rasterPaths, math.max(1, slices)).map(rowOf)
+    val slc = RasterFormat.ofProducts(rasterPaths) == RasterFormat.Slc
+    // broadcast, as Spark's file sources do: a task reads the shared
+    // copy instead of deserializing its own (about 30 ms per 4-task
+    // crawl of 24 files on 4 cores)
+    val sc = spark.sparkContext
+    val conf = sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration))
+    val slices = math.min(rasterPaths.size, sc.defaultParallelism)
+    val rows = sc.parallelize(rasterPaths, math.max(1, slices)).map { p =>
+      HadoopFiles.withFile(p, conf.value.value, payload = false) { (read, _) =>
+        if (slc) SlcTags.rasterRawRow(new Hdf5.File(read), p)
+        else GrdTags.rasterRawRow(Tiff.readHeader(read), p)
+      }
+    }
     val raw = spark.createDataFrame(rows, GrdTags.RawSchema)
     project(raw, coalesce(col("_extras"), map()), col("_src"))
-  }
-
-  /** "ICEYE_GRD_x_fake_0.tif.json" → ".tif" */
-  private def productExtension(metaPath: String): String = {
-    val stem = new java.io.File(metaPath).getName.stripSuffix(".json")
-    stem.lastIndexOf('.') match {
-      case -1 => ""
-      case i  => stem.substring(i)
-    }
   }
 
   private def optCol(df: DataFrame, name: String): Column =
@@ -141,7 +129,7 @@ object MetadataCrawler {
     * stringified (NumpyEncoder analog, common_utils.py:126-138 —
     * arrays/structs become JSON text). */
   private def jsonAttrs(raw: DataFrame): Column = {
-    val extraFields = raw.columns.filterNot(c => CoreJsonFields.contains(c) || c == "_src").sorted
+    val extraFields = raw.columns.filterNot(c => GrdTags.CoreKeys.contains(c) || c == "_src").sorted
     val attrEntries = extraFields.flatMap { f =>
       val v = raw.schema(f).dataType match {
         case _: StructType | _: ArrayType | _: MapType => to_json(col(f))

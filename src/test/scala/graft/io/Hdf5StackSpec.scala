@@ -348,27 +348,26 @@ class Hdf5StackSpec extends SparkFunSuite {
 
   test("Hdf5 reader parses real h5py output (vlen strings, multi-SNOD, RPC group)") {
     assume(new java.io.File(refH5).isFile, "reference fixtures not available")
-    val (f, raf) = Hdf5.open(refH5)
-    try {
-      val entries = f.rootEntries.toMap
-      assert(entries.size > 50) // 80+ metadata datasets over many SNOD leaves
-      val si = f.dataset("s_i", entries("s_i"))
-      assert(si.dims == Seq(20L, 20L) && si.dtype == Hdf5.FloatPoint(4, littleEndian = true))
-      val vals = f.readDoubles(si)
-      assert(vals.length == 400 && vals.forall(v => v >= 0.0 && v <= 1.0))
-      // vlen string via the global heap
-      val acq = f.readString(f.dataset("acquisition_end_utc", entries("acquisition_end_utc")))
-      assert(acq == "2021-04-28T21:51:30.025535")
-      // RPC subgroup
-      val rpc = f.subgroupEntries("RPC").get.toMap
-      assert(rpc.contains("LINE_NUM_COEFF") && rpc.contains("LAT_OFF"))
-      assert(f.readDoubles(f.dataset("LINE_NUM_COEFF", rpc("LINE_NUM_COEFF"))).length == 20)
-    } finally raf.close()
+    val f = Hdf5.fromBytes(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(refH5)))
+    val entries = f.rootEntries.toMap
+    assert(entries.size > 50) // 80+ metadata datasets over many SNOD leaves
+    val si = f.dataset("s_i", entries("s_i"))
+    assert(si.dims == Seq(20L, 20L) && si.dtype == Hdf5.FloatPoint(4, littleEndian = true))
+    val vals = f.readDoubles(si)
+    assert(vals.length == 400 && vals.forall(v => v >= 0.0 && v <= 1.0))
+    // vlen string via the global heap
+    val acq = f.readString(f.dataset("acquisition_end_utc", entries("acquisition_end_utc")))
+    assert(acq == "2021-04-28T21:51:30.025535")
+    // RPC subgroup
+    val rpc = f.subgroupEntries("RPC").get.toMap
+    assert(rpc.contains("LINE_NUM_COEFF") && rpc.contains("LAT_OFF"))
+    assert(f.readDoubles(f.dataset("LINE_NUM_COEFF", rpc("LINE_NUM_COEFF"))).length == 20)
   }
 
   test("SLC crawl row from a real h5py fixture") {
     assume(new java.io.File(refH5).isFile, "reference fixtures not available")
-    val row = SlcTags.rasterRawRow(refH5)
+    val row = SlcTags.rasterRawRow(
+      Hdf5.fromBytes(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(refH5))), refH5)
     assert(row.getString(7) == "2021-04-28T21:51:30.025535") // acquisition_end_utc
     assert(row.getInt(8) == 20 && row.getInt(9) == 20)
     val extras = row.getMap[String, String](14)

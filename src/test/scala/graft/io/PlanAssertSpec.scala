@@ -18,6 +18,28 @@ class PlanAssertSpec extends SparkFunSuite {
     dir
   }
 
+  /** A signature-store root longer than the 100 characters of a scan's
+    * location that Spark prints: the store-face tests run under it, so
+    * they can find a face only by its scan's root path. */
+  private lazy val longStoreRoot: String = {
+    val root = tmpDir("longroot") + "/a-store-root-longer-than-a-printed-scan-location" * 2
+    assert(root.length >= 120, root)
+    root
+  }
+
+  /** The root paths of every file scan in `df`'s physical plan, adaptive
+    * stages and subqueries included. */
+  private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.mkString(",")
+      }
+
+  /** A store-face test run under [[longStoreRoot]]. */
+  private def storeTest(name: String)(body: => Unit): Unit =
+    test(name)(withStoreRoot(longStoreRoot)(body))
+
   test("point query on a stored cube prunes band partitions and pushes pixel filters") {
     val cube = CubeReader.load(spark, storeDir)
     val q = cube.pixels
@@ -50,6 +72,15 @@ class PlanAssertSpec extends SparkFunSuite {
       s"band tagging must broadcast the layer table:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"pixel-side sort-merge join would shuffle the pixel table:\n$plan")
+  }
+
+  test("a cube build tags pixels with one broadcast join, for every payload source") {
+    Seq(Fixtures.writeGrdStack(spark, tmpDir("onejoinjson")), Fixtures.writeTiffStack(tmpDir("onejointif")),
+        Fixtures.writeH5Stack(tmpDir("onejoinh5"))).foreach { dir =>
+      val plan = Cube.fromDirectory(spark, dir, CubeConfig()).pixels.queryExecution.sparkPlan
+      val joins = plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j.nodeName }
+      assert(joins == Seq("BroadcastHashJoin"), s"$dir:\n$plan")
+    }
   }
 
   test("corpus_curation prefix sum never uses a single-partition window") {
@@ -93,7 +124,7 @@ class PlanAssertSpec extends SparkFunSuite {
     assert(q.count() > 0)
   }
 
-  test("bm25_search_stored scans corpus text only for the bounded query side") {
+  storeTest("bm25_search_stored scans corpus text only for the bounded query side") {
     val sfDir = "/root/testdata/sf0.001"
     // NOTE: bm25Rank localCheckpoints the pruned postings sliver eagerly,
     // so the plan below is the post-checkpoint remainder — which is
@@ -107,7 +138,7 @@ class PlanAssertSpec extends SparkFunSuite {
     val storedDocScans = "documents\\.parquet".r.findAllIn(storedPlan).size
     assert(storedDocScans == 1,
       s"stored path must scan documents once (query side only):\n$storedPlan")
-    assert(storedPlan.contains("bm25_doclens"),
+    assert(scanRoots(stored).exists(_.contains("bm25_doclens")),
       s"stored stats must come from the doclens artifact:\n$storedPlan")
     val live = graft.operators.SearchQueries.defs("bm25_search")
       .build(spark, sfDir)
@@ -484,7 +515,7 @@ class PlanAssertSpec extends SparkFunSuite {
     assert(q.count() > 0)
   }
 
-  test("phrase_search_stored probes the bigram registry, never re-tokenizes corpus") {
+  storeTest("phrase_search_stored probes the bigram registry, never re-tokenizes corpus") {
     val sfDir = "/root/testdata/sf0.001"
     val stored = graft.operators.SearchQueries.defs("phrase_search_stored")
       .build(spark, sfDir)
@@ -492,7 +523,7 @@ class PlanAssertSpec extends SparkFunSuite {
     val docScans = "documents\\.parquet".r.findAllIn(plan).size
     assert(docScans == 1,
       s"stored path must scan documents once (the bounded phrase side only):\n$plan")
-    assert(plan.contains("phrase_bigrams"),
+    assert(scanRoots(stored).exists(_.contains("phrase_bigrams")),
       s"corpus bigrams must come from the persisted registry:\n$plan")
     val live = graft.operators.SearchQueries.defs("phrase_search").build(spark, sfDir)
     val livePlan = live.queryExecution.executedPlan.toString
@@ -692,12 +723,12 @@ class PlanAssertSpec extends SparkFunSuite {
     assert(q.count() > 0)
   }
 
-  test("bool_search_and_stored intersects the postings artifact, never re-tokenizing corpus") {
+  storeTest("bool_search_and_stored intersects the postings artifact, never re-tokenizing corpus") {
     val sfDir = "/root/testdata/sf0.001"
     val q = graft.operators.SearchQueries.defs("bool_search_and_stored")
       .build(spark, sfDir)
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("bm25_postings"),
+    assert(scanRoots(q).exists(_.contains("bm25_postings")),
       s"stored conjunctive search must read the postings store:\n$plan")
     // exactly one documents scan (the bounded query side); the corpus
     // text is served by the artifact
@@ -739,12 +770,12 @@ class PlanAssertSpec extends SparkFunSuite {
     assert(q.count() == 2)
   }
 
-  test("mm_keyframe_pick_stored reads the frame-diff artifact, never re-deriving pairs") {
+  storeTest("mm_keyframe_pick_stored reads the frame-diff artifact, never re-deriving pairs") {
     val sfDir = "/root/testdata/sf0.001"
     val q = graft.operators.Multimodal.defs("mm_keyframe_pick_stored")
       .build(spark, sfDir)
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("frame_diffs"),
+    assert(scanRoots(q).exists(_.contains("frame_diffs")),
       s"stored keyframe pick must read the frame-diff store:\n$plan")
     assert(!plan.toLowerCase.contains("documents.parquet"),
       s"the stored twin must not touch document text:\n$plan")
@@ -768,14 +799,14 @@ class PlanAssertSpec extends SparkFunSuite {
     assert(q.count() > 0)
   }
 
-  test("count_min_serve reads the cell store only — zero corpus bytes in the plan") {
+  storeTest("count_min_serve reads the cell store only — zero corpus bytes in the plan") {
     val sfDir = "/root/testdata/sf0.001"
     graft.operators.SignatureStore.ensureCountMin(spark, sfDir).count() // build once
     val q = graft.operators.SketchQueries.defs("count_min_serve").build(spark, sfDir)
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("documents.parquet"),
       s"serving from the sketch must never scan the corpus:\n$plan")
-    assert(plan.contains("count_min"),
+    assert(scanRoots(q).exists(_.contains("count_min")),
       s"expected the cell-store read in the plan:\n$plan")
     assert(q.count() == 5)
   }
@@ -796,26 +827,26 @@ class PlanAssertSpec extends SparkFunSuite {
       s"expected two broadcast Bloom-word gates:\n$plan")
   }
 
-  test("hll_serve reads the register store only — zero event bytes in the plan") {
+  storeTest("hll_serve reads the register store only — zero event bytes in the plan") {
     val sfDir = "/root/testdata/sf0.001"
     graft.operators.SignatureStore.ensureHll(spark, sfDir).count() // build once
     val q = graft.operators.SketchQueries.defs("hll_serve").build(spark, sfDir)
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("events.parquet"),
       s"serving distinct counts from the registers must never scan events:\n$plan")
-    assert(plan.contains("hll"),
+    assert(scanRoots(q).exists(_.contains("hll")),
       s"expected the register-store read in the plan:\n$plan")
     assert(q.count() == 5)
   }
 
-  test("quantile_bins_serve reads the bin store only — zero corpus bytes in the plan") {
+  storeTest("quantile_bins_serve reads the bin store only — zero corpus bytes in the plan") {
     val sfDir = "/root/testdata/sf0.001"
     graft.operators.SignatureStore.ensureQuantileBins(spark, sfDir).count() // build once
     val q = graft.operators.SketchQueries.defs("quantile_bins_serve").build(spark, sfDir)
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("documents.parquet"),
       s"serving percentiles from the bins must never scan the corpus:\n$plan")
-    assert(plan.contains("quantile_bins"),
+    assert(scanRoots(q).exists(_.contains("quantile_bins")),
       s"expected the bin-store read in the plan:\n$plan")
     assert(q.count() > 0)
   }
@@ -842,7 +873,7 @@ class PlanAssertSpec extends SparkFunSuite {
     }
   }
 
-  test("heavy_hitters_serve reads the MG summary store only — zero corpus bytes in the plan") {
+  storeTest("heavy_hitters_serve reads the MG summary store only — zero corpus bytes in the plan") {
     val sfDir = "/root/testdata/sf0.001"
     val (c, _) = graft.operators.SignatureStore.ensureHeavyHitters(spark, sfDir)
     c.count() // build once
@@ -850,7 +881,7 @@ class PlanAssertSpec extends SparkFunSuite {
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("documents.parquet"),
       s"serving heavy hitters from the summaries must never scan the corpus:\n$plan")
-    assert(plan.contains("mg_counters"),
+    assert(scanRoots(q).exists(_.contains("mg_counters")),
       s"expected the counter-store read in the plan:\n$plan")
     assert(q.count() > 0)
   }

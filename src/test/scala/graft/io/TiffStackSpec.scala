@@ -18,12 +18,12 @@ class TiffStackSpec extends SparkFunSuite {
     val path = s"${tmpDir("tifone")}/${p.name}"
     Fixtures.writeTiff(path, p, idx = 0)
 
-    val info = Tiff.readHeader(path)
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    val info = Tiff.fromBytes(bytes)
     assert(info.width == 10 && info.height == 10)
     assert(info.dtype == "uint16")
     assert(info.stripOffsets.length == 3) // rowsPerStrip=4 over 10 rows
 
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val px = Tiff.decode(bytes, Tiff.fromBytes(bytes)).toSeq
     assert(px.size == 100)
     assert(px.forall { case (az, rg, v) => v == Fixtures.pixelValue(0, az, rg) })

@@ -58,22 +58,26 @@ class RankedResultsStoreSpec extends SparkFunSuite {
   }
 
   test("eval consumers read the face, never the postings store") {
-    for (name <- Seq("search_snippet_window", "search_rank_overlap_rbo",
-        "mine_hard_negatives", "hybrid_search_rrf")) {
-      val df = SearchQueries.defs(name).build(spark, sfDir)
-      val plan = df.queryExecution.sparkPlan
-      val locs = plan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metadata.getOrElse("Location", "")
+    // a store root longer than the 100 characters of a scan location
+    // that Spark prints: the face is found by its scan's root path
+    withStoreRoot(tmpDir("longroot") + "/a-store-root-longer-than-a-printed-scan-location" * 2) {
+      for (name <- Seq("search_snippet_window", "search_rank_overlap_rbo",
+          "mine_hard_negatives", "hybrid_search_rrf")) {
+        val df = SearchQueries.defs(name).build(spark, sfDir)
+        val plan = df.queryExecution.sparkPlan
+        val locs = plan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+            f.relation.location.rootPaths.mkString(",")
+        }
+        // snippet pins its bounded inputs with localCheckpoint (the face
+        // read happens inside the pinned block, invisible to the final
+        // plan); the un-pinned consumers must show the face scan itself
+        if (name != "search_snippet_window")
+          assert(locs.exists(_.contains("bm25_topk")),
+            s"$name must read the ranked-results face:\n$plan")
+        assert(!locs.exists(_.contains("bm25_postings")),
+          s"$name must not re-run retrieval over the postings store:\n$plan")
       }
-      // snippet pins its bounded inputs with localCheckpoint (the face
-      // read happens inside the pinned block, invisible to the final
-      // plan); the un-pinned consumers must show the face scan itself
-      if (name != "search_snippet_window")
-        assert(locs.exists(_.contains("bm25_topk")),
-          s"$name must read the ranked-results face:\n$plan")
-      assert(!locs.exists(_.contains("bm25_postings")),
-        s"$name must not re-run retrieval over the postings store:\n$plan")
     }
   }
 }
